@@ -840,8 +840,7 @@ def main(argv: list[str] | None = None) -> dict:
         from albedo_spark.operators.clustering import (
             assign_clusters,
             integerize_embeddings,
-            seed_centroids,
-            update_centroids,
+            kmeans_fit,
         )
         from albedo_spark.operators.dedup import (
             connected_components,
@@ -855,11 +854,7 @@ def main(argv: list[str] | None = None) -> dict:
             "left_semi",
         )
         vectors = integerize_embeddings(emb).localCheckpoint(eager=False)
-        cents = seed_centroids(vectors, args.semdedup)
-        for _ in range(2):
-            cents = update_centroids(
-                vectors, assign_clusters(vectors, cents, carry_q=True), cents
-            )
+        cents = kmeans_fit(vectors, args.semdedup, 2)
         assign = assign_clusters(vectors, cents).select("vec_id", "cluster_id")
         side = _with_norm(emb, "embedding", "_n").join(assign, "vec_id")
         sa = side.select(

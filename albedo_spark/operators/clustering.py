@@ -17,11 +17,13 @@ space (scale 1000 ≈ 3 decimal digits), which for corpus bucketing is
 noise-level; determinism is what a reproducible data pipeline needs.
 
 Scale posture (100 TB): centroids are model state — k·dim longs — and
-ride a broadcast; each round is ONE pass over the vectors (broadcast
-nested-loop against k rows, dot/diff folds inside whole-stage codegen)
-plus ONE map-side-combinable mean aggregation over (cluster, dim) keys
-(k·dim groups, constant-size reduce state). Rounds are unrolled by the
-caller (same idiom as q121 PageRank); no driver collect anywhere.
+ride a broadcast as ONE packed row per key; each round is ONE map-only
+pass over the vectors (an in-row ``array_min`` argmin over the packed
+row, dot/diff folds inside whole-stage codegen) plus ONE
+map-side-combinable mean aggregation over (key, cluster, dim) groups
+(k·dim per key, constant-size reduce state). ``kmeans_fit`` is the one
+unrolled round loop (same idiom as q121 PageRank); ``key`` trains many
+independent models — e.g. the m PQ subspaces — in the same jobs.
 """
 
 from __future__ import annotations
@@ -48,31 +50,46 @@ def integerize_embeddings(
     )
 
 
-def seed_centroids(vectors: DataFrame, k: int, stride: int = 29) -> DataFrame:
+def _key_suffix(key: str | None) -> list:
+    """Error-message tail naming the offending key value (empty unkeyed)."""
+    if not key:
+        return []
+    return [F.lit(f" ({key}="), F.col(key).cast("string"), F.lit(")")]
+
+
+def seed_centroids(
+    vectors: DataFrame, k: int, stride: int = 29, key: str | None = None
+) -> DataFrame:
     """Deterministic init: the ``k`` smallest vec_ids among
     ``vec_id % stride == 0`` become clusters 0..k-1 (a fixed, engine-
     replayable rule — the k-means++ randomized init trades determinism
     for convergence speed; with unrolled fixed rounds the trade goes the
-    other way). Returns ``(cluster_id, c array<long>)``.
+    other way). Returns ``(cluster_id, c array<long>)``; with ``key``,
+    ``(key, cluster_id, c)`` seeded independently per key value.
 
     Seed-shortfall guard (ADVICE r10 #2): if fewer than ``k`` vec_ids
     satisfy the stride filter (small fixtures, sparse id spaces), the
     trainer used to degrade SILENTLY to a smaller k — both engines
     identically, so the oracle still passed. Now a lazy ``raise_error``
-    over a global count window fires at execution time (no extra driver
-    action — the frame is ≤k rows). The one remaining silent shape is
-    ZERO matching seeds, which yields an empty — visibly broken —
-    centroid frame rather than a plausible smaller k."""
+    over a count window (per key) fires at execution time (no extra
+    driver action — the frame is ≤k rows per key). A key with ZERO
+    matching seeds gets no centroid rows; ``assign_clusters`` then
+    raises on its vectors."""
     from pyspark.sql import Window
 
-    seeds = (
-        vectors.where(F.col("vec_id") % stride == 0)
-        .orderBy("vec_id")
-        .limit(k)
-    )
-    n_match = F.count("*").over(Window.partitionBy())
+    ks = [key] if key else []
+    matched = vectors.where(F.col("vec_id") % stride == 0)
+    if key:
+        rank = F.row_number().over(Window.partitionBy(key).orderBy("vec_id"))
+        seeds = matched.withColumn("_r", rank).where(F.col("_r") <= k).drop("_r")
+    else:
+        seeds = matched.orderBy("vec_id").limit(k)
+    n_match = F.count("*").over(Window.partitionBy(*ks))
     return seeds.select(
-        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cluster_id"),
+        *ks,
+        (
+            F.row_number().over(Window.partitionBy(*ks).orderBy("vec_id")) - 1
+        ).alias("cluster_id"),
         F.when(
             n_match < k,
             F.raise_error(
@@ -83,6 +100,7 @@ def seed_centroids(vectors: DataFrame, k: int, stride: int = 29) -> DataFrame:
                         f" seed(s) satisfy vec_id % {stride} == 0 — need "
                         f"k={k}; lower stride or k"
                     ),
+                    *_key_suffix(key),
                 )
             ),
         )
@@ -92,14 +110,17 @@ def seed_centroids(vectors: DataFrame, k: int, stride: int = 29) -> DataFrame:
 
 
 def assign_clusters(
-    vectors: DataFrame, centroids: DataFrame, carry_q: bool = False
+    vectors: DataFrame,
+    centroids: DataFrame,
+    carry_q: bool = False,
+    key: str | None = None,
 ) -> DataFrame:
     """Nearest centroid per vector under squared L2 (BIGINT-exact):
-    broadcast the k-row centroid frame, fold ``Σ(q_d − c_d)²`` JVM-side
-    (``zip_with`` over two plain column arrays — no computed-array HOF
-    capture), pick ``min(struct(dist, cluster_id))`` so ties break to
-    the smallest cluster id. One wide pass, no shuffle on the vectors
-    beyond the final per-vector min (map-side combinable).
+    fold ``Σ(q_d − c_d)²`` JVM-side (``zip_with`` over two plain column
+    arrays — no computed-array HOF capture) and take the smallest
+    (dist, cluster_id), so ties break to the smallest cluster id. With
+    ``key``, a vector only competes for its own key's centroids and the
+    key column is carried through.
 
     ``carry_q=True`` additionally carries the vector itself through the
     per-vector argmin: the assignment frame then already holds
@@ -108,22 +129,24 @@ def assign_clusters(
     consumer) disappears (r16, guide §2.4). Same assignment, same
     integers.
 
-    MAP-ONLY argmin (r16, guide §2.4 "remove shuffles outright"): the k
-    centroids are folded into ONE broadcast row (``collect_list`` of
-    (cluster_id, c) structs) and the per-vector argmin is
+    MAP-ONLY argmin (r16, guide §2.4 "remove shuffles outright"): the
+    centroids are folded into ONE broadcast row per key (``collect_list``
+    of (cluster_id, c) structs) and the per-vector argmin is
     ``array_min(transform(...))`` over that array — a pure projection,
-    so the assignment pass has NO exchange and NO aggregate at all (the
-    old groupBy argmin shuffled every vector per round and planned a
-    SortAggregate, because min(struct)+first(array) buffers are not
-    hash-aggregable). ``array_min`` over (dist, cluster_id) structs is
-    the same total order as ``min(struct(dist, cluster_id))`` and is
-    order-independent even under ties, so the collect_list's
-    nondeterministic array order cannot change the result.
+    so the assignment pass has NO exchange and NO aggregate at all.
+    Unkeyed, the row rides a broadcast nested-loop crossJoin; keyed, a
+    broadcast hash join on the key. ``array_min`` over (dist,
+    cluster_id) structs is order-independent even under ties, so the
+    collect_list's nondeterministic array order cannot change the
+    result.
 
-    Ragged-vector guard (ADVICE r10 #2): ``zip_with`` silently truncates
-    to the SHORTER array, so a ragged vector (63-dim plant in a 64-dim
-    corpus) used to produce a plausible-but-wrong distance; now it
-    raises at execution time via a lazy ``raise_error`` branch."""
+    Loud guards, both lazy ``raise_error`` branches at execution time:
+    a ragged vector (``zip_with`` silently truncates to the SHORTER
+    array, giving a plausible-but-wrong distance — ADVICE r10 #2), and a
+    vector with no centroid to compete for, i.e. an empty centroid frame
+    or a key without centroids (else a NULL cluster_id, or keyed, a
+    silently dropped vector — ADVICE r16 #1)."""
+    ks = [key] if key else []
 
     def _dist(cc):
         return F.when(
@@ -144,64 +167,111 @@ def assign_clusters(
             )
         )
 
-    packed = centroids.agg(
-        F.collect_list(F.struct("cluster_id", "c")).alias("_cents")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_cents"),
-            lambda cc: F.struct(
-                _dist(cc).alias("dist"), cc["cluster_id"].alias("cluster_id")
-            ),
+    packed = F.broadcast(
+        centroids.groupBy(*ks).agg(
+            F.collect_list(F.struct("cluster_id", "c")).alias("_cents")
         )
+    )
+    best = F.when(
+        F.isnull("_cents") | (F.size("_cents") == 0),
+        F.raise_error(
+            F.concat(
+                F.lit("assign_clusters: no centroid for vec_id "),
+                F.col("vec_id").cast("string"),
+                *_key_suffix(key),
+            )
+        ),
+    ).otherwise(
+        F.array_min(
+            F.transform(
+                F.col("_cents"),
+                lambda cc: F.struct(
+                    _dist(cc).alias("dist"), cc["cluster_id"].alias("cluster_id")
+                ),
+            )
+        )
+    )
+    joined = (
+        vectors.join(packed, key, "left") if key else vectors.crossJoin(packed)
     )
     # Two-step select: ``best`` is consumed twice (cluster_id, dist) —
     # behind the alias the argmin runs once per row (CollapseProject
     # keeps a non-cheap expression referenced twice un-inlined).
-    return (
-        vectors.crossJoin(F.broadcast(packed))
-        .select("vec_id", *(["q"] if carry_q else []), best.alias("_m"))
-        .select(
-            "vec_id",
-            F.col("_m.cluster_id").alias("cluster_id"),
-            F.col("_m.dist").alias("dist"),
-            *(["q"] if carry_q else []),
-        )
+    carried = ["q"] if carry_q else []
+    return joined.select(*ks, "vec_id", *carried, best.alias("_m")).select(
+        *ks,
+        "vec_id",
+        F.col("_m.cluster_id").alias("cluster_id"),
+        F.col("_m.dist").alias("dist"),
+        *carried,
     )
 
 
 def update_centroids(
-    vectors: DataFrame, assignment: DataFrame, centroids: DataFrame
+    vectors: DataFrame,
+    assignment: DataFrame,
+    centroids: DataFrame,
+    key: str | None = None,
 ) -> DataFrame:
     """Integer-mean centroid update: posexplode members to
-    ``(cluster, dim, val)``, per-dim ``sum(val) div count(*)`` (truncates
-    toward zero in BOTH engines — exact), rebuild arrays with an
-    ``array_sort`` on (dim, mean) structs. A cluster that lost every
-    member KEEPS its previous centroid (left-join + coalesce) — the
-    deterministic empty-cluster contract.
+    ``(key, cluster, dim, val)``, per-dim ``sum(val) div count(*)``
+    (truncates toward zero in BOTH engines — exact), rebuild arrays with
+    an ``array_sort`` on (dim, mean) structs. A cluster that lost every
+    member KEEPS its previous centroid (left-join on (key, cluster) +
+    coalesce) — the deterministic empty-cluster contract.
 
     An assignment built with ``assign_clusters(carry_q=True)`` already
     carries the vector — the re-join (a full vector shuffle per round)
     is skipped in that case (r16); same members, same means."""
+    ks = [key] if key else []
     if "q" in assignment.columns:
-        members = assignment.select("vec_id", "cluster_id", "q")
+        members = assignment.select(*ks, "vec_id", "cluster_id", "q")
     else:
-        members = assignment.select("vec_id", "cluster_id").join(
-            vectors, "vec_id"
+        members = assignment.select(*ks, "vec_id", "cluster_id").join(
+            vectors, [*ks, "vec_id"]
         )
     means = (
-        members.select("cluster_id", F.posexplode("q").alias("d", "val"))
-        .groupBy("cluster_id", "d")
+        members.select(*ks, "cluster_id", F.posexplode("q").alias("d", "val"))
+        .groupBy(*ks, "cluster_id", "d")
         .agg(F.expr("sum(val) div count(*)").alias("m"))
     )
-    rebuilt = means.groupBy("cluster_id").agg(
+    rebuilt = means.groupBy(*ks, "cluster_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
         ).alias("c_new")
     )
-    return centroids.join(rebuilt, "cluster_id", "left").select(
-        "cluster_id", F.coalesce("c_new", "c").alias("c")
+    return centroids.join(rebuilt, [*ks, "cluster_id"], "left").select(
+        *ks, "cluster_id", F.coalesce("c_new", "c").alias("c")
     )
+
+
+def kmeans_fit(
+    vectors: DataFrame,
+    k: int,
+    rounds: int,
+    stride: int = 29,
+    key: str | None = None,
+) -> DataFrame:
+    """The package's one k-means round loop: seeded init, then
+    ``rounds`` × (``assign_clusters(carry_q=True)`` → ``update_centroids``)
+    over an integerized ``(vec_id, q)`` frame. Returns the final
+    ``(cluster_id, c)`` centroid frame, or ``(key, cluster_id, c)`` with
+    ``key``: one independent model per key value, trained in the SAME
+    jobs and identical to one fit per key slice (a vector only meets its
+    own key's centroids; means group by key).
+
+    Lazy per-round checkpoint (r16): each round's centroid frame is
+    referenced TWICE by the next (the assignment's broadcast build and
+    the update's left join), so un-truncated lineage replays round t-1
+    twice inside round t — a 2^rounds corpus-pass blowup. The boundary
+    makes it one vector pass per round. ``vectors`` is re-scanned every
+    round: callers pass a checkpointed frame."""
+    cents = seed_centroids(vectors, k, stride=stride, key=key)
+    for _ in range(rounds):
+        assignment = assign_clusters(vectors, cents, carry_q=True, key=key)
+        cents = update_centroids(vectors, assignment, cents, key=key)
+        cents = cents.localCheckpoint(eager=False)
+    return cents
 
 
 def kmeans_cluster_stats(
@@ -218,21 +288,11 @@ def kmeans_cluster_stats(
     Σ min-dist — the convergence scalar a pipeline monitors; min_vec_id
     is a cheap membership witness so the oracle hash moves if ANY vector
     switches clusters, not only when counts change."""
-    # Lazy checkpoints (r16): the vectors frame is re-scanned once per
-    # round, and each round's centroid frame is referenced TWICE by the
-    # next (the assignment's broadcast build and the update's left
-    # join), so un-truncated lineage replays round t-1 twice inside
-    # round t — a 2^rounds corpus-pass blowup. The per-round boundary
-    # makes it one pass per round (the _coarse_quantizer discipline).
+    # Lazy checkpoint: kmeans_fit re-scans the vectors once per round.
     vectors = integerize_embeddings(emb, scale=scale).localCheckpoint(
         eager=False
     )
-    cents = seed_centroids(vectors, k, stride=stride)
-    for _ in range(rounds):
-        assignment = assign_clusters(vectors, cents, carry_q=True)
-        cents = update_centroids(vectors, assignment, cents).localCheckpoint(
-            eager=False
-        )
+    cents = kmeans_fit(vectors, k, rounds, stride=stride)
     final = assign_clusters(vectors, cents)
     stats = final.groupBy("cluster_id").agg(
         F.count("*").alias("n"),

@@ -1111,25 +1111,14 @@ def semantic_dedup(
     from albedo_spark.operators.clustering import (
         assign_clusters,
         integerize_embeddings,
-        seed_centroids,
-        update_centroids,
+        kmeans_fit,
     )
 
     emb = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     vectors = integerize_embeddings(emb, scale=kmeans_scale).localCheckpoint(
         eager=False
     )
-    cents = seed_centroids(vectors, k, stride=stride)
-    for _ in range(rounds):
-        assignment = assign_clusters(vectors, cents, carry_q=True)
-        # Lazy per-round checkpoint (r16): each round's centroid frame is
-        # referenced twice by the next round (assignment broadcast build
-        # + update left join), so without a boundary round t replays
-        # round t-1 twice — a 2^rounds corpus-pass blowup (the
-        # _coarse_quantizer / kmeans_cluster_stats discipline).
-        cents = update_centroids(vectors, assignment, cents).localCheckpoint(
-            eager=False
-        )
+    cents = kmeans_fit(vectors, k, rounds, stride=stride)
     # Consumed twice (the scoring side AND the final attribution join);
     # without a boundary the whole unrolled k-means chain executes per
     # consumer (broadcast builds never share work).

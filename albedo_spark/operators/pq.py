@@ -35,7 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from albedo_spark.operators.clustering import integerize_embeddings
+from albedo_spark.operators.clustering import (
+    assign_clusters,
+    integerize_embeddings,
+    kmeans_fit,
+)
 from albedo_spark.operators.topk import top_k_per_group
 
 
@@ -87,43 +91,6 @@ def _subvectors(vectors: DataFrame, m: int, subdim: int) -> DataFrame:
     )
     return vectors.select(
         "vec_id", F.posexplode(slices).alias("s", "sub")
-    )
-
-
-def pq_all_dists(
-    emb: DataFrame,
-    codebooks: list[tuple[int, int, list[int]]],
-    m: int = 4,
-    subdim: int = 16,
-    scale: int = 1000,
-) -> DataFrame:
-    """``(vec_id, s, code, dist)`` — squared-L2 of every vector subspace
-    against every codebook centroid (|V|·m·ncodes rows). This one frame
-    is BOTH halves of PQ: per-(vec_id, s) argmin is the encoder, and the
-    query-id slice of it is the ADC distance table."""
-    spark = emb.sparkSession
-    cb = spark.createDataFrame(
-        codebooks, "s int, code int, c array<long>"
-    )
-    vectors = integerize_embeddings(emb, scale=scale)
-    sub = _subvectors(vectors, m, subdim)
-    dist = F.aggregate(
-        F.zip_with("sub", "c", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return sub.join(F.broadcast(cb), "s").select(
-        "vec_id", "s", "code", dist.alias("dist")
-    )
-
-
-def pq_encode(dists: DataFrame) -> DataFrame:
-    """``(vec_id, s, code)`` — nearest centroid per subspace, ties to the
-    smallest code id (min over (dist, code) structs)."""
-    return (
-        dists.groupBy("vec_id", "s")
-        .agg(F.min(F.struct("dist", "code")).alias("mm"))
-        .select("vec_id", "s", F.col("mm.code").alias("code"))
     )
 
 
@@ -240,49 +207,26 @@ def _train_subspace_codebooks(
 ) -> list[tuple[int, int, list[int]]]:
     """Per-subspace k-means over an integerized ``(vec_id, q)`` frame —
     the shared trainer core of ``train_codebooks`` (raw vectors) and
-    ``train_residual_codebooks`` (IVF residuals)."""
-    from albedo_spark.operators.clustering import (
-        assign_clusters,
-        seed_centroids,
-        update_centroids,
+    ``train_residual_codebooks`` (IVF residuals). All m subspaces train
+    as ONE ``key="s"`` fit (one job chain, one collect): the seeded init
+    picks the same vec_ids in every subspace and each subvector only
+    meets its own subspace's centroids, so the codebooks are identical
+    to m separate fits — the DuckDB oracle's s-keyed CTE chain
+    (``queries._subspace_kmeans_cte_chain``) is the same formulation.
+
+    Lineage discipline: the subspace frame is re-scanned every round;
+    without the checkpoint each scan would re-execute the ENTIRE
+    upstream (for residual training: the whole coarse k-means)."""
+    sub = (
+        _subvectors(vectors, m, subdim)
+        .select("vec_id", "s", F.col("sub").alias("q"))
+        .localCheckpoint(eager=False)
     )
-
-    # Lineage discipline: the subspace frame is re-scanned ncodes·rounds
-    # times per subspace, and per-round centroids are re-derived by every
-    # later round — without truncation the plan re-executes the ENTIRE
-    # upstream (for residual training: the whole coarse k-means) once per
-    # re-reference, which is quadratic in rounds and was measured as a
-    # stall at kc=16/ncodes=64. localCheckpoint caps both. EAGER here:
-    # the subspace fits below run from a thread pool, and one shared
-    # materialization beats m threads racing the first lazy fill.
-    sub = _subvectors(vectors, m, subdim).localCheckpoint()
-
-    def _train_one(s: int) -> list[tuple[int, int, list[int]]]:
-        vs = sub.where(F.col("s") == s).select(
-            "vec_id", F.col("sub").alias("q")
-        )
-        cents = seed_centroids(vs, ncodes, stride=stride)
-        for _ in range(rounds):
-            assignment = assign_clusters(vs, cents, carry_q=True)
-            cents = update_centroids(vs, assignment, cents).localCheckpoint(
-                eager=False
-            )
-        return [
-            (s, int(r.cluster_id), [int(x) for x in r.c])
-            for r in sorted(cents.collect(), key=lambda r: r.cluster_id)
-        ]
-
-    # The m subspace fits are INDEPENDENT job chains over the shared
-    # materialized frame — submit them from a small thread pool so one
-    # fit's straggler tail back-fills with the next fit's jobs (guide
-    # §2.6, the r15 ranker-fit pattern). pool.map preserves subspace
-    # order, so the returned codebook list is byte-identical to the
-    # sequential loop's.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, m)) as pool:
-        results = list(pool.map(_train_one, range(m)))
-    return [t for r in results for t in r]
+    cents = kmeans_fit(sub, ncodes, rounds, stride=stride, key="s")
+    return [
+        (int(r.s), int(r.cluster_id), [int(x) for x in r.c])
+        for r in sorted(cents.collect(), key=lambda r: (r.s, r.cluster_id))
+    ]
 
 
 def train_codebooks(
@@ -305,27 +249,6 @@ def train_codebooks(
     return _train_subspace_codebooks(vectors, m, ncodes, subdim, rounds, stride)
 
 
-def _coarse_quantizer(vectors: DataFrame, kc: int, rounds: int, stride: int):
-    """The IVF coarse k-means (cluster_id, c) — factored out so
-    ``train_residual_codebooks`` and ``ivf_pq_topk`` derive the
-    IDENTICAL quantizer from identical (kc, rounds, stride): the
-    integer-determinism contract is what makes training and serving
-    agree without shipping the centroids between them."""
-    from albedo_spark.operators.clustering import (
-        assign_clusters,
-        seed_centroids,
-        update_centroids,
-    )
-
-    cents = seed_centroids(vectors, kc, stride=stride)
-    for _ in range(rounds):
-        assignment = assign_clusters(vectors, cents, carry_q=True)
-        cents = update_centroids(vectors, assignment, cents).localCheckpoint(
-            eager=False
-        )
-    return cents
-
-
 def train_residual_codebooks(
     emb: DataFrame,
     kc: int = 8,
@@ -346,14 +269,10 @@ def train_residual_codebooks(
     (kc, coarse_rounds→rounds, stride, scale): the integer coarse
     quantizer is bit-replayable, so training and serving rebuild the
     identical cells without shipping centroids."""
-    from albedo_spark.operators.clustering import assign_clusters
-
     vectors = integerize_embeddings(emb, scale=scale).localCheckpoint(
         eager=False
     )
-    cents = _coarse_quantizer(vectors, kc, coarse_rounds, stride).localCheckpoint(
-        eager=False
-    )
+    cents = kmeans_fit(vectors, kc, coarse_rounds, stride=stride)
     # carry_q: the assignment row already holds the vector, so the
     # residual projection needs only the broadcast centroid join — the
     # assignment ⋈ vectors re-shuffle is gone (r16, guide §2.4).
@@ -383,10 +302,9 @@ def encode_residual_codes(
     code)`` — the m-rows-per-vector code table, the at-rest shape of a
     compressed vector store (m small ints instead of dim floats).
     ``cents`` and ``cb`` are broadcast model state; one vector pass."""
-    from albedo_spark.operators.clustering import assign_clusters
-
-    # carry_q folds the assignment ⋈ vectors re-join into the argmin's
-    # own exchange (r16): the encode pass touches the corpus once.
+    # carry_q: the assignment row already holds the vector, so there is
+    # no assignment ⋈ vectors re-join — the encode pass touches the
+    # corpus once.
     assign = assign_clusters(vectors, cents, carry_q=True)
     resid = (
         assign.join(F.broadcast(cents), "cluster_id")
@@ -443,7 +361,8 @@ def ivf_pq_topk(
     so the ENTIRE pipeline — train, assign, encode, probe, ADC — is
     hash-exact (q151). Plan: centroids and codebooks are broadcast model
     state; the corpus makes ONE assignment pass and ONE encode pass
-    (both codegen folds + map-side-combinable argmins); the query table
+    (both codegen folds + in-row ``array_min`` argmins over a packed
+    broadcast row — map-only, no exchange); the query table
     is |Q|·nprobe·m·ncodes rows on a broadcast; the scoring join touches
     only code rows whose cell is probed — the inverted-list pruning,
     expressed relationally as the (cell, s, code) equi-join.
@@ -465,8 +384,7 @@ def ivf_pq_topk(
             eager=False
         )
     )
-    cents = _coarse_quantizer(vectors, kc, rounds, stride)
-    cents = cents.localCheckpoint(eager=False)  # consumers: assign, resid, probe
+    cents = kmeans_fit(vectors, kc, rounds, stride=stride)
 
     codes = encode_residual_codes(vectors, cents, cb, m, subdim)
     qv = vectors.where(query_pred(F.col("vec_id"))).select(

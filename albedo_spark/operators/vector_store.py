@@ -467,9 +467,11 @@ def build_pq_store(
     which is exactly what keeps the partition path result-identical to
     the broadcast allow path (pinned in tests)."""
     from albedo_spark.io import write_bucketed
-    from albedo_spark.operators.clustering import integerize_embeddings
+    from albedo_spark.operators.clustering import (
+        integerize_embeddings,
+        kmeans_fit,
+    )
     from albedo_spark.operators.pq import (
-        _coarse_quantizer,
         encode_residual_codes,
         formula_codebooks,
         train_residual_codebooks,
@@ -489,7 +491,7 @@ def build_pq_store(
     )
     from albedo_spark.io import drop_orphan_table_location
 
-    cents = _coarse_quantizer(vectors, kc, rounds, stride)
+    cents = kmeans_fit(vectors, kc, rounds, stride=stride)
     for suffix, frame in (("_cents", cents), ("_cb", cb)):
         spark.sql(f"DROP TABLE IF EXISTS `{table}{suffix}`")
         drop_orphan_table_location(spark, table + suffix)

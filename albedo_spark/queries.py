@@ -8212,9 +8212,10 @@ def q149_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a fixed seeded init (k smallest vec_ids ≡ 0 mod 29), then the
     final assignment's per-cluster (n, inertia, min_vec_id) — the
     membership witness makes the hash move if ANY vector switches
-    cluster. Plan per round: broadcast the k×64-long centroid frame,
-    ONE vector pass (zip_with/aggregate squared-L2 inside codegen,
-    min(struct) per vector), ONE (cluster, dim)-keyed mean agg with
+    cluster. Plan per round (clustering.kmeans_fit): broadcast the k
+    centroids packed into one row, ONE map-only vector pass
+    (zip_with/aggregate squared-L2 inside codegen, in-row array_min
+    argmin per vector), ONE (cluster, dim)-keyed mean agg with
     k·dim reduce groups — at 100 TB the vectors never shuffle; only
     constant-size model state moves. The reference has no clustering
     surface (extension, like the sketch family)."""
@@ -8854,9 +8855,8 @@ def _subspace_kmeans_cte_chain(
     share rounds). ``rsub`` is the name of a ``(vec_id, s, sd, val)``
     TRAINING-residual CTE. Emits seeds → cb0 → per-round (assign by
     (dist, code) argmin / per-(s, code, sd) ``sum // count`` mean /
-    carry-empty-codes) — the exact integer semantics of
-    clustering.seed_centroids/assign_clusters/update_centroids applied
-    per subspace. Returns ``(chain_sql_fragment, final_cb_cte)`` where
+    carry-empty-codes) — the exact integer semantics of the s-keyed
+    ``clustering.kmeans_fit`` the Spark trainer runs. Returns ``(chain_sql_fragment, final_cb_cte)`` where
     the final CTE has columns (s, code, sd, cval). MATERIALIZED on the
     reused CTEs per the q155 DuckDB-inlining lesson."""
     parts = [

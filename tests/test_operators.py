@@ -693,10 +693,12 @@ def test_kmeans_deterministic_and_converging(spark):
     """clustering.py semantics: (a) well-separated blobs are recovered
     exactly; (b) the result is partitioning-invariant (1 vs 8
     partitions — integer math has no reduction-order term); (c) an
-    empty cluster keeps its previous centroid instead of NaN-ing."""
+    empty cluster keeps its previous centroid instead of NaN-ing; (d) a
+    keyed fit equals one unkeyed fit per key slice, row for row."""
     from albedo_spark.operators.clustering import (
         assign_clusters,
         kmeans_cluster_stats,
+        kmeans_fit,
         seed_centroids,
         update_centroids,
     )
@@ -733,6 +735,33 @@ def test_kmeans_deterministic_and_converging(spark):
     a = assign_clusters(vecs, cents)
     c2 = update_centroids(vecs, a, cents)
     assert c2.count() == 2  # no cluster row lost, empty or not
+
+    # keyed fit: three independent models in one job chain. Each key
+    # gets a differently shifted copy of the blobs, so a vector that met
+    # another key's centroids would change the result.
+    base = vecs.collect()
+    keyed = spark.createDataFrame(
+        [
+            (s, r.vec_id, [x * (s + 1) + 7 * s for x in r.q])
+            for s in range(3)
+            for r in base
+        ],
+        "s int, vec_id long, q array<long>",
+    )
+    got = sorted(
+        tuple(r)
+        for r in kmeans_fit(keyed, 3, 2, stride=2, key="s")
+        .select("s", "cluster_id", "c")
+        .collect()
+    )
+    want = sorted(
+        (s, *r)
+        for s in range(3)
+        for r in kmeans_fit(
+            keyed.where(F.col("s") == s).select("vec_id", "q"), 3, 2, stride=2
+        ).collect()
+    )
+    assert len(got) == 9 and got == want
 
 
 def test_kneser_ney_bigrams_hand_example(spark):

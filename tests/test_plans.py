@@ -391,3 +391,31 @@ def test_q190_anchor_corpus_plan(spark):
     assert "CartesianProduct" not in plan
     assert plan.count("Window [") == 2, plan
     assert plan.count("WindowGroupLimit") == 4, plan  # partial+final ×2
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q149_kmeans_clusters",
+        "q151_ivf_pq_ann",
+        "q158_pq_store_trained",
+        "q171_semantic_dedup",
+    ],
+)
+def test_kmeans_family_matches_oracle(spark, name):
+    """Oracle slice for the k-means family (trainer, IVF-PQ, trained-
+    codebook store, SemDeDup buckets — every caller of
+    ``clustering.kmeans_fit``): Spark result vs the DuckDB ORACLE_SQL,
+    compared by the correctness gate's order-insensitive table hash."""
+    import duckdb
+
+    from albedo_spark.queries import ORACLE_SQL
+    from tools.check_correctness import table_hash
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'")
+    sdf = QUERIES[name](spark, SF)
+    rel = con.sql(ORACLE_SQL[name])
+    assert sorted(sdf.columns) == sorted(rel.columns)
+    got = table_hash([tuple(r) for r in sdf.collect()], sdf.columns)
+    assert got == table_hash(rel.fetchall(), rel.columns)

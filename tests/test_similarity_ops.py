@@ -659,20 +659,26 @@ def test_quantized_vector_store_matches_float_store(spark):
 
 
 def test_pq_encode_hand_example(spark):
-    """Encoder picks the nearest centroid per subspace, ties to the
-    smallest code id."""
-    from albedo_spark.operators.pq import pq_all_dists, pq_encode
+    """The shipped encoder (``encode_residual_codes``) picks the nearest
+    centroid per subspace, ties to the smallest code id. One all-zero
+    coarse cell makes every residual equal to its vector."""
+    from albedo_spark.operators.clustering import integerize_embeddings
+    from albedo_spark.operators.pq import encode_residual_codes
 
     emb = spark.createDataFrame(
         [(0, [0.0, 0.0, 1.0, 1.0]), (1, [0.01, 0.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
     # scale 1: vec0 = [0,0 | 1,1], vec1 = [0,0 | 0,0]
-    cb = [(0, 0, [0, 0]), (0, 1, [0, 0]), (1, 0, [1, 1]), (1, 1, [0, 0])]
-    codes = {
-        (r.vec_id, r.s): r.code
-        for r in pq_encode(pq_all_dists(emb, cb, m=2, subdim=2, scale=1)).collect()
-    }
+    vecs = integerize_embeddings(emb, scale=1)
+    cents = spark.createDataFrame([(0, [0, 0, 0, 0])], "cluster_id int, c array<long>")
+    cb = spark.createDataFrame(
+        [(0, 0, [0, 0]), (0, 1, [0, 0]), (1, 0, [1, 1]), (1, 1, [0, 0])],
+        "s int, code int, c array<long>",
+    )
+    rows = encode_residual_codes(vecs, cents, cb, m=2, subdim=2).collect()
+    assert {r.cluster_id for r in rows} == {0}
+    codes = {(r.vec_id, r.s): r.code for r in rows}
     # subspace 0: both centroids identical → tie → code 0 for both vecs
     # subspace 1: vec0 nearest (1,1)=code0, vec1 nearest (0,0)=code1
     assert codes == {(0, 0): 0, (0, 1): 0, (1, 0): 0, (1, 1): 1}
@@ -786,7 +792,10 @@ def test_ivf_pq_probe_contract_and_determinism(spark):
 def test_dimension_guards_raise_loudly(spark):
     """ADVICE r10 #2: a 63-dim plant in a 64-dim corpus (pq) / a ragged
     vector or a seed shortfall (clustering) must raise at execution time
-    instead of silently NULL-padding / degrading to a smaller k."""
+    instead of silently NULL-padding / degrading to a smaller k.
+    ADVICE r16 #1: a vector with no centroid to compete for (empty
+    centroid frame; a key without centroids) raises instead of yielding
+    NULL-cluster rows or silently dropping the key's vectors."""
     import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
@@ -817,6 +826,23 @@ def test_dimension_guards_raise_loudly(spark):
     )
     with pytest.raises(errs, match="only 1 seed"):
         seed_centroids(integerize_embeddings(emb2), 3).collect()
+
+    # empty centroid frame -> assign_clusters raises (was NULL rows)
+    v2 = integerize_embeddings(emb2)
+    none = spark.createDataFrame([], "cluster_id int, c array<long>")
+    with pytest.raises(errs, match="no centroid for vec_id"):
+        assign_clusters(v2, none).collect()
+
+    # keyed: key 1 has no centroids -> raises (was a silent drop)
+    kv = v2.select(F.lit(0).alias("s"), "vec_id", "q").unionByName(
+        v2.select(F.lit(1).alias("s"), "vec_id", "q")
+    )
+    kc = seed_centroids(kv, 1, key="s").where("s = 0")
+    with pytest.raises(errs, match=r"no centroid for vec_id \d+ \(s=1\)"):
+        assign_clusters(kv, kc, key="s").collect()
+    # per-key shortfall: each key has ONE stride-29 seed, k=2 needs two
+    with pytest.raises(errs, match=r"only 1 seed.*\(s=[01]\)"):
+        seed_centroids(kv, 2, key="s").collect()
 
     # 63-dim plant -> pq raises
     emb3 = spark.createDataFrame(
@@ -1184,14 +1210,14 @@ def test_ivf_pq_recall_floor_on_structured_fixture(spark):
     (seeded fixture, integer k-means, integer ADC): measured 0.51 vs
     0.18 at this budget (m=4, ncodes=16, kc=8, nprobe=4); the full curve
     up to 0.81 at the literature's m=8/ncodes=256 budget lives in
-    tools/scale_pq.py."""
+    tools/scale_pq.py (fixture: tests/pq_fixtures.py)."""
     from albedo_spark.operators.pq import (
         formula_codebooks,
         ivf_pq_topk,
         pq_adc_topk,
         train_residual_codebooks,
     )
-    from tools.scale_pq import exact_topk, make_lowrank, recall
+    from tests.pq_fixtures import exact_topk, make_lowrank, recall
 
     emb = make_lowrank(spark, 1200, 3).localCheckpoint()
     pred = lambda c: c % 60 == 0  # noqa: E731
@@ -1234,7 +1260,7 @@ def test_pq_store_trained_recall_floor_on_manifold(spark):
         build_pq_store,
         pq_store_topk,
     )
-    from tools.scale_pq import exact_topk, make_lowrank, recall
+    from tests.pq_fixtures import exact_topk, make_lowrank, recall
 
     emb = make_lowrank(spark, 1200, 3).localCheckpoint()
     pred = lambda c: c % 60 == 0  # noqa: E731
@@ -1269,7 +1295,7 @@ def test_ivf_pq_rerank_full_shortlist_equals_bruteforce(spark):
     the rerank stage IS brute-force exact integer L2 — the composite
     must equal the ground-truth ranking exactly, distances included."""
     from albedo_spark.operators.pq import ivf_pq_rerank_topk
-    from tools.scale_pq import exact_topk, make_lowrank
+    from tests.pq_fixtures import exact_topk, make_lowrank
 
     emb = make_lowrank(spark, 400, 3).localCheckpoint()
     pred = lambda c: c % 40 == 0  # noqa: E731
@@ -1293,7 +1319,7 @@ def test_ivf_pq_rerank_improves_adc_recall(spark):
         ivf_pq_topk,
         train_residual_codebooks,
     )
-    from tools.scale_pq import exact_topk, make_lowrank, recall
+    from tests.pq_fixtures import exact_topk, make_lowrank, recall
 
     emb = make_lowrank(spark, 1200, 3).localCheckpoint()
     pred = lambda c: c % 60 == 0  # noqa: E731

@@ -63,8 +63,7 @@ def main() -> None:
     from albedo_spark.operators.clustering import (
         assign_clusters,
         integerize_embeddings,
-        seed_centroids,
-        update_centroids,
+        kmeans_fit,
     )
     from albedo_spark.operators.dedup import semantic_dedup
     from albedo_spark.session import get_spark
@@ -78,12 +77,10 @@ def main() -> None:
         for k in (1, 8, 32):
             # candidate-pair count from the final assignment (the same
             # trainer semantic_dedup runs): sum of C(n_cell, 2)
-            vectors = integerize_embeddings(emb, scale=1000)
-            cents = seed_centroids(vectors, k, stride=1)
-            for _ in range(2):
-                cents = update_centroids(
-                    vectors, assign_clusters(vectors, cents), cents
-                )
+            vectors = integerize_embeddings(emb, scale=1000).localCheckpoint(
+                eager=False
+            )
+            cents = kmeans_fit(vectors, k, 2, stride=1)
             cand = (
                 assign_clusters(vectors, cents)
                 .groupBy("cluster_id")
