@@ -17,7 +17,8 @@ import datetime as _dt
 import os
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 #: Process-start epoch-ms — the freshness guard of
@@ -599,6 +600,52 @@ def append_bucket_count(
     return nb
 
 
+#: Single-child physical operators whose RDD keeps exactly its child's
+#: partition count (per-partition work, no exchange of their own).
+#: Aggregates are absent on purpose: a global aggregate over zero
+#: partitions emits one.
+_NARROW_NODES = frozenset({
+    "ProjectExec", "FilterExec", "ColumnarToRowExec", "InputAdapter",
+    "WholeStageCodegenExec", "GenerateExec", "SortExec", "WindowExec",
+})
+
+
+def _plan_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df`` read off its prepared physical plan,
+    launching no job; ``None`` when the plan cannot tell it.
+
+    The count is fixed by the leaf at the end of the streamed path:
+    narrow nodes pass it through and a broadcast join streams its
+    non-build side. Under AQE the walk starts at the prepared plan
+    (``executedPlan()`` of an unexecuted ``AdaptiveSparkPlanExec`` —
+    exchanges inserted, no stage run); ``inputPlan()`` would be wrong,
+    it predates the exchanges aggregates and windows require. A shuffle,
+    a cached relation or any node not listed here returns ``None``."""
+    node = df._jdf.queryExecution().executedPlan()
+    while True:
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            node = node.executedPlan()
+        elif kind == "ResultQueryStageExec":  # root of an executed AQE plan
+            node = node.plan()
+        elif kind in _NARROW_NODES:
+            node = node.child()
+        elif kind == "BroadcastHashJoinExec" or (
+            kind == "BroadcastNestedLoopJoinExec"
+            and node.joinType().toString() in ("Inner", "Cross")
+        ):
+            build_right = node.buildSide().toString() == "BuildRight"
+            node = node.left() if build_right else node.right()
+        elif kind == "FileSourceScanExec":
+            return node.inputRDD().getNumPartitions()
+        elif kind == "RDDScanExec":
+            return node.rdd().getNumPartitions()
+        elif kind == "LocalTableScanExec":
+            return node.execute().getNumPartitions()
+        else:
+            return None
+
+
 def widen(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition IFF the plan currently has fewer partitions
     than the session's parallelism.
@@ -608,20 +655,26 @@ def widen(df: DataFrame, partitions: int | None = None) -> DataFrame:
     core; a bounded repartition fixes that for pennies. On wide production
     scans (many splits) this is a no-op — no shuffle is added.
 
-    Guard cost (VERDICT r15 #6): the exact check builds the physical RDD,
-    which on file sources forces split enumeration on the driver once per
-    call site — repeated metadata work at 100 TB purely to decide a no-op.
-    A static proof runs first: when the frame is a plain
-    scan/project/filter chain (no Join/Union/Aggregate/Generate, whose
-    size estimates can be wildly inflated) and the optimizer's
-    ``sizeInBytes`` estimate alone guarantees at least ``target`` input
-    splits, the no-op is decided without touching the RDD. Parquet scan
-    estimates never exceed on-disk bytes (column pruning only shrinks
-    them) while split counts are computed on full file bytes, so
+    Guard cost (VERDICT r15 #6): building the split list forces file
+    enumeration on the driver once per call site — repeated metadata
+    work at 100 TB purely to decide a no-op. A static proof runs first:
+    when the frame is a plain scan/project/filter chain (no
+    Join/Union/Aggregate/Generate, whose size estimates can be wildly
+    inflated) and the optimizer's ``sizeInBytes`` estimate alone
+    guarantees at least ``target`` input splits, the no-op is decided
+    without touching the RDD. Parquet scan estimates never exceed
+    on-disk bytes (column pruning only shrinks them) while split counts
+    are computed on full file bytes, so
     ``estimate >= target * maxPartitionBytes`` implies the real split
     count is at least ``target`` — the shortcut can only fire where the
-    exact check would also no-op. Anything it cannot prove falls through
-    to the exact check, so bench-scale plans are byte-identical."""
+    exact check would also no-op.
+
+    Otherwise the count is read off the physical plan
+    (``_plan_partitions``), which launches no job. Only a plan whose
+    streamed path holds a shuffle, a cached relation or an unrecognised
+    node takes the exact check, ``df.rdd.getNumPartitions()`` — under
+    AQE that runs every stage below (broadcasts, shuffle maps), and the
+    caller then runs them again inside its own plan."""
     target = partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
         opt = df._jdf.queryExecution().optimizedPlan()
@@ -638,7 +691,13 @@ def widen(df: DataFrame, partitions: int | None = None) -> DataFrame:
                 return df
     except Exception:  # noqa: BLE001 — static proof is best-effort only
         pass
-    if df.rdd.getNumPartitions() >= target:
+    try:
+        n = _plan_partitions(df)
+    except (Py4JError, PySparkException):  # unreadable plan: exact check
+        n = None
+    if n is None:
+        n = df.rdd.getNumPartitions()
+    if n >= target:
         return df
     return df.repartition(target)
 

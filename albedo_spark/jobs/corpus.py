@@ -1032,10 +1032,13 @@ def main(argv: list[str] | None = None) -> dict:
             ),
             capacity=args.pack_capacity,
         ).persist()
+        n_packed, last_chunk = layout.agg(
+            F.count("*"), F.max("last_chunk")
+        ).first()
         summary["pack"] = {
             "capacity": args.pack_capacity,
-            "n_docs_packed": layout.count(),
-            "n_chunks": (layout.agg(F.max("last_chunk")).collect()[0][0] or -1) + 1,
+            "n_docs_packed": n_packed,
+            "n_chunks": 0 if last_chunk is None else last_chunk + 1,
         }
         if args.out:
             layout.write.mode("overwrite").parquet(

@@ -44,10 +44,24 @@ def as_of_join(
     ``value_cols``: right-side columns to carry (prefixed ``asof_``).
     ``how``: 'inner' drops left rows with no match; 'left' keeps them with
     nulls. With duplicate right (key, ts) rows the carried values follow
-    sort order — pre-aggregate duplicates for determinism.
+    sort order — pre-aggregate duplicates for determinism. ``left`` may
+    not carry ``_side``, ``_ts`` or any ``asof_*`` column (ValueError).
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    # The carry tags rows with _side/_ts and treats EVERY asof_* column as
+    # a carried value, so a left frame already holding one (say, the
+    # output of an earlier as_of_join) would fail on ambiguity or have
+    # its own asof_* values overwritten.
+    reserved = [
+        c for c in left.columns if c in ("_side", "_ts") or c.startswith("asof_")
+    ]
+    if reserved:
+        raise ValueError(
+            f"as_of_join: left has reserved column(s) {reserved}; _side and "
+            "_ts are internal and asof_* names hold carried values — rename "
+            "them before joining (e.g. when chaining as_of_join calls)"
+        )
     value_cols = value_cols or [
         c for c in right.columns if c not in (key, right_ts)
     ]

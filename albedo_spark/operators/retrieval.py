@@ -531,11 +531,13 @@ def repair_bm25_store(spark: SparkSession, table: str) -> dict:
     }
 
 
-def _bm25_read_stats(spark: SparkSession, table: str):
-    """Resolve a BM25 store's corpus scalars → (one-row ``(n_docs,
-    avgdl_x100)`` frame, multi_gen flag). Single-generation stores (and
-    legacy two-column stats tables from before the generation layout)
-    pass their frozen row through untouched — the exact bytes every
+def _bm25_read_stats(
+    spark: SparkSession, table: str
+) -> tuple[int, int, bool]:
+    """Resolve a BM25 store's corpus scalars → ``(n_docs, avgdl_x100,
+    multi_gen)`` as Python ints. Single-generation stores (and legacy
+    two-column stats tables from before the generation layout) pass
+    their frozen row through untouched — the exact integers every
     existing gate hashes. Multi-generation stores merge by SUM:
     ``n_docs = Σ n_docs``, ``avgdl_x100 = (100·Σ dl_total) div n_docs``
     — identical to what a from-scratch rebuild would freeze, because
@@ -543,27 +545,22 @@ def _bm25_read_stats(spark: SparkSession, table: str):
     exact sums).
 
     The stats table is model-state (one row per generation), so it is
-    COLLECTED once and re-emitted as a literal frame: the old shape ran
-    a ``count()`` driver job per probe AND left a parquet scan inside
-    the broadcast build (one more sequential sub-job per probe under
-    AQE); one collect replaces both, and the merge arithmetic runs on
-    exact Python ints — the same BIGINTs either way (r16, guide §5
-    driver does no data work / fewer sequential jobs)."""
+    COLLECTED once and scoring inlines the two scalars as BIGINT
+    literals (``_bm25_contrib``): no stats frame, no cross join, and no
+    broadcast job per probe — the merge arithmetic runs on exact Python
+    ints, the same BIGINTs the store froze."""
     raw = spark.table(table + "_stats")
-    legacy = "gen" not in raw.columns
     rows = raw.collect()
-    if legacy or len(rows) <= 1:
-        vals = [(int(r["n_docs"]), int(r["avgdl_x100"])) for r in rows]
-        multi = False
-    else:
-        n = sum(int(r["n_docs"]) for r in rows)
-        t = sum(int(r["dl_total"]) for r in rows)
-        vals = [(n, (100 * t) // n)]
-        multi = True
-    return (
-        spark.createDataFrame(vals, "n_docs bigint, avgdl_x100 bigint"),
-        multi,
-    )
+    if not rows:
+        raise ValueError(
+            f"BM25 store `{table}` has an empty stats table — run "
+            "audit_bm25_store and rebuild"
+        )
+    if "gen" not in raw.columns or len(rows) == 1:
+        return int(rows[0]["n_docs"]), int(rows[0]["avgdl_x100"]), False
+    n = sum(int(r["n_docs"]) for r in rows)
+    t = sum(int(r["dl_total"]) for r in rows)
+    return n, (100 * t) // n, True
 
 
 def _bm25_postings(spark: SparkSession, table: str, terms: DataFrame,
@@ -573,22 +570,22 @@ def _bm25_postings(spark: SparkSession, table: str, terms: DataFrame,
     at build time and is exact (zero extra work, the pinned plan).
     Multi-generation: the per-row df is stale (each segment froze its
     own batch-local count), so corpus-level df is RECOMPUTED over the
-    term-matched postings — one bucketed scan filtered by the broadcast
-    term list, materialized once (localCheckpoint) and consumed by both
-    the df aggregate and the scoring join. Every (w, doc_id) pair
-    appears exactly once across generations (append admits novel doc
-    ids only), so ``count(*)`` per w over the matched rows IS the
-    rebuilt store's df. Cost is candidate-bounded: only queried terms'
-    postings flow, never the corpus — the read-side price of append
-    until ``compact_bm25_store`` folds the segments."""
+    term-matched postings: the ``w``-bucketed scan semi-joined to the
+    broadcast term list, then ``count(*)`` over a window partitioned by
+    ``w``. The scan's bucketing already clusters every term into one
+    task, so the window runs in place on the ``FileScan`` — no Exchange,
+    no materialization, no extra job. Every (w, doc_id) pair appears
+    exactly once across generations (append admits novel doc ids only),
+    so the per-w row count IS the rebuilt store's df. Cost is
+    candidate-bounded: only queried terms' postings flow, never the
+    corpus — the read-side price of append until
+    ``compact_bm25_store`` folds the segments."""
     post = spark.table(table)
     if not multi_gen:
         return post
-    matched = post.join(
-        F.broadcast(terms.select("w").distinct()), "w"
-    ).localCheckpoint(eager=False)
-    dfreq = matched.groupBy("w").agg(F.count("*").alias("df"))
-    return matched.drop("df").join(F.broadcast(dfreq), "w")
+    return post.join(
+        F.broadcast(terms.select("w")), "w", "left_semi"
+    ).withColumn("df", F.count("*").over(Window.partitionBy("w")))
 
 
 def _scoring_postings(
@@ -604,11 +601,64 @@ def _scoring_postings(
     but not recognised"). The ``{table}_fwd`` companion IS that scan:
     the same rows, bucketed on doc_id. Single-generation stores with a
     forward companion score from it; everything else keeps the
-    w-bucketed main table (multi-generation stores recompute df through
-    a checkpoint that erases partitioning anyway)."""
+    w-bucketed main table (the multi-generation df window needs its
+    ``w`` clustering)."""
     if not multi_gen and spark.catalog.tableExists(table + "_fwd"):
         return spark.table(table + "_fwd"), True
     return _bm25_postings(spark, table, terms, multi_gen), False
+
+
+def _bm25_contrib(
+    spark: SparkSession,
+    table: str,
+    terms: DataFrame,
+    stats: tuple[int, int, bool],
+    allow: DataFrame | None = None,
+) -> DataFrame:
+    """``(w, doc_id, _c)``: each matched posting's integer BM25
+    contribution, shared by ``bm25_store_search`` and
+    ``bm25_store_prf_search``. ``stats`` is ``_bm25_read_stats``'s
+    triple; its scalars enter as BIGINT literals.
+
+    The contribution depends only on the posting row (+ the frozen
+    scalars) — never on the query — so it is computed ONCE per posting
+    row BEFORE the query-term join instead of once per joined row. The
+    join fan-out is |matched (q, w, d)| (orders of magnitude more rows
+    than postings whenever queries share high-df terms); projecting to
+    ``(w, doc_id, _c)`` keeps the fan-out stream narrow (guide §2.3).
+
+    ``allow`` restricts the postings to a doc-id slice AFTER the
+    multi-generation df recompute: idf is the index's corpus-level
+    statistic, never the slice's.
+
+    Co-partitioned scoring scan (r16): when the posting frame is the
+    doc_id-bucketed forward companion, its partitioning clusters every
+    (query_id, doc_id) group into one task — the aggregate runs
+    complete, in-task, with ZERO exchange of the fan-out stream, and a
+    balancing round-robin would DESTROY that property. Only the
+    w-bucketed fallback keeps the r15 widen (its fan-out aggregate must
+    shuffle regardless, so balancing the scan is free win there)."""
+    from albedo_spark.io import widen
+
+    n_docs, avgdl_x100, multi_gen = stats
+    post, copartitioned = _scoring_postings(spark, table, terms, multi_gen)
+    if allow is not None:
+        post = post.join(
+            F.broadcast(allow.selectExpr(f"{allow.columns[0]} AS doc_id")),
+            "doc_id",
+            "semi",
+        )
+    idf_x10k = f"(10000 * (2*{n_docs}L - 2*df + 1)) div (2*df + 1)"
+    tfpart_x10k = (
+        f"(10000 * 22 * tf * {avgdl_x100}L)"
+        f" div (10*tf*{avgdl_x100}L + 3*{avgdl_x100}L + 900*dl)"
+    )
+    out = post.select(
+        "w",
+        "doc_id",
+        F.expr(f"(({idf_x10k}) * ({tfpart_x10k})) div 10000").alias("_c"),
+    )
+    return out if copartitioned else widen(out)
 
 
 def bm25_store_search(
@@ -626,9 +676,10 @@ def bm25_store_search(
     tokenize with the index's tokenizer, distinct terms per query (the
     usual BM25 practice). Plan: query terms BROADCAST into the bucketed
     posting table (zero store-side Exchange — only postings of queried
-    terms flow), the frozen ``{table}_stats`` scalars ride a broadcast
-    cross join, the per-(query, doc) sum partial-aggregates map-side,
-    ranking is the pinned row_number idiom.
+    terms flow), the frozen ``{table}_stats`` scalars are literals in
+    the per-posting contribution (``_bm25_contrib``), the per-(query,
+    doc) sum partial-aggregates map-side, ranking is the pinned
+    row_number idiom.
 
     ``allow``: optional one-column ``(doc_id)`` frame restricting
     results to a metadata slice — PRE-filter semantics (q164's
@@ -638,7 +689,7 @@ def bm25_store_search(
     the INDEX's frozen corpus-level stats (standard filtered-retrieval
     practice — the slice narrows candidates, not the model)."""
     spark = queries.sparkSession
-    stats, multi_gen = _bm25_read_stats(spark, table)
+    stats = _bm25_read_stats(spark, table)
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -648,51 +699,9 @@ def bm25_store_search(
         )
         .where(F.col("w") != "")
     )
-    # df recompute (multi-gen only) runs BEFORE the allow filter: idf is
-    # the index's corpus-level statistic, never the slice's.
-    post, copartitioned = _scoring_postings(spark, table, qterms, multi_gen)
-    if allow is not None:
-        post = post.join(
-            F.broadcast(allow.selectExpr(f"{allow.columns[0]} AS doc_id")),
-            "doc_id",
-            "semi",
-        )
-    idf_x10k = F.expr("(10000 * (2*n_docs - 2*df + 1)) div (2*df + 1)")
-    tfpart_x10k = F.expr(
-        "(10000 * 22 * tf * avgdl_x100)"
-        " div (10*tf*avgdl_x100 + 3*avgdl_x100 + 900*dl)"
-    )
-    # The per-term-per-doc BM25 contribution depends only on the posting
-    # row (+ the frozen scalars) — never on the query — so compute it
-    # ONCE per posting row BEFORE the query-term join instead of once
-    # per joined row. The join fan-out is |matched (q, w, d)| (orders of
-    # magnitude more rows than postings whenever queries share
-    # high-df terms); moving the integer div chain below the join and
-    # projecting to (w, doc_id, contrib) keeps the fan-out stream
-    # narrow (guide §2.3). Identical integers, identical sums.
-    contrib = (
-        post.crossJoin(F.broadcast(stats))
-        .withColumn("_idf_x10k", idf_x10k)
-        .withColumn("_tfpart_x10k", tfpart_x10k)
-        .select(
-            "w",
-            "doc_id",
-            F.expr("(_idf_x10k * _tfpart_x10k) div 10000").alias("_c"),
-        )
-    )
-    # Co-partitioned scoring scan (r16): when the posting frame is the
-    # doc_id-bucketed forward companion, its partitioning clusters every
-    # (query_id, doc_id) group into one task — the aggregate runs
-    # complete, in-task, with ZERO exchange of the fan-out stream, and a
-    # balancing round-robin would DESTROY that property. Only the
-    # w-bucketed fallback keeps the r15 widen (its fan-out aggregate
-    # must shuffle regardless, so balancing the scan is free win there).
-    if not copartitioned:
-        from albedo_spark.io import widen
-
-        contrib = widen(contrib)
     scored = (
-        contrib.join(F.broadcast(qterms), "w")
+        _bm25_contrib(spark, table, qterms, stats, allow)
+        .join(F.broadcast(qterms), "w")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("_c").alias("bm25_x10k"))
     )
@@ -948,7 +957,6 @@ def bm25_store_prf_search(
     the (tiny) expansion term set pays a second posting fan-out. One
     union + re-aggregate replaces the second full |Q·terms| join.
     """
-    from albedo_spark.io import widen
     from albedo_spark.operators.topk import top_k_per_group
 
     spark = queries.sparkSession
@@ -957,7 +965,7 @@ def bm25_store_prf_search(
         if spark.catalog.tableExists(table + "_fwd")
         else spark.table(table)
     )
-    stats, multi_gen = _bm25_read_stats(spark, table)
+    stats = _bm25_read_stats(spark, table)
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -967,38 +975,11 @@ def bm25_store_prf_search(
         # consumed by pass-1 scoring and the expansion anti-join
         .localCheckpoint(eager=False)
     )
-    idf_x10k = F.expr("(10000 * (2*n_docs - 2*df + 1)) div (2*df + 1)")
-    tfpart_x10k = F.expr(
-        "(10000 * 22 * tf * avgdl_x100)"
-        " div (10*tf*avgdl_x100 + 3*avgdl_x100 + 900*dl)"
-    )
-
-    def _contrib(terms: DataFrame) -> DataFrame:
-        # Per-posting BM25 contribution, computed BEFORE the query-term
-        # join (depends only on the posting row + frozen scalars) and
-        # projected narrow — the bm25_store_search discipline (§2.3).
-        # Scoring reads the doc_id-bucketed forward companion when it
-        # exists (r16, _scoring_postings): the (query, doc) aggregate
-        # over the fan-out then needs NO exchange at any scale, and the
-        # balancing widen must not run (it would erase the clustering).
-        post, copart = _scoring_postings(spark, table, terms, multi_gen)
-        out = (
-            post.crossJoin(F.broadcast(stats))
-            .withColumn("_idf_x10k", idf_x10k)
-            .withColumn("_tfpart_x10k", tfpart_x10k)
-            .select(
-                "w",
-                "doc_id",
-                F.expr("(_idf_x10k * _tfpart_x10k) div 10000").alias("_c"),
-            )
-        )
-        return out if copart else widen(out)
-
     # Pass 1, pre-rank: Σ over original terms per (query, doc). Consumed
     # by the feedback top-k below AND by the final score — checkpoint so
     # the posting fan-out aggregate executes once.
     scored1 = (
-        _contrib(qterms)
+        _bm25_contrib(spark, table, qterms, stats)
         .join(F.broadcast(qterms), "w")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("_c").alias("_s1"))
@@ -1074,7 +1055,7 @@ def bm25_store_prf_search(
         fb, ["query_id"], [F.col("fbtf").desc(), F.col("w").asc()], fb_terms
     )
     # ``exp_terms`` is consumed by TWO broadcast builds below (the
-    # term-distinct semi-join inside _bm25_postings on multi-gen stores
+    # term semi-join inside _bm25_postings on multi-gen stores
     # and the score join), and broadcast builds do not share work —
     # without a materialization boundary the whole feedback subtree
     # (the fwd fetch, the fbtf window) would execute once per build.
@@ -1086,7 +1067,7 @@ def bm25_store_prf_search(
     # already in ``scored1`` — re-fanning them out would repeat the
     # dominant |postings ⋈ qterms| join for rows whose sum exists.
     exp_scored = (
-        _contrib(exp_terms)
+        _bm25_contrib(spark, table, exp_terms, stats)
         .join(F.broadcast(exp_terms), "w")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("_c").alias("_s2"))

@@ -89,3 +89,27 @@ def test_direction_validation(spark, sides):
 
     with pytest.raises(ValueError, match="backward|forward"):
         as_of_join(*sides, key="user_id", direction="nearest")
+
+
+def test_chained_join_rejects_reserved_columns(spark, sides):
+    """A second as_of_join on the first one's output fails up front on
+    the carried asof_* names; after renaming them the chain works."""
+    from albedo_spark.operators.asof import as_of_join
+
+    left, right = sides
+    first = as_of_join(left, right, key="user_id", value_cols=["v"], how="left")
+    with pytest.raises(ValueError, match=r"reserved column.*asof_v.*asof_ts"):
+        as_of_join(first, right, key="user_id", value_cols=["v"])
+    with pytest.raises(ValueError, match=r"reserved column.*'_ts'"):
+        as_of_join(left.withColumn("_ts", F.col("ts")), right, key="user_id")
+    renamed = first.withColumnRenamed("asof_v", "v_back").withColumnRenamed(
+        "asof_ts", "ts_back"
+    )
+    got = {
+        r.tag: (r.v_back, r.asof_v)
+        for r in as_of_join(
+            renamed, right, key="user_id", value_cols=["v"],
+            direction="forward", how="left",
+        ).collect()
+    }
+    assert got == {"p1": (200, 200), "p2": (300, None), "p3": (None, None)}

@@ -800,14 +800,30 @@ def test_bm25_append_guards(spark):
         append_bm25_postings(d, "t_bm25_never_built")
 
 
+def _df_window_to_scan(plan: str, tbl: str) -> list[str]:
+    """The plan lines from the multi-generation df ``Window`` (a
+    ``count(1)`` partitioned by w) down to the posting table's scan."""
+    lines = plan.splitlines()
+    start = next(
+        i for i, ln in enumerate(lines)
+        if "Window [count(1) windowspecdefinition(w#" in ln
+    )
+    end = next(
+        i for i in range(start, len(lines))
+        if "FileScan" in lines[i] and f"default.{tbl}[" in lines[i]
+    )
+    return lines[start:end + 1]
+
+
 def test_bm25_multigen_search_plan(spark):
     """Multi-generation search plan pins: the posting table is scanned
-    ONCE (the df recompute and the scoring join both read the one
-    materialized term-matched frame, never the table twice), the term
-    probe and the df re-attach both ride broadcasts, and the only hash
-    Exchanges are candidate-bounded — keyed by query_id (ranking) or by
-    the term w of the tiny matched frame (the documented read-side
-    price of a segmented store)."""
+    ONCE; the term probe rides a broadcast semi-join into the
+    w-bucketed scan and the corpus-level df is a ``count(*)`` window
+    sitting directly on that bucketed ``FileScan`` — no Exchange and no
+    checkpointed RDD scan between them; the corpus scalars are literals
+    (no stats cross join, so no BroadcastNestedLoopJoin); the only hash
+    Exchanges are keyed by query_id (the fan-out aggregate and the
+    ranking)."""
     from albedo_spark.io import load_table
     from albedo_spark.operators.retrieval import (
         append_bm25_postings,
@@ -826,18 +842,63 @@ def test_bm25_multigen_search_plan(spark):
         out = bm25_store_search(qdf, tbl, top_k=5)
         out.collect()
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count(f"default.{tbl},") + plan.count(
-            f"default.{tbl}]"
-        ) <= 1 or plan.count(f"spark_catalog.default.{tbl}") <= 1
+        plan = plan.split("== Initial Plan ==")[0]  # the executed plan only
+        assert plan.count(f"spark_catalog.default.{tbl}[") == 1
         assert "BroadcastHashJoin" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        between = _df_window_to_scan(plan, tbl)
+        assert "Bucketed: true" in between[-1]
+        assert not [
+            ln for ln in between
+            if "Exchange" in ln or "Scan ExistingRDD" in ln
+        ], "\n".join(between)
         for line in plan.splitlines():
             if "Exchange hashpartitioning" in line:
-                assert "query_id" in line or "w#" in line, (
-                    f"unexpected shuffle: {line}"
-                )
+                assert "query_id" in line, f"unexpected shuffle: {line}"
     finally:
         for suf in ("", "_stats", "_fwd", "_bloom"):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
+
+
+def test_bm25_store_search_job_budget(spark):
+    """One search launches only the jobs its plan needs: the stats
+    collect plus the query plan (its broadcasts and the fan-out
+    aggregate). The scalars ride as literals — no stats-frame broadcast
+    job, no stats cross join — and widen reads partition counts off the
+    plan. Budgets are the counts measured on local[8] (the stats-frame
+    and checkpoint path took 8 and 14); a rise means a hidden job came
+    back."""
+    from albedo_spark.operators.retrieval import (
+        append_bm25_postings,
+        bm25_store_search,
+        build_bm25_store,
+    )
+    from tests.job_count import jobs_in_group
+
+    d = _docs_df(spark)
+    one, multi = "t_bm25_jobs_one", "t_bm25_jobs_multi"
+    try:
+        build_bm25_store(d, one)
+        build_bm25_store(d.where("doc_id % 2 = 0"), multi)
+        append_bm25_postings(d.where("doc_id % 2 = 1"), multi)
+        qdf = spark.createDataFrame(QS, "query_id string, text string")
+        got = {}
+        for tbl, budget in ((one, 6), (multi, 6)):
+            out = bm25_store_search(qdf, tbl, top_k=5)
+            assert "BroadcastNestedLoopJoin" not in (
+                out._jdf.queryExecution().executedPlan().toString()
+            )
+            rows, jobs = jobs_in_group(
+                spark, f"search_{tbl}",
+                lambda: bm25_store_search(qdf, tbl, top_k=5).collect(),
+            )
+            assert jobs <= budget, f"{tbl}: {jobs} jobs > {budget}"
+            got[tbl] = sorted(tuple(r) for r in rows)
+        assert got[one] == got[multi]  # append = rebuild, scores included
+    finally:
+        for tbl in (one, multi):
+            for suf in ("", "_stats", "_fwd", "_bloom"):
+                spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
 
 
 def test_snippet_windows_hand_example(spark):

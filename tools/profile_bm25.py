@@ -94,10 +94,13 @@ def main() -> None:
     t("q160 full", q160_full, n=5)
 
     # --- q165 decomposition ---
-    stats_df, multi_gen = __import__(
-        "albedo_spark.operators.retrieval", fromlist=["x"]
-    )._bm25_read_stats(spark, lex_table)
-    print("multi_gen:", multi_gen, flush=True)
+    from albedo_spark.operators.retrieval import (
+        _bm25_contrib,
+        _bm25_read_stats,
+    )
+
+    stats = _bm25_read_stats(spark, lex_table)
+    print("multi_gen:", stats[2], flush=True)
     from albedo_spark.operators.textstats import tokens as _tok
 
     qterms = (
@@ -107,16 +110,7 @@ def main() -> None:
         ).where(F.col("w") != "")
     )
     post = spark.table(lex_table)
-    idf = F.expr("(10000 * (2*n_docs - 2*df + 1)) div (2*df + 1)")
-    tfp = F.expr("(10000 * 22 * tf * avgdl_x100)"
-                 " div (10*tf*avgdl_x100 + 3*avgdl_x100 + 900*dl)")
-    contrib = (
-        post.crossJoin(F.broadcast(stats_df))
-        .withColumn("_i", idf).withColumn("_t", tfp)
-        .select("w", "doc_id", F.expr("(_i * _t) div 10000").alias("_c"))
-    )
-    from albedo_spark.io import widen
-    contribw = widen(contrib)
+    contribw = _bm25_contrib(spark, lex_table, qterms, stats)
 
     def fanout_only():
         noop(contribw.join(F.broadcast(qterms), "w"))
