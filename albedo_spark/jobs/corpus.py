@@ -35,6 +35,49 @@ import sys
 from pyspark.sql import functions as F
 
 
+def _drop_non_keepers(survivors, pairs, per_doc):
+    """q113's election: each component of the near-dup ``pairs`` keeps its
+    highest-quality member (ties -> smallest id), the rest leave
+    ``survivors``; with the stage's n_components/n_dropped aggregate."""
+    from albedo_spark.operators.dedup import (
+        connected_components,
+        keeper_by_quality,
+    )
+
+    elected = keeper_by_quality(
+        connected_components(pairs.select("id_a", "id_b")),
+        per_doc.select("doc_id", "quality_x10k"),
+    )
+    stats = elected.agg(
+        F.countDistinct("component_id").alias("n_components"),
+        F.count(F.when(~F.col("is_kept"), 1)).alias("n_dropped"),
+    ).first()
+    dropped = elected.where(~F.col("is_kept")).select("doc_id")
+    return survivors.join(dropped, "doc_id", "left_anti"), stats.asDict()
+
+
+class _Funnel:
+    """Row counts along the survivors chain, each from the one action that
+    fills a persisted frame the next stage reads. A drop-only stage's
+    ``n_dropped`` is its input rows minus its output rows: the input count
+    is the previous fill's, or one more fill when a stage that keeps its
+    own statistics replaced the survivors in between."""
+
+    def __init__(self, df, rows):
+        self.df, self.rows = df, rows
+
+    def drop(self, entry, df, stage):
+        """``stage(df)``, persisted and counted once; sets
+        ``entry["n_dropped"]``."""
+        if df is not self.df:
+            self.rows = df.persist().count()
+        out = stage(df).persist()
+        n_out = out.count()
+        entry["n_dropped"] = self.rows - n_out
+        self.df, self.rows = out, n_out
+        return out
+
+
 def main(argv: list[str] | None = None) -> dict:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -324,21 +367,20 @@ def main(argv: list[str] | None = None) -> dict:
     spark = get_spark("corpus-job", shuffle_partitions=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
+    # Summary parts of the stages that run before the per-doc stats; they
+    # land after the core numbers.
+    front = {}
     if args.sweep_warehouse:
         from albedo_spark.io import sweep_dead_private_copies
 
         sw = sweep_dead_private_copies(spark)
-        summary_sweep = {
+        front["warehouse_sweep"] = {
             "n_swept": len(sw["swept"]),
             "kept_live": sw["kept_live"],
             "kept_fresh": sw["kept_fresh"],
             "kept_recent": sw["kept_recent"],
         }
-    else:
-        summary_sweep = None
 
-    summary_links = None
-    summary_frontier = None
     if args.warc_in:
         # Crawl-native input: WARC responses -> (doc_id, url, text).
         # Every per-language stage downstream needs --langid because a
@@ -366,10 +408,8 @@ def main(argv: list[str] | None = None) -> dict:
             edges = host_link_edges(
                 docs, url_col="url", html_col="text"
             ).persist()
-            summary_links = {
-                "n_edges": edges.count(),
-                "n_links": edges.agg(F.sum("n_links")).collect()[0][0],
-            }
+            n_edges, n_links = edges.agg(F.count("*"), F.sum("n_links")).first()
+            front["link_graph"] = {"n_edges": n_edges, "n_links": n_links}
             # The anchor corpus rides the same extraction (r15, VERDICT
             # r14 missing 2b): how the web describes each host — the
             # searchable field a BM25 store composes next to own-text
@@ -377,7 +417,7 @@ def main(argv: list[str] | None = None) -> dict:
             anchors = anchor_text_corpus(
                 docs, url_col="url", html_col="text"
             ).persist()
-            summary_links["n_anchor_targets"] = anchors.count()
+            front["link_graph"]["n_anchor_targets"] = anchors.count()
             if args.out:
                 edges.write.mode("overwrite").parquet(
                     os.path.join(args.out, "host_edges")
@@ -403,7 +443,7 @@ def main(argv: list[str] | None = None) -> dict:
                 docs, f_tbl, url_col="url", html_col="text",
                 per_host_cap=args.frontier_host_cap,
             ).persist()
-            summary_frontier = {
+            front["frontier"] = {
                 "n_frontier_urls": frontier.count(),
                 "n_frontier_hosts": frontier.select("host")
                 .distinct()
@@ -470,7 +510,6 @@ def main(argv: list[str] | None = None) -> dict:
     else:
         docs = load_table(spark, args.sf_dir, "documents")
 
-    summary_url = None
     if args.url_col and (args.url_dedup or args.host_cap):
         # URL/host front door (VERDICT r13 #4): runs BEFORE any text
         # stage — a page fetched twice under tracking-param/fragment
@@ -483,19 +522,18 @@ def main(argv: list[str] | None = None) -> dict:
             )
         from albedo_spark.operators.dedup import host_cap_sample, url_dedup
 
-        n0 = docs.count()
-        summary_url = {"n_before": n0}
+        # A stage's count fills the persisted frame the next stage reads,
+        # so url_dedup and the host cap each run once.
+        url = front["url_hygiene"] = {"n_before": docs.count()}
         if args.url_dedup:
-            docs = url_dedup(docs, url_col=args.url_col)
-            n1 = docs.count()
-            summary_url["n_after_url_dedup"] = n1
+            docs = url_dedup(docs, url_col=args.url_col).persist()
+            url["n_after_url_dedup"] = docs.count()
         if args.host_cap:
             docs = host_cap_sample(
                 docs, url_col=args.url_col, cap=args.host_cap
-            )
-            summary_url["host_cap"] = args.host_cap
-            summary_url["n_after_host_cap"] = docs.count()
-        docs = docs.persist()
+            ).persist()
+            url["host_cap"] = args.host_cap
+            url["n_after_host_cap"] = docs.count()
 
     markup_cached = None
     if args.strip_markup:
@@ -548,7 +586,6 @@ def main(argv: list[str] | None = None) -> dict:
             "left",
         ).withColumn("lang", F.coalesce(F.col("lang"), F.lit("und")))
 
-    summary_code = None
     if args.code_route is not None:
         # Domain routing before the text stages: code's dedup
         # granularity, mixture weight and quality rules all differ, so
@@ -560,7 +597,7 @@ def main(argv: list[str] | None = None) -> dict:
             "_code_x10k", code_likeness_x10k(F.col("text"))
         ).persist()
         code_docs = scored_code.where(F.col("_code_x10k") >= args.code_route)
-        summary_code = {
+        front["code_route"] = {
             "threshold_x10k": args.code_route,
             "n_code_docs": code_docs.count(),
         }
@@ -595,68 +632,61 @@ def main(argv: list[str] | None = None) -> dict:
     contam = ngram_contamination(
         docs, docs.where(F.col("doc_id") < args.probe_ids), n=3
     )
+    # Post-hygiene corpus: contaminated docs drop out here, once; every
+    # later stage reads the persisted survivors, and n_contaminated is
+    # the row delta (contam holds one row per doc_id).
+    survivors = docs.join(
+        contam.where(F.col("contaminated_x10k") >= 8000).select("doc_id"),
+        "doc_id",
+        "left_anti",
+    ).persist()
+    n_clean = survivors.count()
 
+    core = per_doc.agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.count(
+            F.when(F.col("n_email") + F.col("n_ipv4") + F.col("n_phone") > 0, 1)
+        ).alias("n_pii_docs"),
+        F.expr("percentile(quality_x10k, 0.5)").alias("median_quality_x10k"),
+    ).first()
     summary = {
-        "n_docs": per_doc.count(),
-        "n_tokens": per_doc.agg(F.sum("n_tokens")).collect()[0][0],
+        "n_docs": core["n_docs"],
+        "n_tokens": core["n_tokens"],
         "langs": {
             r["lang_pred"]: r["n"]
             for r in per_doc.groupBy("lang_pred").agg(F.count("*").alias("n")).collect()
         },
         "n_exact_dup_groups": dup_groups.count(),
         "n_near_dup_pairs": pairs.count(),
-        "n_pii_docs": per_doc.where(
-            (F.col("n_email") + F.col("n_ipv4") + F.col("n_phone")) > 0
-        ).count(),
-        "n_contaminated": contam.where(F.col("contaminated_x10k") >= 8000).count(),
-        "median_quality_x10k": per_doc.agg(
-            F.expr("percentile(quality_x10k, 0.5)")
-        ).collect()[0][0],
+        "n_pii_docs": core["n_pii_docs"],
+        "n_contaminated": core["n_docs"] - n_clean,
+        "median_quality_x10k": core["median_quality_x10k"],
     }
     if args.langid:
-        summary["langid"] = {
-            "langs": {
-                r["lang"]: r["n"]
-                for r in docs.groupBy("lang")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            },
-        }
-        if "lang_label" in docs.columns:
-            # agreement with the input's own label, when it has one —
-            # diagnostic only (synthetic fixtures label randomly)
-            summary["langid"]["n_label_match"] = docs.where(
-                F.col("lang") == F.col("lang_label")
-            ).count()
-    if summary_links is not None:
-        summary["link_graph"] = summary_links
-    if summary_frontier is not None:
-        summary["frontier"] = summary_frontier
-    if summary_code is not None:
-        summary["code_route"] = summary_code
-    if summary_url is not None:
-        summary["url_hygiene"] = summary_url
-    if summary_sweep is not None:
-        summary["warehouse_sweep"] = summary_sweep
+        # agreement with the input's own label, when it has one —
+        # diagnostic only (synthetic fixtures label randomly)
+        labelled = "lang_label" in docs.columns
+        match = F.col("lang") == F.col("lang_label") if labelled else F.lit(False)
+        rows = docs.groupBy("lang").agg(
+            F.count("*").alias("n"), F.count(F.when(match, 1)).alias("m")
+        ).collect()
+        summary["langid"] = {"langs": {r["lang"]: r["n"] for r in rows}}
+        if labelled:
+            summary["langid"]["n_label_match"] = sum(r["m"] for r in rows)
+    for key in ("link_graph", "frontier", "code_route", "url_hygiene",
+                "warehouse_sweep"):
+        if key in front:
+            summary[key] = front[key]
     if markup_cached is not None:
         # Exact integer mean (sum DIV count) — the catalog's
         # order-independent discipline, one aggregate.
-        summary["markup"] = {
-            "mean_markup_x10k": int(
-                markup_cached.agg(
-                    F.expr("sum(_markup_x10k) DIV count(*)")
-                ).collect()[0][0]
-                or 0
-            ),
-        }
+        mean = markup_cached.agg(
+            F.expr("sum(_markup_x10k) DIV count(*)")
+        ).first()[0]
+        summary["markup"] = {"mean_markup_x10k": int(mean or 0)}
 
-    # Post-hygiene corpus: quarantined (contaminated) docs drop out before
-    # mixing/packing.
-    contaminated_ids = contam.where(
-        F.col("contaminated_x10k") >= 8000
-    ).select("doc_id")
-    survivors = docs.join(contaminated_ids, "doc_id", "left_anti")
-
+    funnel = _Funnel(survivors, n_clean)
     if args.blocklist_phrases:
         # Blocklist hygiene (C4 policy: any hit drops the doc). The path
         # is dictionary-size-aware: a handful of terms is ONE map-only
@@ -677,9 +707,11 @@ def main(argv: list[str] | None = None) -> dict:
         if len(phrases) < args.phrase_regex_max:
             from albedo_spark.operators.textstats import blocklist_filter
 
-            n_before = survivors.count()
-            survivors = blocklist_filter(survivors, phrases, max_hits=0)
-            blk = {"path": "regex", "n_dropped": n_before - survivors.count()}
+            blk = {"path": "regex"}
+            survivors = funnel.drop(
+                blk, survivors,
+                lambda d: blocklist_filter(d, phrases, max_hits=0),
+            )
         else:
             from albedo_spark.operators.retrieval import phrase_match
 
@@ -687,13 +719,12 @@ def main(argv: list[str] | None = None) -> dict:
                 [(i, ph.lower().split()) for i, ph in enumerate(phrases)],
                 "phrase_id long, pt array<string>",
             )
-            hit_ids = (
-                phrase_match(survivors, pf, key="rarest")
-                .select("doc_id")
-                .distinct()
+            hit_ids = phrase_match(survivors, pf, key="rarest").select("doc_id")
+            blk = {"path": "phrase_posting"}
+            survivors = funnel.drop(
+                blk, survivors,
+                lambda d: d.join(hit_ids, "doc_id", "left_anti"),
             )
-            blk = {"path": "phrase_posting", "n_dropped": hit_ids.count()}
-            survivors = survivors.join(hit_ids, "doc_id", "left_anti")
         blk["n_phrases"] = len(phrases)
         summary["blocklist_phrases"] = blk
 
@@ -717,32 +748,11 @@ def main(argv: list[str] | None = None) -> dict:
         survivors = survivors.join(flagged_ids, "doc_id", "left_anti")
 
     if args.keeper_quality:
-        # Canonicalization (q113's operator): the verified near-dup pairs
-        # close into components; each component keeps its highest-quality
-        # member and the rest leave the corpus. Scores come from the
-        # already-persisted per_doc stats — no rescore pass.
-        from albedo_spark.operators.dedup import (
-            connected_components,
-            keeper_by_quality,
+        # Canonicalization (q113's operator) of the verified near-dup
+        # pairs; scores come from the persisted per_doc stats.
+        survivors, summary["keeper_quality"] = _drop_non_keepers(
+            survivors, pairs, per_doc
         )
-
-        comps = connected_components(pairs.select("id_a", "id_b"))
-        elected = keeper_by_quality(
-            comps, per_doc.select("doc_id", "quality_x10k")
-        )
-        stats = elected.agg(
-            F.countDistinct("component_id").alias("n_components"),
-            F.sum(F.when(~F.col("is_kept"), 1).otherwise(0)).alias("n_dropped"),
-        ).collect()[0]
-        survivors = survivors.join(
-            elected.where(~F.col("is_kept")).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-        summary["keeper_quality"] = {
-            "n_components": int(stats["n_components"] or 0),
-            "n_dropped": int(stats["n_dropped"] or 0),
-        }
 
     if args.containment_drop:
         # Quote/snippet hygiene (q146's operator): documents whose 3-gram
@@ -776,14 +786,12 @@ def main(argv: list[str] | None = None) -> dict:
                 | (F.col("f.contained_id") > F.col("f.container_id"))
             )
             .select(F.col("f.contained_id").alias("doc_id"))
-            .distinct()
         )
-        n_drop = drops.count()
-        survivors = survivors.join(drops, "doc_id", "left_anti")
-        summary["containment_drop"] = {
-            "threshold": args.containment_drop,
-            "n_dropped": n_drop,
-        }
+        summary["containment_drop"] = {"threshold": args.containment_drop}
+        survivors = funnel.drop(
+            summary["containment_drop"], survivors,
+            lambda d: d.join(drops, "doc_id", "left_anti"),
+        )
 
     if args.ahash_dedup is not None:
         # Media-granularity dedup (q147's operator): the perceptual-hash
@@ -792,10 +800,6 @@ def main(argv: list[str] | None = None) -> dict:
         # member (ties -> smallest id). Complete at max_hamming <= 3 by
         # the 4-band pigeonhole; above that it is banded-LSH recall
         # (documented on the operator).
-        from albedo_spark.operators.dedup import (
-            connected_components,
-            keeper_by_quality,
-        )
         from albedo_spark.sources.multimodal import (
             ahash_images,
             ahash_near_dup_pairs,
@@ -808,24 +812,8 @@ def main(argv: list[str] | None = None) -> dict:
         a_pairs = ahash_near_dup_pairs(
             ahash_images(media), max_hamming=args.ahash_dedup
         )
-        a_comps = connected_components(a_pairs.select("id_a", "id_b"))
-        a_elected = keeper_by_quality(
-            a_comps, per_doc.select("doc_id", "quality_x10k")
-        )
-        a_stats = a_elected.agg(
-            F.countDistinct("component_id").alias("n_components"),
-            F.sum(F.when(~F.col("is_kept"), 1).otherwise(0)).alias("n_dropped"),
-        ).collect()[0]
-        survivors = survivors.join(
-            a_elected.where(~F.col("is_kept")).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-        summary["ahash_dedup"] = {
-            "max_hamming": args.ahash_dedup,
-            "n_components": int(a_stats["n_components"] or 0),
-            "n_dropped": int(a_stats["n_dropped"] or 0),
-        }
+        survivors, a_stats = _drop_non_keepers(survivors, a_pairs, per_doc)
+        summary["ahash_dedup"] = {"max_hamming": args.ahash_dedup, **a_stats}
 
     if args.semdedup is not None:
         # Semantic dedup (SemDeDup — cluster-then-compare over document
@@ -841,10 +829,6 @@ def main(argv: list[str] | None = None) -> dict:
             assign_clusters,
             integerize_embeddings,
             kmeans_fit,
-        )
-        from albedo_spark.operators.dedup import (
-            connected_components,
-            keeper_by_quality,
         )
         from albedo_spark.operators.similarity import _with_norm
 
@@ -879,24 +863,11 @@ def main(argv: list[str] | None = None) -> dict:
             .where(F.col("cosine") >= args.semdedup_cosine)
             .select("id_a", "id_b")
         )
-        s_comps = connected_components(s_pairs)
-        s_elected = keeper_by_quality(
-            s_comps, per_doc.select("doc_id", "quality_x10k")
-        )
-        s_stats = s_elected.agg(
-            F.countDistinct("component_id").alias("n_components"),
-            F.sum(F.when(~F.col("is_kept"), 1).otherwise(0)).alias("n_dropped"),
-        ).collect()[0]
-        survivors = survivors.join(
-            s_elected.where(~F.col("is_kept")).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
+        survivors, s_stats = _drop_non_keepers(survivors, s_pairs, per_doc)
         summary["semdedup"] = {
             "k": args.semdedup,
             "cosine": args.semdedup_cosine,
-            "n_components": int(s_stats["n_components"] or 0),
-            "n_dropped": int(s_stats["n_dropped"] or 0),
+            **s_stats,
         }
 
     if args.span_dedup:
@@ -925,22 +896,14 @@ def main(argv: list[str] | None = None) -> dict:
         # dropped too (nothing to judge, nothing to train on).
         from albedo_spark.operators.textstats import bigram_lm_scores
 
-        scored = bigram_lm_scores(survivors)
-        keep_ids = scored.where(
+        keep_ids = bigram_lm_scores(survivors).where(
             F.col("score_x10k") >= args.min_lm_score
         ).select("doc_id")
-        # Drop count from the scored frame directly (one action) — two
-        # survivors.count() calls would re-run the whole upstream
-        # hygiene/span-dedup chain twice just for the delta.
-        n_dropped = scored.where(
-            F.col("score_x10k").isNull()
-            | (F.col("score_x10k") < args.min_lm_score)
-        ).count()
-        survivors = survivors.join(keep_ids, "doc_id", "left_semi")
-        summary["lm_filter"] = {
-            "min_score_x10k": args.min_lm_score,
-            "n_dropped": n_dropped,
-        }
+        summary["lm_filter"] = {"min_score_x10k": args.min_lm_score}
+        survivors = funnel.drop(
+            summary["lm_filter"], survivors,
+            lambda d: d.join(keep_ids, "doc_id", "left_semi"),
+        )
 
     if args.adaptive_quality is not None:
         # Per-language adaptive quality cutoff (q131's operator): keep
@@ -948,7 +911,6 @@ def main(argv: list[str] | None = None) -> dict:
         # the heuristic score — the CCNet posture; a single global floor
         # silently deletes whole languages.
         from albedo_spark.operators.quality import per_group_quantile_filter
-        from albedo_spark.operators.textstats import quality_score_x10k
 
         q_num, q_den = (int(x) for x in args.adaptive_quality.split("/"))
         scored = survivors.select(
@@ -957,12 +919,11 @@ def main(argv: list[str] | None = None) -> dict:
         kept = per_group_quantile_filter(
             scored, "_q", "lang", "doc_id", q_num=q_num, q_den=q_den
         ).select("doc_id")
-        n_before = scored.count()
-        survivors = survivors.join(kept, "doc_id", "left_semi")
-        summary["adaptive_quality"] = {
-            "quantile": args.adaptive_quality,
-            "n_dropped": n_before - survivors.count(),
-        }
+        summary["adaptive_quality"] = {"quantile": args.adaptive_quality}
+        survivors = funnel.drop(
+            summary["adaptive_quality"], survivors,
+            lambda d: d.join(kept, "doc_id", "left_semi"),
+        )
 
     if args.soft_quality is not None:
         # Soft quality ramp (q184's operator) — runs where the hard
@@ -973,19 +934,18 @@ def main(argv: list[str] | None = None) -> dict:
         parts = [int(x) for x in args.soft_quality.split(":")]
         lo, hi = parts[0], parts[1]
         floor_x10k = parts[2] if len(parts) > 2 else 1000
-        scored = survivors.withColumn(
-            "_q", quality_score_x10k(F.col("text"))
-        )
-        n_before = scored.count()
-        survivors = soft_quality_sample(
-            scored, "_q", "doc_id", lo=lo, hi=hi, floor_x10k=floor_x10k
-        ).drop("_q")
         summary["soft_quality"] = {
             "lo": lo,
             "hi": hi,
             "floor_x10k": floor_x10k,
-            "n_dropped": n_before - survivors.count(),
         }
+        survivors = funnel.drop(
+            summary["soft_quality"], survivors,
+            lambda d: soft_quality_sample(
+                d.withColumn("_q", quality_score_x10k(F.col("text"))),
+                "_q", "doc_id", lo=lo, hi=hi, floor_x10k=floor_x10k,
+            ).drop("_q"),
+        )
 
     if args.mixture:
         from albedo_spark.operators.sampling import mixture_sample
@@ -1024,11 +984,10 @@ def main(argv: list[str] | None = None) -> dict:
 
     if args.pack_capacity:
         from albedo_spark.operators.packing import pack_sequences
-        from albedo_spark.operators.textstats import token_count as _tc
 
         layout = pack_sequences(
             survivors.select(
-                "doc_id", _tc(F.col("text")).cast("long").alias("n_tok")
+                "doc_id", token_count(text).cast("long").alias("n_tok")
             ),
             capacity=args.pack_capacity,
         ).persist()
@@ -1054,13 +1013,12 @@ def main(argv: list[str] | None = None) -> dict:
 
         merges = learn_bpe(survivors, n_merges=args.bpe_merges)
         encoded = encode_corpus(survivors, merges).persist()
+        n_docs, n_tokens = encoded.agg(F.count("*"), F.sum("n_tokens")).first()
         summary["bpe"] = {
             "n_merges": len(merges),
             "top_merges": [f"{l}+{r}" for l, r, _ in merges[:5]],
-            "n_docs_encoded": encoded.count(),
-            "total_tokens": int(
-                encoded.agg(F.sum("n_tokens")).collect()[0][0] or 0
-            ),
+            "n_docs_encoded": n_docs,
+            "total_tokens": int(n_tokens or 0),
         }
         if args.out:
             spark.createDataFrame(
@@ -1093,16 +1051,15 @@ def main(argv: list[str] | None = None) -> dict:
         seg = viterbi_segment_words(
             word_frequencies(survivors), trained
         ).persist()
+        # corpus token budget under the TRAINED vocab: each distinct
+        # word's piece count weighted by its corpus frequency
+        n_words, n_pieces = seg.agg(
+            F.count("*"), F.sum(F.col("n_pieces") * F.col("freq"))
+        ).first()
         summary["unigram"] = {
             "vocab_size": trained.count(),
-            "n_words_segmented": seg.count(),
-            # corpus token budget under the TRAINED vocab: each distinct
-            # word's piece count weighted by its corpus frequency
-            "total_pieces": int(
-                seg.agg(F.sum(F.col("n_pieces") * F.col("freq")))
-                .collect()[0][0]
-                or 0
-            ),
+            "n_words_segmented": n_words,
+            "total_pieces": int(n_pieces or 0),
         }
         if args.out:
             trained.coalesce(1).write.mode("overwrite").parquet(
@@ -1148,14 +1105,15 @@ def main(argv: list[str] | None = None) -> dict:
         wp_merges = learn_wordpiece(survivors, n_merges=args.wordpiece_merges)
         vocab = wp_vocab(survivors, wp_merges)
         wp_encoded = encode_corpus_wp(survivors, vocab).persist()
+        n_docs, n_tokens = wp_encoded.agg(
+            F.count("*"), F.sum("n_tokens")
+        ).first()
         summary["wordpiece"] = {
             "n_merges": len(wp_merges),
             "vocab_size": len(vocab),
             "top_merges": [m[2] for m in wp_merges[:5]],
-            "n_docs_encoded": wp_encoded.count(),
-            "total_tokens": int(
-                wp_encoded.agg(F.sum("n_tokens")).collect()[0][0] or 0
-            ),
+            "n_docs_encoded": n_docs,
+            "total_tokens": int(n_tokens or 0),
         }
         if args.out:
             spark.createDataFrame(

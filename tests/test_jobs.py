@@ -3,6 +3,8 @@ fixtures and returns a finite NDCG (the §7.6 minimum-slice contract)."""
 
 import math
 
+import pytest
+
 from albedo_spark.jobs import als, curation, popularity
 
 
@@ -742,24 +744,18 @@ def test_corpus_job_langid_stage(tmp_path):
     assert aq["quantile"] == "1/4" and aq["n_dropped"] >= 0
 
 
-def test_corpus_job_url_front_door(tmp_path):
-    """--url-col/--url-dedup/--host-cap (VERDICT r13 #4): the URL/host
-    hygiene stages run as the pipeline's FRONT DOOR — before any text
-    stage — deduping canonical-equal URLs (min id kept) and capping
-    docs per host, with the summary recording each stage's row
-    deltas."""
+def _url_documents(tmp_path, where="TRUE"):
+    """sf0.001 under ``tmp_path/sf`` with a deliberately messy,
+    collision-rich url column on the documents rows matching ``where``;
+    the other tables ride along untouched."""
     import os
     import shutil
 
     import duckdb
 
-    from albedo_spark.jobs.corpus import main
-
     src = "/root/testdata/sf0.001"
     sf = tmp_path / "sf"
     sf.mkdir()
-    # documents + a deliberately messy url column (collision-rich);
-    # other tables ride along untouched
     con = duckdb.connect()
     con.sql(f"""
         COPY (
@@ -769,12 +765,24 @@ def test_corpus_job_url_front_door(tmp_path):
                    || '?utm_source=x&id=' || CAST(doc_id % 2 AS VARCHAR)
                    || '#f' AS url
             FROM '{src}/documents.parquet'
+            WHERE {where}
         ) TO '{sf}/documents.parquet' (FORMAT PARQUET)
     """)
     for t in os.listdir(src):
         if t != "documents.parquet":
             shutil.copy(os.path.join(src, t), sf / t)
+    return sf
 
+
+def test_corpus_job_url_front_door(tmp_path):
+    """--url-col/--url-dedup/--host-cap (VERDICT r13 #4): the URL/host
+    hygiene stages run as the pipeline's FRONT DOOR — before any text
+    stage — deduping canonical-equal URLs (min id kept) and capping
+    docs per host, with the summary recording each stage's row
+    deltas."""
+    from albedo_spark.jobs.corpus import main
+
+    sf = _url_documents(tmp_path)
     summary = main([
         "--sf-dir", str(sf), "--out", str(tmp_path / "out"),
         "--url-col", "url", "--url-dedup", "--host-cap", "8",
@@ -786,6 +794,114 @@ def test_corpus_job_url_front_door(tmp_path):
     # 3 hosts x 10 canonical urls each, capped at 8 per host
     assert uh["n_after_host_cap"] == 24
     assert summary["n_docs"] == 24  # everything downstream saw 24 docs
+
+
+def test_corpus_job_benchmark_flags_job_budget(tmp_path, spark):
+    """The benchmark's flag set (URL front door + packing) runs no stage
+    twice for its summary: each URL stage count fills the persisted frame
+    the next stage reads, the core numbers are one aggregate, and
+    contamination runs once for its count, the packer and the writes.
+    Counting each number over its whole lineage took 71 to 77 jobs here;
+    this takes 50 to 53, depending on what ran earlier in the session."""
+    from albedo_spark.jobs.corpus import main
+    from tests.job_count import jobs_in_group
+
+    sf = _url_documents(tmp_path)
+    summary, jobs = jobs_in_group(spark, "corpus-benchmark-flags", lambda: main([
+        "--sf-dir", str(sf), "--out", str(tmp_path / "out"),
+        "--url-col", "url", "--url-dedup", "--host-cap", "8",
+        "--pack-capacity", "512",
+    ]))
+    assert list(summary.items()) == [
+        ("n_docs", 24), ("n_tokens", 1282), ("langs", {"und": 2, "en": 22}),
+        ("n_exact_dup_groups", 0), ("n_near_dup_pairs", 0), ("n_pii_docs", 0),
+        ("n_contaminated", 4), ("median_quality_x10k", 8035.0),
+        ("url_hygiene", {"n_before": 500, "n_after_url_dedup": 30,
+                         "host_cap": 8, "n_after_host_cap": 24}),
+        ("pack", {"capacity": 512, "n_docs_packed": 20, "n_chunks": 3}),
+        ("out", str(tmp_path / "out")),
+    ]
+    assert jobs <= 60, jobs
+
+
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_corpus_job_degenerate_inputs(tmp_path, n_rows):
+    """An empty and a one-row documents table run the URL front door,
+    a drop-only stage and packing to the end, and the counts are 0s and
+    1s. doc 7 is not a probe (doc_id < 5), so the one row survives."""
+    from albedo_spark.jobs.corpus import main
+
+    where = "doc_id = 7" if n_rows else "FALSE"
+    summary = main([
+        "--sf-dir", str(_url_documents(tmp_path, where)),
+        "--url-col", "url", "--url-dedup", "--host-cap", "8",
+        "--adaptive-quality", "1/4", "--pack-capacity", "512",
+    ])
+    assert summary["url_hygiene"] == {
+        "n_before": n_rows, "n_after_url_dedup": n_rows,
+        "host_cap": 8, "n_after_host_cap": n_rows,
+    }
+    assert summary["n_docs"] == n_rows
+    assert sum(summary["langs"].values()) == n_rows
+    assert summary["n_contaminated"] == 0
+    assert summary["adaptive_quality"] == {"quantile": "1/4", "n_dropped": 0}
+    assert summary["pack"]["n_docs_packed"] == n_rows
+    assert summary["pack"]["n_chunks"] == n_rows
+
+
+@pytest.mark.parametrize("regex_max", ["64", "1"])
+def test_corpus_job_drop_stage_funnel(tmp_path, regex_max):
+    """Every drop-only hygiene stage in one run, on the regex and on the
+    posting-join blocklist path. Each n_dropped is the previous stage's
+    row count minus this stage's, one count per stage; the values are
+    the ones two counts per stage gave, and the drops account for every
+    packed doc."""
+    import json
+
+    from albedo_spark.jobs.corpus import main
+
+    bl = tmp_path / "blocklist.txt"
+    bl.write_text("table scan\nhash join\nvector\n")
+    summary = main([
+        "--blocklist-phrases", str(bl),
+        "--phrase-regex-max", regex_max, "--containment-drop", "9/10",
+        "--span-dedup", "2", "--min-lm-score", "1",
+        "--adaptive-quality", "1/4", "--soft-quality", "7000:8500",
+        "--pack-capacity", "512",
+    ])
+    path = "regex" if regex_max == "64" else "phrase_posting"
+    assert json.dumps(summary) == json.dumps({
+        "n_docs": 500, "n_tokens": 27939, "langs": {"und": 34, "en": 466},
+        "n_exact_dup_groups": 0, "n_near_dup_pairs": 28, "n_pii_docs": 0,
+        "n_contaminated": 7, "median_quality_x10k": 7909.0,
+        "blocklist_phrases": {"path": path, "n_dropped": 385, "n_phrases": 3},
+        "containment_drop": {"threshold": "9/10", "n_dropped": 5},
+        "span_dedup": {"min_df": 2, "n_tokens_removed": 72},
+        "lm_filter": {"min_score_x10k": 1, "n_dropped": 0},
+        "adaptive_quality": {"quantile": "1/4", "n_dropped": 21},
+        "soft_quality": {"lo": 7000, "hi": 8500, "floor_x10k": 1000,
+                         "n_dropped": 38},
+        "pack": {"capacity": 512, "n_docs_packed": 44, "n_chunks": 4},
+    })
+    dropped = sum(v["n_dropped"] for v in summary.values()
+                  if isinstance(v, dict) and "n_dropped" in v)
+    assert summary["n_docs"] - summary["n_contaminated"] - dropped == 44
+
+
+def test_corpus_job_stage_drops_every_doc():
+    """An LM floor above every score drops every survivor; the stages
+    after it and the packer run on an empty frame. The numbers are the
+    ones two counts per stage gave."""
+    from albedo_spark.jobs.corpus import main
+
+    summary = main([
+        "--min-lm-score", "10001",
+        "--soft-quality", "7000:8500", "--pack-capacity", "512",
+    ])
+    assert summary["lm_filter"] == {"min_score_x10k": 10001, "n_dropped": 493}
+    assert summary["n_docs"] - summary["n_contaminated"] == 493
+    assert summary["soft_quality"]["n_dropped"] == 0
+    assert summary["pack"] == {"capacity": 512, "n_docs_packed": 0, "n_chunks": 0}
 
 
 def test_corpus_job_warc_input(tmp_path):

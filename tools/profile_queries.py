@@ -33,17 +33,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
 
+    sc = spark.sparkContext
+    # This session's own UI and application: another process may hold
+    # port 4040, and then the UI binds the next free port.
+    jobs_url = (
+        f"{sc.uiWebUrl.rstrip('/')}/api/v1/applications/{sc.applicationId}/jobs"
+    )
+
     def njobs() -> int:
         try:
-            apps = json.load(
-                urllib.request.urlopen("http://localhost:4040/api/v1/applications")
-            )
-            js = json.load(
-                urllib.request.urlopen(
-                    f"http://localhost:4040/api/v1/applications/{apps[0]['id']}/jobs"
-                )
-            )
-            return len(js)
+            return len(json.load(urllib.request.urlopen(jobs_url)))
         except Exception:
             return -1
 

@@ -21,8 +21,12 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _get(path: str):
-    return json.load(urllib.request.urlopen(f"http://localhost:4040/api/v1/{path}"))
+def _get(spark, path: str):
+    """GET ``path`` under this session's application in its own UI (the
+    port is whichever one the session bound, not always 4040)."""
+    sc = spark.sparkContext
+    base = f"{sc.uiWebUrl.rstrip('/')}/api/v1/applications/{sc.applicationId}"
+    return json.load(urllib.request.urlopen(f"{base}/{path}"))
 
 
 def main() -> None:
@@ -41,13 +45,12 @@ def main() -> None:
     fn = QUERIES[name]
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
 
-    app = _get("applications")[0]["id"]
-    e0 = {e["id"] for e in _get(f"applications/{app}/sql?length=1000")}
+    e0 = {e["id"] for e in _get(spark, "sql?length=1000")}
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     print(f"{name}: wall {time.perf_counter() - t0:.3f}s", flush=True)
 
-    for e in _get(f"applications/{app}/sql?details=true&planDescription=false&length=1000"):
+    for e in _get(spark, "sql?details=true&planDescription=false&length=1000"):
         if e["id"] in e0:
             continue
         print(f"\n=== SQL exec {e['id']} dur={e['duration']}ms {e['description'][:80]}")

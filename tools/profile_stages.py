@@ -21,8 +21,12 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _get(path: str):
-    return json.load(urllib.request.urlopen(f"http://localhost:4040/api/v1/{path}"))
+def _get(spark, path: str):
+    """GET ``path`` under this session's application in its own UI (the
+    port is whichever one the session bound, not always 4040)."""
+    sc = spark.sparkContext
+    base = f"{sc.uiWebUrl.rstrip('/')}/api/v1/applications/{sc.applicationId}"
+    return json.load(urllib.request.urlopen(f"{base}/{path}"))
 
 
 def main() -> None:
@@ -42,17 +46,16 @@ def main() -> None:
     fn = QUERIES[name]
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
 
-    app = _get("applications")[0]["id"]
-    j0 = {j["jobId"] for j in _get(f"applications/{app}/jobs")}
+    j0 = {j["jobId"] for j in _get(spark, "jobs")}
     for _ in range(repeats):
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
         print(f"{name}: wall {wall:.3f}s", flush=True)
 
-    jobs = [j for j in _get(f"applications/{app}/jobs") if j["jobId"] not in j0]
+    jobs = [j for j in _get(spark, "jobs") if j["jobId"] not in j0]
     print(f"jobs: {len(jobs)}")
-    stages = {s["stageId"]: s for s in _get(f"applications/{app}/stages")}
+    stages = {s["stageId"]: s for s in _get(spark, "stages")}
     tot = 0.0
     rows = []
     for j in sorted(jobs, key=lambda j: j["jobId"]):
