@@ -569,35 +569,101 @@ def write_bucketed(
 
 
 def table_num_buckets(spark: SparkSession, table: str) -> int:
-    """The bucket count a table was WRITTEN with, from the catalog —
-    every APPEND into a bucketed store must reuse it: an append that
-    guessed a different count would silently break the store's
-    no-shuffle layout property (the hazard ADVICE r12 flagged for the
-    BM25 postings and ADVICE r13 #4 for the PQ code rows — now one
-    shared helper instead of per-store copies)."""
+    """The bucket count a table was WRITTEN with, from the catalog."""
     for r in spark.sql(f"DESCRIBE FORMATTED `{table}`").collect():
         if r[0] and r[0].strip() == "Num Buckets":
             return int(r[1])
     raise ValueError(f"{table} is not a bucketed table")
 
 
-def append_bucket_count(
-    spark: SparkSession, table: str, requested: int | None
-) -> int:
-    """The bucket count an APPEND must write with: the table's own
-    catalog entry. A ``requested`` value is accepted only when it
-    agrees (back-compat for callers threading the build flag through);
-    a disagreement raises instead of silently mixing two bucket
-    layouts inside one store — the family-wide r14 rule shared by the
-    BM25, PQ, digest, MinHash, and SimHash appenders."""
-    nb = table_num_buckets(spark, table)
-    if requested is not None and requested != nb:
-        raise ValueError(
-            f"store `{table}` was built with {nb} buckets; an append "
-            f"with num_buckets={requested} would mix bucket layouts — "
-            "omit the parameter to use the catalog's count"
-        )
-    return nb
+def append_rows(df: DataFrame, table: str) -> None:
+    """Append ``df`` into an existing table in the table's own layout.
+
+    The layout of a store is decided once, by its builder
+    (``write_bucketed``): ``insertInto`` writes with the catalog's bucket
+    count, bucket and sort columns and partition columns, so no append
+    restates (or can contradict) them. ``insertInto`` matches columns by
+    position, so the frame is first projected onto the table's columns
+    by name (the schema order ``insertInto`` expects: data columns, then
+    partition columns); a missing or extra column raises. The names come
+    off the table's resolved schema, not ``catalog.listColumns``, which
+    launches Spark jobs to list them."""
+    cols = df.sparkSession.table(table).columns
+    extra = sorted(set(df.columns) - set(cols))
+    if extra:
+        raise ValueError(f"columns {extra} are not in table `{table}`")
+    df.select(*cols).write.insertInto(table)
+
+
+def private_copy_swap(
+    spark: SparkSession, table: str, suffixes: tuple[str, ...] = ("",)
+) -> tuple[list[str], Callable[[list[tuple[str, DataFrame]]], None]]:
+    """The one private-copy rewrite of a store: its members are
+    ``table + suffix`` for each suffix. Returns ``(adopted, publish)``.
+
+    Entry runs crash recovery. The publish is DROP + RENAME per member,
+    two catalog ops and not one transaction, so a crash in between
+    loses the NAME but not the DATA: a ``{table}__c<pid>{suffix}`` copy
+    of the newest pid whose published member is GONE is ADOPTED back
+    into place (it is completed rewrite output, and nothing could have
+    appended since — appends need the published name); every other
+    private copy is a stale pre-DROP leftover and is dropped.
+    ``adopted`` lists the adopted private names.
+
+    ``publish(members)`` takes ``(suffix, frame)`` pairs. Each private
+    member is created ``LIKE`` its published member — bucket spec, sort
+    columns and partition columns are copied from the catalog — and
+    filled through ``append_rows``. Every member is complete before any
+    publish, and members publish in the given order. The fill runs with
+    the auto-bucketed-scan pass off: with the bucketed scan forced, a
+    source read from the store itself is one partition per bucket, the
+    write's clustering is already satisfied, and each task folds its
+    bucket's small files into ONE — no Exchange anywhere (otherwise the
+    planner falls back to plain splits, because nothing downstream
+    "needs" the distribution, and the output re-fragments).
+    Concurrent rewrites of the SAME store within one process are not
+    supported (recovery would treat the other run's copy as debris);
+    at 100 TB on Iceberg/Delta this is their transactional rewrite."""
+    pref = f"{table.lower()}__c"
+    groups: dict[int, dict[str, str]] = {}
+    for name in (r.tableName for r in spark.sql("SHOW TABLES").collect()):
+        pid, _, suf = name[len(pref):].partition("_")
+        suf = "_" + suf if suf else ""
+        if name.startswith(pref) and pid.isdigit() and suf in suffixes:
+            groups.setdefault(int(pid), {})[suf] = name
+    newest = max(groups, default=None)
+    adopted: list[str] = []
+    for pid, privs in groups.items():
+        for suf, priv in sorted(privs.items()):
+            if pid == newest and not spark.catalog.tableExists(table + suf):
+                spark.sql(f"ALTER TABLE `{priv}` RENAME TO `{table}{suf}`")
+                spark.catalog.refreshTable(table + suf)
+                adopted.append(priv)
+            else:
+                spark.sql(f"DROP TABLE IF EXISTS `{priv}`")
+
+    def publish(members: list[tuple[str, DataFrame]]) -> None:
+        priv = f"{table}__c{os.getpid()}"
+        key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+        saved = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            for suf, frame in members:
+                spark.sql(f"DROP TABLE IF EXISTS `{priv}{suf}`")
+                drop_orphan_table_location(spark, priv + suf)
+                spark.sql(f"CREATE TABLE `{priv}{suf}` LIKE `{table}{suf}`")
+                append_rows(frame, priv + suf)
+        finally:
+            if saved is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, saved)
+        for suf, _ in members:
+            spark.sql(f"DROP TABLE IF EXISTS `{table}{suf}`")
+            spark.sql(f"ALTER TABLE `{priv}{suf}` RENAME TO `{table}{suf}`")
+            spark.catalog.refreshTable(table + suf)
+
+    return adopted, publish
 
 
 #: Single-child physical operators whose RDD keeps exactly its child's
@@ -879,90 +945,36 @@ def align_to_schema(
     return df.select(*cols), report
 
 
-def compact_table(
-    spark: SparkSession, table: str, bucket_col: str, num_buckets: int
-) -> dict:
+def compact_table(spark: SparkSession, table: str) -> dict:
     """Compact a bucketed managed table in place — the maintenance step
     for the persisted stores (``dedup_store``/``vector_store``): every
-    ``append_*`` adds ``num_buckets`` new files, so a store ingesting N
+    ``append_*`` adds up to one file per bucket, so a store ingesting N
     batches accumulates N×buckets small files and scan planning degrades
     exactly like the streaming sinks ``compact_partitions`` serves.
 
-    Full rewrite through ``write_bucketed`` into a PRIVATE pid-suffixed
-    table (reading the old table while writing the new one is safe — they
-    are distinct locations), then publish by catalog swap (DROP + RENAME).
-    The swap is two catalog ops, not one transaction: a crash in between
-    loses the NAME but not the DATA — so entry runs AUTOMATED recovery
-    for leftover ``{table}__c*`` private tables from a crashed run: if
-    the published name is GONE (crash landed between DROP and RENAME)
-    the newest private copy is ADOPTED back into place (it is the
-    completed compaction output, and nothing could have appended since —
-    appends need the published name); any remaining private copies are
-    stale pre-DROP leftovers and are dropped. Concurrent compaction of
-    the SAME table within one process is not supported (the recovery
-    would treat the other run's private table as debris) — at 100 TB
-    with Iceberg/Delta this whole dance is their transactional
-    compaction call. Returns {files_before, files_after, rows, adopted}.
-    """
-    import os as _os
-
+    A full rewrite through ``private_copy_swap``: the store's layout
+    (buckets, sort and partition columns) comes from the catalog, and
+    crash recovery runs on entry. Returns {files_before, files_after,
+    rows, adopted}."""
     from pyspark.sql import functions as F
 
-    # Crash recovery BEFORE anything else (see docstring).
-    pref = f"{table.lower()}__c"
-    orphans = sorted(
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith(pref)
-    )
-    adopted = None
-    if orphans and not spark.catalog.tableExists(table):
-        adopted = orphans.pop()
-        spark.sql(f"ALTER TABLE `{adopted}` RENAME TO `{table}`")
-        spark.catalog.refreshTable(table)
-    for t in orphans:
-        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
+    def n_files() -> int:
+        return (
+            spark.table(table)
+            .select(F.col("_metadata.file_path"))
+            .distinct()
+            .count()
+        )
 
-    before = (
-        spark.table(table)
-        .select(F.col("_metadata.file_path"))
-        .distinct()
-        .count()
-    )
+    adopted, publish = private_copy_swap(spark, table)
+    before = n_files()
     rows = spark.table(table).count()
-    tmp = f"{table}__c{_os.getpid()}"
-    # SHUFFLE-FREE compaction: force the bucket-aware scan (the planner's
-    # auto-bucketed-scan pass would otherwise fall back to plain splits
-    # here, because nothing downstream "needs" the distribution — and it
-    # also elides an explicit repartition(B, bucket_col) as redundant
-    # against the table's metadata, silently re-fragmenting the output).
-    # With the bucketed scan forced, the source is exactly one partition
-    # per bucket, the write's required clustering is already satisfied,
-    # and each task folds its bucket's N small files into ONE — a pure
-    # read-merge-write per bucket, no Exchange anywhere.
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        write_bucketed(spark.table(table), tmp, bucket_col, num_buckets)
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-    spark.sql(f"DROP TABLE `{table}`")
-    spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{table}`")
-    spark.catalog.refreshTable(table)  # invalidate cached file listing
-    after = (
-        spark.table(table)
-        .select(F.col("_metadata.file_path"))
-        .distinct()
-        .count()
-    )
+    publish([("", spark.table(table))])
     return {
         "files_before": before,
-        "files_after": after,
+        "files_after": n_files(),
         "rows": rows,
-        "adopted": adopted,
+        "adopted": adopted[0] if adopted else None,
     }
 
 
@@ -1051,7 +1063,8 @@ def sweep_dead_private_copies(
     spark: SparkSession, min_age_hours: float = 24.0
 ) -> dict:
     """Warehouse hygiene for the private-copy protocol: `_memo_store`
-    builders and `compact_table` write into pid-suffixed tables
+    builders and `private_copy_swap` (compaction, bloom merges) write
+    into pid-suffixed tables
     (``{name}__b<pid>`` / ``{name}__c<pid>``) and publish by rename —
     but a session that loses the publish race to a FOREIGN process (the
     in-memory-catalog case: the winner's table is invisible to our

@@ -1456,15 +1456,12 @@ def main(argv: list[str] | None = None) -> dict:
             from albedo_spark.io import compact_table
 
             summary["incremental"]["compaction"] = {
-                "digests": compact_table(spark, dig_tbl, "digest", 16),
-                "minhash": compact_table(spark, sig_tbl, "bkey", 16),
+                "digests": compact_table(spark, dig_tbl),
+                "minhash": compact_table(spark, sig_tbl),
             }
             if summary_inc_url is not None:
                 summary["incremental"]["compaction"]["urls"] = (
-                    compact_table(
-                        spark, f"{args.store_prefix}_urls",
-                        "canonical_url", 16,
-                    )
+                    compact_table(spark, f"{args.store_prefix}_urls")
                 )
             if blm_tbl:
                 from albedo_spark.operators.dedup_store import (

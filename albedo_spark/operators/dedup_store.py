@@ -41,15 +41,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from albedo_spark.io import (
+    append_rows,
+    drop_orphan_table_location,
+    private_copy_swap,
+    write_bucketed,
+)
 from albedo_spark.operators.dedup import minhash_sig_table
-
-
-def _append_bucket_count(spark, table: str, requested: int | None) -> int:
-    """Catalog-derived append bucket count (io.append_bucket_count —
-    the family-wide r14 rule; explicit values validated)."""
-    from albedo_spark.io import append_bucket_count
-
-    return append_bucket_count(spark, table, requested)
 
 
 def minhash_band_rows(
@@ -104,8 +102,6 @@ def build_signature_store(
     ``bkey``. Size ``num_buckets`` for the cluster (hundreds at 100 TB);
     every future ``dedup_incremental`` inherits this layout shuffle-free.
     """
-    from albedo_spark.io import write_bucketed
-
     bands = minhash_band_rows(
         corpus, text_col, id_col, num_hashes, rows_per_band, shingle_n
     )
@@ -120,25 +116,17 @@ def append_signatures(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    num_buckets: int | None = None,
 ) -> None:
-    """Append the batch's signatures into the store (bucket count from
-    the TABLE'S CATALOG, so the layout property survives whatever flags
-    the append run carries — the family-wide r14 rule; an explicit
-    ``num_buckets`` is validated and raises on disagreement). Call AFTER
-    the batch's ``dedup_incremental`` pairs are consumed: the store is
-    re-listed at action time, so appending first would make the batch
-    self-match through the store."""
-    bands = minhash_band_rows(
-        batch, text_col, id_col, num_hashes, rows_per_band, shingle_n
-    )
-    nb = _append_bucket_count(batch.sparkSession, table, num_buckets)
-    (
-        bands.write.mode("append")
-        .bucketBy(nb, "bkey")
-        .sortBy("bkey")
-        .format("parquet")
-        .saveAsTable(table)
+    """Append the batch's signatures into the store, in the layout the
+    store was built with (``io.append_rows``). Call AFTER the batch's
+    ``dedup_incremental`` pairs are consumed: the store is re-listed at
+    action time, so appending first would make the batch self-match
+    through the store."""
+    append_rows(
+        minhash_band_rows(
+            batch, text_col, id_col, num_hashes, rows_per_band, shingle_n
+        ),
+        table,
     )
 
 
@@ -244,7 +232,6 @@ def build_digest_store(
     text, bucketed on the digest — the exact-dedup twin of the MinHash
     signature store. Run exact incremental dedup FIRST (it kills the bulk
     of duplication for one narrow join), MinHash incremental second."""
-    from albedo_spark.io import write_bucketed
     from albedo_spark.operators.dedup import normalize_text
 
     d = (
@@ -372,7 +359,6 @@ def append_digests(
     resolution: DataFrame,
     table: str,
     id_col: str = "doc_id",
-    num_buckets: int | None = None,
 ) -> None:
     """Append the NOVEL digests of a resolved batch (``is_dup = false``,
     non-NULL digest — i.e. each new digest's keeper) into the store,
@@ -384,20 +370,13 @@ def append_digests(
     against it, silently double-counting that digest's batch rows. The
     guard joins on the store's bucket column (no store-side Exchange)
     and also makes a replayed append a no-op — the streaming twin's
-    idempotence for batch callers. Bucket count from the table's
-    catalog (r14 rule; explicit values are validated)."""
-    spark = resolution.sparkSession
-    nb = _append_bucket_count(spark, table, num_buckets)
-    seen = spark.table(table).select("digest")
-    (
+    idempotence for batch callers."""
+    seen = resolution.sparkSession.table(table).select("digest")
+    append_rows(
         resolution.where(~F.col("is_dup") & F.col("digest").isNotNull())
         .select("digest", F.col(id_col).alias("keeper_id"))
-        .join(seen, "digest", "left_anti")
-        .write.mode("append")
-        .bucketBy(nb, "digest")
-        .sortBy("digest")
-        .format("parquet")
-        .saveAsTable(table)
+        .join(seen, "digest", "left_anti"),
+        table,
     )
 
 
@@ -424,7 +403,6 @@ def build_url_store(
     expensive per row. NULL urls are not stored (they carry no
     fetch identity — the digest-store NULL posture applied to URLs)."""
     from albedo_spark.functions.urls import canonicalize_url
-    from albedo_spark.io import write_bucketed
 
     d = (
         corpus.where(F.col(url_col).isNotNull())
@@ -557,7 +535,6 @@ def append_urls(
     resolution: DataFrame,
     table: str,
     id_col: str = "doc_id",
-    num_buckets: int | None = None,
 ) -> None:
     """Append the NOVEL canonical URLs of a resolved batch
     (``is_dup = false``, non-NULL canonical_url — each new URL's
@@ -568,22 +545,15 @@ def append_urls(
     not plant a duplicate key, and (b) replaying an already-consumed
     resolution appends nothing — the streaming twin's idempotence,
     available to batch callers. The guard joins on the store's bucket
-    column (no store-side Exchange). Bucket count from the table's
-    catalog (r14 rule; explicit values are validated)."""
-    spark = resolution.sparkSession
-    nb = _append_bucket_count(spark, table, num_buckets)
-    seen = spark.table(table).select("canonical_url")
-    (
+    column (no store-side Exchange)."""
+    seen = resolution.sparkSession.table(table).select("canonical_url")
+    append_rows(
         resolution.where(
             ~F.col("is_dup") & F.col("canonical_url").isNotNull()
         )
         .select("canonical_url", F.col(id_col).alias("keeper_id"))
-        .join(seen, "canonical_url", "left_anti")
-        .write.mode("append")
-        .bucketBy(nb, "canonical_url")
-        .sortBy("canonical_url")
-        .format("parquet")
-        .saveAsTable(table)
+        .join(seen, "canonical_url", "left_anti"),
+        table,
     )
 
 
@@ -649,8 +619,6 @@ def build_simhash_store(
     """Persist the corpus's SimHash band rows bucketed on ``bkey`` — the
     Hamming-granularity member of the store family (digest = exact,
     MinHash = Jaccard, ANN = cosine, SimHash = Hamming)."""
-    from albedo_spark.io import write_bucketed
-
     rows = simhash_band_rows(corpus, text_col, id_col, num_bits, num_bands)
     write_bucketed(rows, table, "bkey", num_buckets=num_buckets)
 
@@ -662,19 +630,12 @@ def append_simhash(
     id_col: str = "doc_id",
     num_bits: int = 16,
     num_bands: int = 4,
-    num_buckets: int | None = None,
 ) -> None:
-    """Append the batch's band rows (bucket count from the table's
-    catalog — r14 rule, explicit values validated; call AFTER the
-    batch's ``simhash_incremental`` pairs are consumed)."""
-    rows = simhash_band_rows(batch, text_col, id_col, num_bits, num_bands)
-    nb = _append_bucket_count(batch.sparkSession, table, num_buckets)
-    (
-        rows.write.mode("append")
-        .bucketBy(nb, "bkey")
-        .sortBy("bkey")
-        .format("parquet")
-        .saveAsTable(table)
+    """Append the batch's band rows in the store's own layout (call
+    AFTER the batch's ``simhash_incremental`` pairs are consumed)."""
+    append_rows(
+        simhash_band_rows(batch, text_col, id_col, num_bits, num_bands),
+        table,
     )
 
 
@@ -897,8 +858,6 @@ def build_bloom_sidecar(
     bitmap stops fitting; shard the sidecar by a digest prefix and probe
     each batch row against its shard's generations (same expressions,
     grouped broadcast)."""
-    from albedo_spark.io import drop_orphan_table_location
-
     bm = bloom_bitmap(spark.table(store_table), key_col, num_bits, num_hashes)
     row = bm.select(
         F.lit(num_bits).alias("num_bits"),
@@ -924,38 +883,24 @@ def append_bloom(
     spark = novel.sparkSession
     meta = spark.table(sidecar_table).select("num_bits", "num_hashes").first()
     bm = bloom_bitmap(novel, key_col, meta.num_bits, meta.num_hashes)
-    (
+    append_rows(
         bm.select(
             F.lit(meta.num_bits).alias("num_bits"),
             F.lit(meta.num_hashes).alias("num_hashes"),
             "bits",
-        )
-        .write.mode("append")
-        .format("parquet")
-        .saveAsTable(sidecar_table)
+        ),
+        sidecar_table,
     )
 
 
 def merge_bloom_generations(spark: SparkSession, sidecar_table: str) -> int:
     """Collapse the sidecar's generation rows into one by element-wise OR
     (blooms are union-mergeable) — the probe's per-row work drops from
-    G generations back to 1. Same private-table + DROP/RENAME publish as
-    ``io.compact_table``, with the same crashed-swap adoption on entry;
-    a crash that loses both copies only costs a rebuild (derived data).
-    Returns the number of generations merged."""
-    import os as _os
-
-    pref = f"{sidecar_table.lower()}__m"
-    orphans = sorted(
-        t.name for t in spark.catalog.listTables() if t.name.startswith(pref)
-    )
-    if orphans and not spark.catalog.tableExists(sidecar_table):
-        adopted = orphans.pop()
-        spark.sql(f"ALTER TABLE `{adopted}` RENAME TO `{sidecar_table}`")
-        spark.catalog.refreshTable(sidecar_table)
-    for t in orphans:
-        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
-
+    G generations back to 1. Published through ``io.private_copy_swap``,
+    with its crashed-swap adoption on entry; a crash that loses both
+    copies only costs a rebuild (derived data). Returns the number of
+    generations merged."""
+    _, publish = private_copy_swap(spark, sidecar_table)
     side = spark.table(sidecar_table)
     params = side.select("num_bits", "num_hashes").distinct().collect()
     if len(params) != 1:
@@ -977,10 +922,7 @@ def merge_bloom_generations(spark: SparkSession, sidecar_table: str) -> int:
         F.lit(num_hashes).alias("num_hashes"),
         "bits",
     )
-    tmp = f"{sidecar_table}__m{_os.getpid()}"
-    merged.write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    spark.sql(f"DROP TABLE IF EXISTS `{sidecar_table}`")
-    spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{sidecar_table}`")
+    publish([("", merged)])
     return int(generations)
 
 
@@ -1092,8 +1034,6 @@ def build_sharded_bloom_sidecar(
     SHARD: total capacity = num_shards × num_bits, so size num_shards
     for ~10 bits/key per shard and grow shards, not bitmap width, as
     the store grows). Derived data; rebuild from the store on loss."""
-    from albedo_spark.io import drop_orphan_table_location
-
     rows = sharded_bloom_rows(
         spark.table(store_table), key_col, num_shards, num_bits, num_hashes
     )
@@ -1118,7 +1058,7 @@ def append_sharded_bloom(
     rows = sharded_bloom_rows(
         novel, key_col, meta.num_shards, meta.num_bits, meta.num_hashes
     )
-    rows.write.mode("append").format("parquet").saveAsTable(sidecar_table)
+    append_rows(rows, sidecar_table)
 
 
 def sharded_bloom_maybe(
@@ -1166,10 +1106,9 @@ def merge_sharded_bloom_generations(
 ) -> int:
     """Collapse a sharded sidecar's generations to one per shard by
     element-wise OR (the ``merge_bloom_generations`` discipline at shard
-    granularity — same private-table + RENAME publish). Returns the
-    generation count merged (rows // num_shards)."""
-    import os as _os
-
+    granularity — same ``io.private_copy_swap`` publish and crash
+    recovery). Returns the generation count merged (rows // num_shards)."""
+    _, publish = private_copy_swap(spark, sidecar_table)
     side = spark.table(sidecar_table)
     params = side.select("num_shards", "num_bits", "num_hashes").distinct().collect()
     if len(params) != 1:
@@ -1197,10 +1136,7 @@ def merge_sharded_bloom_generations(
         F.lit(nh).alias("num_hashes"),
         "bits",
     )
-    tmp = f"{sidecar_table}__m{_os.getpid()}"
-    merged.write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    spark.sql(f"DROP TABLE IF EXISTS `{sidecar_table}`")
-    spark.sql(f"ALTER TABLE `{tmp}` RENAME TO `{sidecar_table}`")
+    publish([("", merged)])
     return int(generations)
 
 

@@ -221,13 +221,13 @@ def build_bm25_store(
         drop_orphan_table_location(spark, table + "_fwd")
 
 
-def _table_num_buckets(spark: SparkSession, table: str) -> int:
-    """Catalog-derived bucket count — the shared ``io.table_num_buckets``
-    (factored out in r14 so the PQ appender uses the same source of
-    truth instead of a caller-guessed count, ADVICE r13 #4)."""
-    from albedo_spark.io import table_num_buckets
-
-    return table_num_buckets(spark, table)
+def _stats_frame(spark: SparkSession, gen, n_docs, dl_total) -> DataFrame:
+    """One ``{table}_stats`` generation row from exact integer scalars."""
+    n, t = int(n_docs), int(dl_total)
+    return spark.createDataFrame(
+        [(int(gen), n, t, (100 * t) // n)],
+        "gen long, n_docs bigint, dl_total bigint, avgdl_x100 bigint",
+    )
 
 
 def append_bm25_postings(
@@ -270,6 +270,7 @@ def append_bm25_postings(
     at-least-once contract already guarantees is also the repair.
     Returns ``{admitted, generation}`` plus, on the admitted-0 path,
     the ``repair`` report."""
+    from albedo_spark.io import append_rows
     from albedo_spark.operators.vector_store import admit_novel, mirror_bloom
 
     spark = docs.sparkSession
@@ -325,30 +326,16 @@ def append_bm25_postings(
         # the ids so replays skip them.
         return {"admitted": n_novel, "generation": None}
     gen = stats_raw.agg(F.max("gen")).first()[0] + 1
-    nb = _table_num_buckets(spark, table)
     rows = tf.join(dl, "doc_id").join(dfreq, "w").select(
         "w", "doc_id", "tf", "dl", "df"
     ).localCheckpoint(eager=False)
-    (
-        rows.write.mode("append")
-        .bucketBy(nb, "w")
-        .sortBy("w")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    append_rows(rows, table)
     if spark.catalog.tableExists(table + "_fwd"):
-        (
-            rows.write.mode("append")
-            .bucketBy(nb, "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(table + "_fwd")
-        )
-    spark.createDataFrame(
-        [(int(gen), int(stats_row["n_docs"]), int(stats_row["_t"]),
-          (100 * int(stats_row["_t"])) // int(stats_row["n_docs"]))],
-        "gen long, n_docs bigint, dl_total bigint, avgdl_x100 bigint",
-    ).write.mode("append").format("parquet").saveAsTable(table + "_stats")
+        append_rows(rows, table + "_fwd")
+    append_rows(
+        _stats_frame(spark, gen, stats_row["n_docs"], stats_row["_t"]),
+        table + "_stats",
+    )
     return {"admitted": n_novel, "generation": int(gen)}
 
 
@@ -363,56 +350,28 @@ def compact_bm25_store(spark: SparkSession, table: str) -> dict:
     ``{table}_fwd`` companion (when present) is rewritten from the same
     frame.
 
-    Swap discipline = ``compact_table``'s pid-suffixed private-copy
-    protocol, extended to the store's three members (VERDICT r13 #5):
-    every member is fully written as ``{table}__c<pid>{suffix}`` FIRST,
-    then published by DROP + RENAME in the order postings → forward →
-    stats. Stats go LAST because that ordering's crash windows are the
-    benign ones: new postings under old multi-generation stats still
-    read correctly (the multi-gen path recomputes df and merges stats
-    by exact sums, which compaction preserves), whereas a new
-    single-row stats table over old postings would silently trust
-    stale segment-local df. Entry runs AUTOMATED recovery: a stranded
-    private member whose published name is GONE (crash landed between
-    its DROP and RENAME) is ADOPTED back; private members alongside
-    live published names are pre-DROP debris and are dropped —
-    ``io.sweep_dead_private_copies`` covers the same names (the
-    ``__c<pid>_stats``/``__c<pid>_fwd`` forms match its pattern) for
-    sessions that died without re-running the compact. At 100 TB on
-    Iceberg/Delta this whole dance is their transactional compaction
-    call. Search results are unchanged by construction (same rows,
-    same recomputed statistics a rebuild would produce). Returns
-    ``{files_before, files_after, n_docs, adopted}``."""
-    import os as _os
+    Swap discipline = ``io.private_copy_swap`` over the store's three
+    members (VERDICT r13 #5): every member is fully written as
+    ``{table}__c<pid>{suffix}`` FIRST, in the layout the catalog holds
+    for it, then published by DROP + RENAME in the order postings →
+    forward → stats. Stats go LAST because that ordering's crash
+    windows are the benign ones: new postings under old
+    multi-generation stats still read correctly (the multi-gen path
+    recomputes df and merges stats by exact sums, which compaction
+    preserves), whereas a new single-row stats table over old postings
+    would silently trust stale segment-local df. Entry runs the swap's
+    crash recovery (a stranded private member whose published name is
+    GONE is ADOPTED back; the rest are debris and are dropped), and
+    ``io.sweep_dead_private_copies`` covers the same names for
+    sessions that died without re-running the compact. Search results
+    are unchanged by construction (same rows, same recomputed
+    statistics a rebuild would produce). Returns ``{files_before,
+    files_after, n_docs, adopted}``."""
+    from albedo_spark.io import private_copy_swap
 
-    from albedo_spark.io import drop_orphan_table_location, write_bucketed
-
-    members = {"": table, "_fwd": table + "_fwd", "_stats": table + "_stats"}
-    # ---- crash recovery BEFORE anything else (see docstring) ----
-    pref = f"{table.lower()}__c"
-    groups: dict[str, dict[str, str]] = {}
-    for t in spark.catalog.listTables():
-        if not t.name.startswith(pref):
-            continue
-        rest = t.name[len(pref):]
-        pid, _, suf = rest.partition("_")
-        if not pid.isdigit() or ("_" + suf if suf else "") not in members:
-            continue
-        groups.setdefault(pid, {})["_" + suf if suf else ""] = t.name
-    adopted: list[str] = []
-    gkeys = sorted(groups)
-    for suf, priv in sorted(groups[gkeys[-1]].items()) if gkeys else ():
-        if not spark.catalog.tableExists(members[suf]):
-            spark.sql(f"ALTER TABLE `{priv}` RENAME TO `{members[suf]}`")
-            spark.catalog.refreshTable(members[suf])
-            adopted.append(priv)
-        else:
-            spark.sql(f"DROP TABLE IF EXISTS `{priv}`")
-    for k in gkeys[:-1]:
-        for priv in groups[k].values():
-            spark.sql(f"DROP TABLE IF EXISTS `{priv}`")
-
-    nb = _table_num_buckets(spark, table)
+    adopted, publish = private_copy_swap(
+        spark, table, ("", "_fwd", "_stats")
+    )
     files_before = len(spark.table(table).inputFiles())
     post = spark.table(table)
     dfreq = post.groupBy("w").agg(F.count("*").alias("df"))
@@ -429,24 +388,14 @@ def compact_bm25_store(spark: SparkSession, table: str) -> dict:
     merged = stats_raw.agg(
         F.sum("n_docs").alias("n_docs"), F.sum("dl_total").alias("_t")
     ).first()
-    n_docs, dl_total = int(merged["n_docs"]), int(merged["_t"])
+    n_docs = int(merged["n_docs"])
     has_fwd = spark.catalog.tableExists(table + "_fwd")
-    # ---- private writes: every member complete before any publish ----
-    priv = f"{table}__c{_os.getpid()}"
-    write_bucketed(rows, priv, "w", num_buckets=nb)
-    if has_fwd:
-        write_bucketed(rows, priv + "_fwd", "doc_id", num_buckets=nb)
-    spark.sql(f"DROP TABLE IF EXISTS `{priv}_stats`")
-    drop_orphan_table_location(spark, priv + "_stats")
-    spark.createDataFrame(
-        [(0, n_docs, dl_total, (100 * dl_total) // n_docs)],
-        "gen long, n_docs bigint, dl_total bigint, avgdl_x100 bigint",
-    ).write.mode("overwrite").format("parquet").saveAsTable(priv + "_stats")
-    # ---- publish: postings -> forward -> stats (stats last) ----
-    for suf in ("",) + (("_fwd",) if has_fwd else ()) + ("_stats",):
-        spark.sql(f"DROP TABLE IF EXISTS `{members[suf]}`")
-        spark.sql(f"ALTER TABLE `{priv}{suf}` RENAME TO `{members[suf]}`")
-        spark.catalog.refreshTable(members[suf])
+    # every member complete before any publish; stats publish last
+    publish(
+        [("", rows)]
+        + ([("_fwd", rows)] if has_fwd else [])
+        + [("_stats", _stats_frame(spark, 0, n_docs, merged["_t"]))]
+    )
     rows.unpersist()
     return {
         "files_before": files_before,
@@ -479,6 +428,7 @@ def repair_bm25_store(spark: SparkSession, table: str) -> dict:
     nothing. Stats totals EXCEEDING the postings indicate real
     corruption this function cannot invent rows for; that raises with a
     pointer to the audit. Returns ``{repaired, stats_row, fwd_rows}``."""
+    from albedo_spark.io import append_rows
 
     stats_raw = spark.table(table + "_stats")
     if "gen" not in stats_raw.columns:
@@ -505,25 +455,15 @@ def repair_bm25_store(spark: SparkSession, table: str) -> dict:
     if miss_n > 0:
         gen = int(summed["g"]) + 1
         stats_row = (gen, miss_n, miss_t, (100 * miss_t) // miss_n)
-        spark.createDataFrame(
-            [stats_row],
-            "gen long, n_docs bigint, dl_total bigint, avgdl_x100 bigint",
-        ).write.mode("append").format("parquet").saveAsTable(table + "_stats")
+        append_rows(_stats_frame(spark, gen, miss_n, miss_t), table + "_stats")
     fwd_rows = 0
     if spark.catalog.tableExists(table + "_fwd"):
         fwd = spark.table(table + "_fwd")
         if fwd.count() != post.count():
-            nb = _table_num_buckets(spark, table + "_fwd")
             missing = post.exceptAll(fwd).localCheckpoint()
             fwd_rows = missing.count()
             if fwd_rows:
-                (
-                    missing.write.mode("append")
-                    .bucketBy(nb, "doc_id")
-                    .sortBy("doc_id")
-                    .format("parquet")
-                    .saveAsTable(table + "_fwd")
-                )
+                append_rows(missing, table + "_fwd")
     return {
         "repaired": bool(stats_row) or fwd_rows > 0,
         "stats_row": stats_row,

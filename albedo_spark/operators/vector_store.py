@@ -104,20 +104,17 @@ def append_vectors(
     id_col: str = "vec_id",
     num_planes: int = 8,
     seed: int = 42,
-    num_buckets: int = 16,
     quantize: bool = False,
 ) -> None:
-    """Add a new batch's vectors to the index (same bucket spec — the
-    layout property survives the append). ``quantize`` must match the
+    """Add a new batch's vectors to the index in the layout the store
+    was built with (``io.append_rows``). ``quantize`` must match the
     store's build-time representation (mixed schemas fail loudly on
     write)."""
-    (
-        _hashed(batch, dim, vec_col, id_col, num_planes, seed, quantize)
-        .write.mode("append")
-        .bucketBy(num_buckets, "bucket")
-        .sortBy("bucket")
-        .format("parquet")
-        .saveAsTable(table)
+    from albedo_spark.io import append_rows
+
+    append_rows(
+        _hashed(batch, dim, vec_col, id_col, num_planes, seed, quantize),
+        table,
     )
 
 
@@ -517,7 +514,6 @@ def append_pq_vectors(
     subdim: int = 16,
     scale: int = 1000,
     codebooks: list | None = None,
-    num_buckets: int | None = None,
     replay_guard: bool = True,
 ) -> None:
     """Admit/append core of the PQ store (shared with the streaming sink
@@ -532,19 +528,13 @@ def append_pq_vectors(
     fresh batch never scans the store (O(batch) per append — VERDICT
     r11 #2); without one it falls back to the broadcast-semi store
     probe. The sidecar is kept in lockstep automatically
-    (``mirror_bloom`` before the row write).
-
-    The bucket count comes from the TABLE'S CATALOG entry, never the
-    caller (ADVICE r13 #4): an append run with different flags than the
-    build would otherwise silently mix bucket layouts and break the
-    store's no-shuffle probe. Passing ``num_buckets`` explicitly is
-    validated against the catalog and raises on disagreement."""
-    from albedo_spark.io import append_bucket_count
+    (``mirror_bloom`` before the row write). The code rows land in the
+    store's own bucket and partition layout (``io.append_rows``)."""
+    from albedo_spark.io import append_rows
     from albedo_spark.operators.clustering import integerize_embeddings
     from albedo_spark.operators.pq import encode_residual_codes
 
     spark = batch.sparkSession
-    nb = append_bucket_count(spark, table, num_buckets)
     cb = _load_codebooks(spark, table, m, subdim, codebooks)
     cents = spark.table(table + "_cents")
     vectors = integerize_embeddings(batch, scale=scale)
@@ -559,7 +549,6 @@ def append_pq_vectors(
     # the batch must supply the same columns (failing loudly here beats
     # a mis-partitioned append the pruned probe would silently miss).
     pcols = [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
-    w = rows.write.mode("append")
     if pcols:
         missing = [c for c in pcols if c not in batch.columns]
         if missing:
@@ -568,13 +557,7 @@ def append_pq_vectors(
                 f"missing column(s) {missing}"
             )
         rows = rows.join(batch.select("vec_id", *pcols), "vec_id")
-        w = rows.write.mode("append").partitionBy(*pcols)
-    (
-        w.bucketBy(nb, "cluster_id")
-        .sortBy("cluster_id")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    append_rows(rows, table)
 
 
 def pq_store_topk(

@@ -8531,8 +8531,7 @@ def _q153_pq_store(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
             kc=8, m=4, subdim=16, num_buckets=8,
         )
         append_pq_vectors(
-            emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3"), t,
-            m=4, subdim=16, num_buckets=8,
+            emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3"), t, m=4, subdim=16
         )
 
     return _memo_store(
@@ -9082,8 +9081,7 @@ def q158_pq_store_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             kc=8, m=4, subdim=16, num_buckets=8, codebooks="train",
         )
         append_pq_vectors(
-            emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3"), t,
-            m=4, subdim=16, num_buckets=8,
+            emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3"), t, m=4, subdim=16
         )
 
     table = _memo_store(

@@ -326,6 +326,7 @@ def run_to_dedup_store(
     output is novel CONTENT). Reading ``out_path`` back discovers
     ``ingest_batch`` as a partition column.
     """
+    from albedo_spark.io import append_rows
     from albedo_spark.operators.dedup import normalize_text
     from albedo_spark.operators.dedup_store import build_digest_store
 
@@ -350,16 +351,12 @@ def run_to_dedup_store(
             keep.drop("_digest").write.mode("overwrite").parquet(
                 f"{out_path}/ingest_batch={batch_id}"
             )
-            (
+            append_rows(
                 keep.select(
                     F.col("_digest").alias("digest"),
                     F.col(id_col).alias("keeper_id"),
-                )
-                .write.mode("append")
-                .bucketBy(num_buckets, "digest")
-                .sortBy("digest")
-                .format("parquet")
-                .saveAsTable(table)
+                ),
+                table,
             )
         finally:
             keep.unpersist()
@@ -402,6 +399,7 @@ def run_to_url_store(
     same-directory overwrite, never duplicate rows. NULL-url rows
     carry no fetch identity and are not ingested."""
     from albedo_spark.functions.urls import canonicalize_url
+    from albedo_spark.io import append_rows
     from albedo_spark.operators.dedup_store import build_url_store
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -427,16 +425,12 @@ def run_to_url_store(
             keep.drop("_curl").write.mode("overwrite").parquet(
                 f"{out_path}/ingest_batch={batch_id}"
             )
-            (
+            append_rows(
                 keep.select(
                     F.col("_curl").alias("canonical_url"),
                     F.col(id_col).alias("keeper_id"),
-                )
-                .write.mode("append")
-                .bucketBy(num_buckets, "canonical_url")
-                .sortBy("canonical_url")
-                .format("parquet")
-                .saveAsTable(table)
+                ),
+                table,
             )
         finally:
             keep.unpersist()
@@ -581,8 +575,7 @@ def run_to_minhash_store(
             exclude_store_ids=batch.select(id_col),
         ),
         append_novel=lambda novel, t: append_signatures(
-            novel, t, text_col, id_col,
-            num_hashes, rows_per_band, shingle_n, num_buckets,
+            novel, t, text_col, id_col, num_hashes, rows_per_band, shingle_n,
         ),
     )
 
@@ -632,7 +625,7 @@ def run_to_simhash_store(
             exclude_store_ids=batch.select(id_col),
         ),
         append_novel=lambda novel, t: append_simhash(
-            novel, t, text_col, id_col, num_bits, num_bands, num_buckets,
+            novel, t, text_col, id_col, num_bits, num_bands,
         ),
     )
 
@@ -681,7 +674,7 @@ def run_to_vector_store(
             exclude_store_ids=batch.select(id_col),
         ),
         append_novel=lambda novel, t: append_vectors(
-            novel, t, dim, vec_col, id_col, num_planes, seed, num_buckets,
+            novel, t, dim, vec_col, id_col, num_planes, seed,
         ),
     )
 

@@ -151,7 +151,7 @@ def test_append_bloom_keeps_lockstep(spark):
         r1 = exact_dedup_incremental(
             b1, "blq_store2", bloom_table="blq_side2"
         ).localCheckpoint()
-        append_digests(r1, "blq_store2", num_buckets=8)
+        append_digests(r1, "blq_store2")
         append_bloom(
             r1.where(~F.col("is_dup") & F.col("digest").isNotNull()),
             "blq_side2",
@@ -285,7 +285,7 @@ def test_sharded_sidecar_equivalence_lockstep_and_merge(spark):
                        stride=7)
         if shards is not None:
             build_id_bloom(spark, tbl, num_bits=1 << 10, num_shards=shards)
-        append_pq_vectors(batch, tbl, m=4, subdim=16, num_buckets=4)
+        append_pq_vectors(batch, tbl, m=4, subdim=16)
         rows = sorted(tuple(r) for r in spark.table(tbl).collect())
         return tbl, rows
 
@@ -444,3 +444,55 @@ def test_url_sharded_bloom_resolution_equivalence(spark):
         assert any(r[2] for r in plain)
     finally:
         _drop(spark, "blus_store", "blus_side")
+
+
+@pytest.mark.parametrize("shards", [0, 4], ids=["monolithic", "sharded"])
+def test_bloom_merge_crash_adoption(spark, shards):
+    """Both bloom merges publish through the shared private-copy swap. A
+    crash between its DROP and RENAME strands the merged sidecar under
+    ``{sidecar}__c<pid>`` with the published name gone: the next merge
+    ADOPTS it, and admit decisions are unchanged. A stale private copy
+    beside a live sidecar is debris and is dropped."""
+    from albedo_spark.operators.dedup_store import (
+        merge_sharded_bloom_generations,
+    )
+    from albedo_spark.operators.vector_store import (
+        admit_novel,
+        build_id_bloom,
+        mirror_bloom,
+    )
+
+    merge = merge_sharded_bloom_generations if shards else merge_bloom_generations
+    tbl = f"blq_crash_{shards}"
+    side = tbl + "_bloom"
+    ids = spark.range(0, 60).select(F.col("id").alias("vec_id"))
+    probe = spark.range(40, 120).select(F.col("id").alias("vec_id"))
+
+    def admitted():
+        return sorted(r.vec_id for r in admit_novel(probe, tbl).collect())
+
+    try:
+        ids.where("vec_id < 30").write.mode("overwrite").saveAsTable(tbl)
+        build_id_bloom(spark, tbl, num_bits=1 << 10, num_shards=shards)
+        late = ids.where("vec_id >= 30")
+        mirror_bloom(late, tbl)  # second generation, then the rows
+        late.write.mode("append").saveAsTable(tbl)
+        want = admitted()
+        assert want == list(range(60, 120))
+
+        # crash window: the private copy is complete, the published
+        # sidecar was dropped, the RENAME never ran
+        spark.table(side).write.saveAsTable(f"{side}__c999")
+        spark.sql(f"DROP TABLE `{side}`")
+        assert merge(spark, side) == 2  # adopted, then merged
+        assert not spark.catalog.tableExists(f"{side}__c999")
+        assert spark.table(side).count() == max(shards, 1)  # one generation
+        assert admitted() == want
+
+        # stale private copy beside a live sidecar: dropped
+        spark.table(side).write.saveAsTable(f"{side}__c123")
+        assert merge(spark, side) == 1
+        assert not spark.catalog.tableExists(f"{side}__c123")
+        assert admitted() == want
+    finally:
+        _drop(spark, tbl, side, f"{side}__c999", f"{side}__c123")

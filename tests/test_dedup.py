@@ -340,7 +340,7 @@ def test_incremental_append_advances_history(spark):
             (r.id_a, r.id_b)
             for r in dedup_incremental(b1, "sigstore_app", max_bucket=nocap).collect()
         }
-        append_signatures(b1, "sigstore_app", num_buckets=8)
+        append_signatures(b1, "sigstore_app")
         inc2 = {
             (r.id_a, r.id_b)
             for r in dedup_incremental(b2, "sigstore_app", max_bucket=nocap).collect()
@@ -457,7 +457,7 @@ def test_incremental_batches_leave_no_cache_entries(spark):
         for k in (1, 2, 3):
             batch = docs.where(f"doc_id % 4 = {k}")
             dedup_incremental(batch, "sigstore_leak").collect()
-            append_signatures(batch, "sigstore_leak", num_buckets=8)
+            append_signatures(batch, "sigstore_leak")
             assert cache_mgr.isEmpty(), f"batch {k} left a cached frame"
     finally:
         spark.sql("DROP TABLE IF EXISTS sigstore_leak")
@@ -651,7 +651,7 @@ def test_exact_dedup_incremental(spark):
         assert got[12] == (True, 11)
         assert got[13] == (False, None)
         # append novel digests; a later batch dups against them
-        append_digests(res, "digstore_t", num_buckets=4)
+        append_digests(res, "digstore_t")
         batch2 = spark.createDataFrame(
             [(20, "epsilon ZETA")], "doc_id long, text string"
         )
@@ -1014,7 +1014,7 @@ def test_url_store_incremental(spark):
         assert got[13] == (True, 11)
         assert got[14] == (False, None)
         # append novel canonical URLs; a later batch dups against them
-        append_urls(res, "urlstore_t", num_buckets=4)
+        append_urls(res, "urlstore_t")
         batch2 = spark.createDataFrame(
             [(20, "http://c.com/new?fbclid=zz"), (21, "http://a.com/x")],
             "doc_id long, url string",
@@ -1095,7 +1095,7 @@ def test_url_store_two_batch_equals_batch_dedup(spark):
     build_url_store(hist, "urlstore_eq", num_buckets=4)
     try:
         r1 = url_dedup_incremental(b1, "urlstore_eq")
-        append_urls(r1, "urlstore_eq", num_buckets=4)
+        append_urls(r1, "urlstore_eq")
         r2 = url_dedup_incremental(b2, "urlstore_eq")
         inc_kept = {
             r.doc_id

@@ -1,6 +1,7 @@
 """Partitioned sink semantics: dynamic partition overwrite must touch only
 the partitions being reprocessed (io.write_partitioned_overwrite)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from albedo_spark.io import write_partitioned_overwrite
@@ -124,11 +125,11 @@ def test_compact_table_store_lifecycle(spark):
                 "doc_id long, text string",
             )
             res = exact_dedup_incremental(batch, tbl)
-            append_digests(res, tbl, num_buckets=4)
+            append_digests(res, tbl)
         before_rows = {
             (r.digest, r.keeper_id) for r in spark.table(tbl).collect()
         }
-        stats = compact_table(spark, tbl, "digest", num_buckets=4)
+        stats = compact_table(spark, tbl)
         assert stats["files_before"] > 4  # appends fragmented the store
         assert stats["files_after"] <= 4
         assert stats["rows"] == len(before_rows) == 50
@@ -154,6 +155,145 @@ def test_compact_table_store_lifecycle(spark):
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def _store_docs(spark, ids):
+    return spark.createDataFrame(
+        [
+            (i, f"doc {i} " + " ".join(f"w{(i * j) % 11}" for j in range(6)),
+             f"http://h{i % 4}.com/p{i}")
+            for i in ids
+        ],
+        "doc_id long, text string, url string",
+    )
+
+
+def _store_vectors(spark, ids):
+    return spark.createDataFrame(
+        [(i, [float((i * 31 + d * 7) % 13 - 6) for d in range(8)]) for i in ids],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def _grow_signatures(spark, t):
+    from albedo_spark.operators.dedup_store import (
+        append_signatures,
+        build_signature_store,
+    )
+
+    build_signature_store(_store_docs(spark, range(12)), t, num_buckets=3)
+    append_signatures(_store_docs(spark, range(12, 20)), t)
+    return [(t, "bkey")]
+
+
+def _grow_digests(spark, t):
+    from albedo_spark.operators.dedup_store import (
+        append_digests,
+        build_digest_store,
+        exact_dedup_incremental,
+    )
+
+    build_digest_store(_store_docs(spark, range(12)), t, num_buckets=3)
+    batch = _store_docs(spark, range(12, 20))
+    append_digests(exact_dedup_incremental(batch, t), t)
+    return [(t, "digest")]
+
+
+def _grow_urls(spark, t):
+    from albedo_spark.operators.dedup_store import (
+        append_urls,
+        build_url_store,
+        url_dedup_incremental,
+    )
+
+    build_url_store(_store_docs(spark, range(12)), t, num_buckets=3)
+    append_urls(url_dedup_incremental(_store_docs(spark, range(12, 20)), t), t)
+    return [(t, "canonical_url")]
+
+
+def _grow_simhash(spark, t):
+    from albedo_spark.operators.dedup_store import (
+        append_simhash,
+        build_simhash_store,
+    )
+
+    build_simhash_store(_store_docs(spark, range(12)), t, num_buckets=3)
+    append_simhash(_store_docs(spark, range(12, 20)), t)
+    return [(t, "bkey")]
+
+
+def _grow_vectors(spark, t):
+    from albedo_spark.operators.vector_store import (
+        append_vectors,
+        build_vector_store,
+    )
+
+    build_vector_store(_store_vectors(spark, range(30)), t, dim=8,
+                       num_buckets=3)
+    append_vectors(_store_vectors(spark, range(30, 40)), t, dim=8)
+    return [(t, "bucket")]
+
+
+def _grow_pq_vectors(spark, t):
+    from albedo_spark.operators.vector_store import (
+        append_pq_vectors,
+        build_pq_store,
+    )
+
+    build_pq_store(_store_vectors(spark, range(30)), t, kc=2, m=2, subdim=4,
+                   stride=7, num_buckets=3)
+    append_pq_vectors(_store_vectors(spark, range(30, 40)), t, m=2, subdim=4)
+    return [(t, "cluster_id")]
+
+
+def _grow_bm25_postings(spark, t):
+    from albedo_spark.operators.retrieval import (
+        append_bm25_postings,
+        build_bm25_store,
+    )
+
+    build_bm25_store(_store_docs(spark, range(12)), t, num_buckets=3,
+                     forward=True)
+    append_bm25_postings(_store_docs(spark, range(12, 20)), t)
+    return [(t, "w"), (t + "_fwd", "doc_id")]
+
+
+@pytest.mark.parametrize(
+    "grow",
+    [_grow_signatures, _grow_digests, _grow_urls, _grow_simhash,
+     _grow_vectors, _grow_pq_vectors, _grow_bm25_postings],
+    ids=lambda f: f.__name__.removeprefix("_grow_"),
+)
+def test_appenders_inherit_catalog_layout(spark, grow):
+    """Every store appender writes in the layout its builder chose: a
+    store built with 3 buckets and appended to with no count keeps 3
+    buckets, every file's bucket id is ``pmod(hash(key), 3)`` of every
+    row in it, and a ``groupBy`` on the key needs no Exchange."""
+    from albedo_spark.io import table_num_buckets
+
+    t = f"t_layout_{grow.__name__.removeprefix('_grow_')}"
+    try:
+        for tbl, key in grow(spark, t):
+            assert table_num_buckets(spark, tbl) == 3
+            name = F.col("_metadata.file_name")
+            rows = spark.table(tbl).select(
+                F.regexp_extract(name, r"-([0-9a-f-]{36})_", 1).alias("job"),
+                F.regexp_extract(name, r"_(\d{5})\.c\d+", 1).alias("file_b"),
+                F.format_string("%05d", F.pmod(F.hash(key), F.lit(3)))
+                .alias("key_b"),
+            )
+            assert rows.where("file_b != key_b").count() == 0
+            assert rows.select("file_b").distinct().count() > 1
+            # files of both writes are present: the build's and the append's
+            assert rows.select("job").distinct().count() == 2
+            plan = (
+                spark.table(tbl).groupBy(key).count()
+                ._jdf.queryExecution().executedPlan().toString()
+            )
+            assert "Exchange" not in plan, plan
+    finally:
+        for suf in ("", "_fwd", "_stats", "_cents", "_cb", "_bloom"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
 
 
 def test_drop_orphan_location_mtime_guard(spark):
@@ -220,7 +360,7 @@ def test_compact_table_adopts_orphan_after_crashed_swap(spark):
         spark.sql(f"DROP TABLE `{tbl}`")
         assert not spark.catalog.tableExists(tbl)
 
-        stats = compact_table(spark, tbl, "digest", num_buckets=4)
+        stats = compact_table(spark, tbl)
         assert stats["adopted"] == f"{tbl}__c999"
         after = {(r.digest, r.keeper_id) for r in spark.table(tbl).collect()}
         assert after == rows
@@ -228,7 +368,7 @@ def test_compact_table_adopts_orphan_after_crashed_swap(spark):
 
         # Stale private copy while the published table is alive: debris.
         write_bucketed(spark.table(tbl), f"{tbl}__c123", "digest", 4)
-        stats2 = compact_table(spark, tbl, "digest", num_buckets=4)
+        stats2 = compact_table(spark, tbl)
         assert stats2["adopted"] is None
         assert not spark.catalog.tableExists(f"{tbl}__c123")
         assert {
@@ -528,7 +668,8 @@ def test_sweep_dead_private_copies(spark, monkeypatch):
     warehouse but not /proc, so its LIVE pid looks dead and its dir can
     predate our start; only wall-clock age separates it). Live-pid and
     published (unsuffixed) directories are never touched, and the
-    compact_bm25_store companion forms (__c<pid>_stats) are covered."""
+    compact_bm25_store companion forms (__c<pid>_stats) and the bloom
+    merges' private copies ({sidecar}__c<pid>) are covered."""
     import os
     import subprocess
 
@@ -540,9 +681,10 @@ def test_sweep_dead_private_copies(spark, monkeypatch):
     reaped.wait()  # a pid guaranteed dead
     dead = f"t_sweepme__b{reaped.pid}"
     dead_stats = f"t_sweepme__c{reaped.pid}_stats"  # companion form
+    dead_bloom = f"t_sweepme_bloom__c{reaped.pid}"  # bloom-merge copy
     live = f"t_keepme__b{os.getpid()}"
     pub = "t_published_store"
-    dirs = (dead, dead_stats, live, pub)
+    dirs = (dead, dead_stats, dead_bloom, live, pub)
     for d in dirs:
         os.makedirs(os.path.join(wh, d), exist_ok=True)
         open(os.path.join(wh, d, "part-0.parquet"), "w").write("x")
@@ -562,8 +704,10 @@ def test_sweep_dead_private_copies(spark, monkeypatch):
         # past BOTH watermarks: only the dead-pid copies go
         res = sweep_dead_private_copies(spark, min_age_hours=0)
         assert dead in res["swept"] and dead_stats in res["swept"]
+        assert dead_bloom in res["swept"]
         assert not os.path.isdir(os.path.join(wh, dead))
         assert not os.path.isdir(os.path.join(wh, dead_stats))
+        assert not os.path.isdir(os.path.join(wh, dead_bloom))
         assert os.path.isdir(os.path.join(wh, live))  # live pid kept
         assert res["kept_live"] >= 1
         assert os.path.isdir(os.path.join(wh, pub))  # published untouched

@@ -901,6 +901,53 @@ def test_bm25_store_search_job_budget(spark):
                 spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
 
 
+def test_bm25_append_compact_job_budget(spark):
+    """The serve path's store writes launch only the jobs they need: an
+    append (with and without the forward companion) and a compaction.
+    Budgets are the counts the hand-written bucketed appends and
+    ``write_bucketed`` rewrites took on local[8] (append 18, with the
+    forward companion 19; compaction 9 and 13). Writing in the catalog's
+    layout (``insertInto``, ``CREATE TABLE LIKE``) must not add a job;
+    a ``catalog.listColumns``/``listTables`` call would (it lists
+    through Spark jobs)."""
+    from albedo_spark.operators.retrieval import (
+        append_bm25_postings,
+        bm25_store_search,
+        build_bm25_store,
+        compact_bm25_store,
+    )
+    from tests.job_count import jobs_in_group
+
+    d = _docs_df(spark)
+    qdf = spark.createDataFrame(QS, "query_id string, text string")
+    budgets = {"t_bm25_wjobs": (18, 9), "t_bm25_wjobs_fwd": (19, 13)}
+    try:
+        got = {}
+        for tbl, (b_append, b_compact) in budgets.items():
+            build_bm25_store(
+                d.where("doc_id % 2 = 0"), tbl, forward=tbl.endswith("_fwd")
+            )
+            out, jobs = jobs_in_group(
+                spark, f"append_{tbl}",
+                lambda: append_bm25_postings(d.where("doc_id % 2 = 1"), tbl),
+            )
+            assert out["admitted"] > 0
+            assert jobs <= b_append, f"{tbl} append: {jobs} > {b_append}"
+            res, jobs = jobs_in_group(
+                spark, f"compact_{tbl}", lambda: compact_bm25_store(spark, tbl)
+            )
+            assert res["adopted"] is None
+            assert jobs <= b_compact, f"{tbl} compact: {jobs} > {b_compact}"
+            got[tbl] = sorted(
+                tuple(r) for r in bm25_store_search(qdf, tbl, top_k=5).collect()
+            )
+        assert got["t_bm25_wjobs"] == got["t_bm25_wjobs_fwd"]
+    finally:
+        for tbl in budgets:
+            for suf in ("", "_stats", "_fwd", "_bloom"):
+                spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
+
+
 def test_snippet_windows_hand_example(spark):
     """Span selection pinned by hand: the best 4-token window of doc 1
     for 'red fox' starts at the densest match cluster (positions 4-6:

@@ -294,7 +294,7 @@ def test_ann_store_append_and_plan(spark):
         n1 = out1.count()
         # appending more vectors can only add/improve neighbors
         append_vectors(emb.where("vec_id % 10 = 2"), "vecstore_app",
-                       dim=64, num_planes=6, num_buckets=8)
+                       dim=64, num_planes=6)
         n2 = ann_store_knn(queries, "vecstore_app", k=3, dim=64,
                            num_planes=6).count()
         assert n2 >= n1
@@ -388,8 +388,7 @@ def test_vector_incremental_pairs_and_replay_exclusion(spark):
 
         # replay: a crashed prior attempt already appended the batch;
         # excluding the batch's own ids reproduces the original pairs
-        append_vectors(batch, "vecstore_inc", dim=64, num_planes=6,
-                       num_buckets=8)
+        append_vectors(batch, "vecstore_inc", dim=64, num_planes=6)
         replay = {
             (r.id_a, r.id_b)
             for r in vector_incremental(
@@ -649,7 +648,7 @@ def test_quantized_vector_store_matches_float_store(spark):
 
         # append keeps the quantized representation and the layout
         append_vectors(emb.where("vec_id % 10 = 2"), "vecstore_q",
-                       dim=64, num_planes=4, num_buckets=8, quantize=True)
+                       dim=64, num_planes=4, quantize=True)
         n2 = ann_store_knn(queries, "vecstore_q", k=5, dim=64,
                            num_planes=4).count()
         assert n2 >= len(qs)
@@ -906,9 +905,9 @@ def test_pq_store_build_append_probe_replay(spark):
 
         # (c) replay idempotence: append batch, count rows, re-append
         batch = emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3")
-        append_pq_vectors(batch, tbl, m=4, subdim=16, num_buckets=8)
+        append_pq_vectors(batch, tbl, m=4, subdim=16)
         n1 = spark.table(tbl).count()
-        append_pq_vectors(batch, tbl, m=4, subdim=16, num_buckets=8)
+        append_pq_vectors(batch, tbl, m=4, subdim=16)
         assert spark.table(tbl).count() == n1  # replay admitted nothing
 
         # (d) frozen model: appended codes reference only existing cells
@@ -983,15 +982,13 @@ def test_pq_store_partition_pruned_filtered_search(spark):
         # append into the partitioned store: batch must carry grp
         batch = emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3")
         with pytest.raises(ValueError, match="missing column"):
-            append_pq_vectors(
-                batch.drop("grp"), t_part, m=4, subdim=16, num_buckets=4
-            )
+            append_pq_vectors(batch.drop("grp"), t_part, m=4, subdim=16)
         n0 = spark.table(t_part).count()
-        append_pq_vectors(batch, t_part, m=4, subdim=16, num_buckets=4)
+        append_pq_vectors(batch, t_part, m=4, subdim=16)
         assert spark.table(t_part).count() > n0
         # appended rows landed in their partitions and replay is a no-op
         n1 = spark.table(t_part).count()
-        append_pq_vectors(batch, t_part, m=4, subdim=16, num_buckets=4)
+        append_pq_vectors(batch, t_part, m=4, subdim=16)
         assert spark.table(t_part).count() == n1
         assert (
             spark.table(t_part)
@@ -1003,6 +1000,54 @@ def test_pq_store_partition_pruned_filtered_search(spark):
         for t in (t_part, t_flat):
             for suf in ("", "_cents", "_cb", "_bloom"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
+
+
+def test_pq_store_partitioned_compaction(spark):
+    """compact_table rewrites a partitioned PQ store in the layout its
+    builder chose: the partition and bucket columns survive, the appends'
+    small files fold, and probe results are identical before and after."""
+    from albedo_spark.io import compact_table, table_num_buckets
+    from albedo_spark.operators.vector_store import (
+        append_pq_vectors,
+        build_pq_store,
+        pq_store_topk,
+    )
+
+    emb = _emb(spark).withColumn("grp", (F.col("vec_id") % 3).cast("int"))
+    tbl = "pqstore_part_compact"
+    try:
+        build_pq_store(
+            emb.where("vec_id % 10 != 0 AND vec_id % 7 NOT IN (3, 5)"), tbl,
+            kc=8, m=4, subdim=16, num_buckets=4, partition_cols=("grp",),
+        )
+        for r in (3, 5):
+            append_pq_vectors(
+                emb.where(f"vec_id % 10 != 0 AND vec_id % 7 = {r}"), tbl,
+                m=4, subdim=16,
+            )
+        queries = emb.where("vec_id % 10 = 0").select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+
+        def topk():
+            return sorted(
+                tuple(r)
+                for r in pq_store_topk(
+                    queries, tbl, k=5, nprobe=2, m=4, subdim=16, where="grp = 1"
+                ).collect()
+            )
+
+        before = topk()
+        stats = compact_table(spark, tbl)
+        assert stats["files_after"] < stats["files_before"]
+        assert stats["rows"] == spark.table(tbl).count()
+        cols = {c.name: c for c in spark.catalog.listColumns(tbl)}
+        assert cols["grp"].isPartition and cols["cluster_id"].isBucket
+        assert table_num_buckets(spark, tbl) == 4
+        assert before and topk() == before
+    finally:
+        for suf in ("", "_cents", "_cb", "_bloom"):
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
 
 
 def test_pq_store_trained_codebooks_persist_and_load(spark):
@@ -1058,15 +1103,13 @@ def test_pq_store_trained_codebooks_persist_and_load(spark):
 
         # (b) appends pick the persisted trained codebooks up by default
         batch = emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3")
-        append_pq_vectors(batch, tbl, m=4, subdim=16, num_buckets=8)
+        append_pq_vectors(batch, tbl, m=4, subdim=16)
         rows_auto = {tuple(r) for r in spark.table(tbl).collect()}
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         build_pq_store(
             base, tbl, kc=8, m=4, subdim=16, num_buckets=8, codebooks=trained
         )
-        append_pq_vectors(
-            batch, tbl, m=4, subdim=16, num_buckets=8, codebooks=trained
-        )
+        append_pq_vectors(batch, tbl, m=4, subdim=16, codebooks=trained)
         assert {tuple(r) for r in spark.table(tbl).collect()} == rows_auto
     finally:
         for suf in ("", "_cents", "_cb"):
@@ -1116,9 +1159,9 @@ def test_pq_store_bloom_sidecar_equivalence(spark):
         build_pq_store(base, tbl, kc=8, m=4, subdim=16, num_buckets=8)
         if with_bloom:
             build_id_bloom(spark, tbl, num_bits=1 << 12)
-        append_pq_vectors(batch1, tbl, m=4, subdim=16, num_buckets=8)
-        append_pq_vectors(batch1, tbl, m=4, subdim=16, num_buckets=8)  # replay
-        append_pq_vectors(batch2, tbl, m=4, subdim=16, num_buckets=8)  # fresh
+        append_pq_vectors(batch1, tbl, m=4, subdim=16)
+        append_pq_vectors(batch1, tbl, m=4, subdim=16)  # replay
+        append_pq_vectors(batch2, tbl, m=4, subdim=16)  # fresh
         return tbl
 
     t_nb, t_bl = run(False), run(True)
@@ -1434,11 +1477,8 @@ def test_audit_pq_store(spark):
 def test_pq_append_bucket_count_from_catalog(spark):
     """ADVICE r13 #4: the append derives the bucket count from the
     table's catalog entry — an append run with different flags than the
-    build must either reuse the build's layout (parameter omitted) or
-    fail loudly (parameter disagrees), never silently mix two bucket
+    build reuses the build's layout, never silently mixing two bucket
     layouts inside one store."""
-    import pytest
-
     from albedo_spark.io import table_num_buckets
     from albedo_spark.operators.vector_store import (
         append_pq_vectors,
@@ -1457,13 +1497,6 @@ def test_pq_append_bucket_count_from_catalog(spark):
         batch = emb.where("vec_id % 7 = 3")
         append_pq_vectors(batch, tbl, m=4, subdim=16)  # no count passed
         assert table_num_buckets(spark, tbl) == 3
-        # one file set per bucket per write job — layout intact means
-        # every file belongs to a 3-bucket layout (no _00003+ bucket ids)
-        with pytest.raises(ValueError, match="mix bucket layouts"):
-            append_pq_vectors(batch, tbl, m=4, subdim=16, num_buckets=8)
-        # matching explicit count is accepted (back-compat for callers
-        # that thread the build flag through)
-        append_pq_vectors(batch, tbl, m=4, subdim=16, num_buckets=3)
     finally:
         for suf in ("", "_cents", "_cb", "_bloom"):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")

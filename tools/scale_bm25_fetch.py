@@ -91,7 +91,7 @@ def fetch(frame):
 
 
 def main() -> None:
-    from albedo_spark.io import drop_orphan_table_location
+    from albedo_spark.io import write_bucketed
     from albedo_spark.session import get_spark
 
     sizes = [int(a) for a in sys.argv[1:]] or [1_000_000, 10_000_000, 40_000_000]
@@ -104,19 +104,12 @@ def main() -> None:
     ).localCheckpoint()
 
     for n in sizes:
-        for suf in ("", "_fwd"):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
-            drop_orphan_table_location(spark, tbl + suf)
         # rows are regenerated per write (deterministic range — cheaper
         # than holding 40M-row checkpoint blocks through two sorted
         # bucketed writes)
         for suf, key in (("", "w"), ("_fwd", "doc_id")):
-            (
-                posting_rows(spark, n).write.mode("overwrite")
-                .bucketBy(NUM_BUCKETS, key)
-                .sortBy(key)
-                .format("parquet")
-                .saveAsTable(tbl + suf)
+            write_bucketed(
+                posting_rows(spark, n), tbl + suf, key, num_buckets=NUM_BUCKETS
             )
 
         # fallback: broadcast join into the w-bucketed postings

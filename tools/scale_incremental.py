@@ -130,11 +130,11 @@ def main() -> None:
                 ],
             ).alias("text"),
         )
-        append_signatures(filler, "scale_sigstore", num_buckets=32)
+        append_signatures(filler, "scale_sigstore")
     files_frag = n_files()
     probe_frag = probe()
     t0 = time.perf_counter()
-    compact_table(spark, "scale_sigstore", "bkey", 32)
+    compact_table(spark, "scale_sigstore")
     compact_sec = round(time.perf_counter() - t0, 2)
     files_comp = n_files()
     probe_comp = probe()

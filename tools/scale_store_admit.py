@@ -100,21 +100,13 @@ def main() -> None:
     spark = get_spark("scale-store-admit", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from albedo_spark.io import drop_orphan_table_location
+    from albedo_spark.io import drop_orphan_table_location, write_bucketed
 
     tbl = "adm_probe"
     for n in sizes:
-        for suf in ("", "_bloom"):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
-            drop_orphan_table_location(spark, tbl + suf)
-        (
-            code_rows(spark, n)
-            .write.mode("overwrite")
-            .bucketBy(8, "cluster_id")
-            .sortBy("cluster_id")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}_bloom")
+        drop_orphan_table_location(spark, tbl + "_bloom")
+        write_bucketed(code_rows(spark, n), tbl, "cluster_id", num_buckets=8)
         fresh = spark.range(10**10, 10**10 + 1000).select(
             F.col("id").alias("vec_id")
         ).localCheckpoint()
