@@ -16,6 +16,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 from collections.abc import Callable
+from itertools import takewhile
 
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException, PySparkException
@@ -574,6 +575,19 @@ def table_num_buckets(spark: SparkSession, table: str) -> int:
         if r[0] and r[0].strip() == "Num Buckets":
             return int(r[1])
     raise ValueError(f"{table} is not a bucketed table")
+
+
+def table_partition_cols(spark: SparkSession, table: str) -> list[str]:
+    """The partition columns of a table, from the ``# Partition
+    Information`` block of ``DESCRIBE TABLE``: a catalog read that
+    launches no Spark job, where ``catalog.listColumns`` launches
+    several."""
+    names = [r[0] for r in spark.sql(f"DESCRIBE TABLE `{table}`").collect()]
+    if "# Partition Information" not in names:
+        return []
+    # the block opens with a "# col_name" header row
+    block = names[names.index("# Partition Information") + 2:]
+    return list(takewhile(lambda n: n and not n.startswith("#"), block))
 
 
 def append_rows(df: DataFrame, table: str) -> None:

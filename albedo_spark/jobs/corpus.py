@@ -1311,16 +1311,15 @@ def main(argv: list[str] | None = None) -> dict:
         from albedo_spark.operators.dedup_store import (
             append_bloom,
             append_digests,
-            append_sharded_bloom,
             append_signatures,
             append_urls,
             build_bloom_sidecar,
             build_digest_store,
-            build_sharded_bloom_sidecar,
             build_signature_store,
             build_url_store,
             dedup_incremental,
             exact_dedup_incremental,
+            merge_bloom_generations,
             url_dedup_incremental,
         )
 
@@ -1345,18 +1344,10 @@ def main(argv: list[str] | None = None) -> dict:
                 # where the sidecar pays most (every fetched page probes
                 # this store; frontier crawls are mostly-new). Sharded
                 # form under --bloom-shards, like the digest rung.
-                if args.bloom_shards:
-                    build_sharded_bloom_sidecar(
-                        spark, url_tbl, url_blm,
-                        key_col="canonical_url",
-                        num_shards=args.bloom_shards,
-                        num_bits=args.bloom_bits,
-                    )
-                else:
-                    build_bloom_sidecar(
-                        spark, url_tbl, url_blm,
-                        key_col="canonical_url", num_bits=args.bloom_bits,
-                    )
+                build_bloom_sidecar(
+                    spark, url_tbl, url_blm, key_col="canonical_url",
+                    num_bits=args.bloom_bits, num_shards=args.bloom_shards,
+                )
             url_res = url_dedup_incremental(
                 batch, url_tbl, url_col=args.url_col,
                 bloom_table=url_blm,
@@ -1371,21 +1362,15 @@ def main(argv: list[str] | None = None) -> dict:
             if url_blm:
                 # Lockstep (the no-false-negative contract): bits for
                 # keys the admit guard skipped are already set — setting
-                # them again is harmless OR-merge. Follow the EXISTING
-                # sidecar's schema, never the flag (the digest-rung
-                # rule: a loop toggling --bloom-shards mid-history
-                # cannot mix forms).
-                url_novel = url_res.where(
-                    "NOT is_dup AND canonical_url IS NOT NULL"
-                ).select("canonical_url")
-                if "shard" in spark.table(url_blm).columns:
-                    append_sharded_bloom(
-                        url_novel, url_blm, key_col="canonical_url"
-                    )
-                else:
-                    append_bloom(
-                        url_novel, url_blm, key_col="canonical_url"
-                    )
+                # them again is harmless OR-merge. The append follows the
+                # EXISTING sidecar's form, never the flag.
+                append_bloom(
+                    url_res.where(
+                        "NOT is_dup AND canonical_url IS NOT NULL"
+                    ).select("canonical_url"),
+                    url_blm,
+                    key_col="canonical_url",
+                )
             batch = batch.join(
                 url_res.where("NOT is_dup").select("doc_id"),
                 "doc_id",
@@ -1404,15 +1389,10 @@ def main(argv: list[str] | None = None) -> dict:
         if blm_tbl and not spark.catalog.tableExists(blm_tbl):
             # Rebuildable independently (derived from the digest store),
             # so a sidecar enabled mid-loop starts covering full history.
-            if args.bloom_shards:
-                build_sharded_bloom_sidecar(
-                    spark, dig_tbl, blm_tbl,
-                    num_shards=args.bloom_shards, num_bits=args.bloom_bits,
-                )
-            else:
-                build_bloom_sidecar(
-                    spark, dig_tbl, blm_tbl, num_bits=args.bloom_bits
-                )
+            build_bloom_sidecar(
+                spark, dig_tbl, blm_tbl,
+                num_bits=args.bloom_bits, num_shards=args.bloom_shards,
+            )
 
         resolved = exact_dedup_incremental(
             batch, dig_tbl, bloom_table=blm_tbl
@@ -1433,16 +1413,15 @@ def main(argv: list[str] | None = None) -> dict:
         if blm_tbl:
             # Lockstep with append_digests — same novel slice; skipping
             # this would plant false NEGATIVES for the next batch. The
-            # append form follows the EXISTING sidecar's schema, not the
-            # flag, so a loop that toggles --bloom-shards mid-history
-            # cannot mix forms.
-            novel_digests = resolved.where(
-                "NOT is_dup AND digest IS NOT NULL"
-            ).select("digest")
-            if "shard" in spark.table(blm_tbl).columns:
-                append_sharded_bloom(novel_digests, blm_tbl)
-            else:
-                append_bloom(novel_digests, blm_tbl)
+            # append follows the EXISTING sidecar's form, not the flag,
+            # so a loop that toggles --bloom-shards mid-history cannot
+            # mix forms.
+            append_bloom(
+                resolved.where("NOT is_dup AND digest IS NOT NULL").select(
+                    "digest"
+                ),
+                blm_tbl,
+            )
         if args.out:
             near_pairs.write.mode("overwrite").parquet(
                 os.path.join(args.out, "incremental_near_dup_pairs")
@@ -1464,29 +1443,14 @@ def main(argv: list[str] | None = None) -> dict:
                     compact_table(spark, f"{args.store_prefix}_urls")
                 )
             if blm_tbl:
-                from albedo_spark.operators.dedup_store import (
-                    merge_bloom_generations,
-                    merge_sharded_bloom_generations,
-                )
-
-                merge_fn = (
-                    merge_sharded_bloom_generations
-                    if "shard" in spark.table(blm_tbl).columns
-                    else merge_bloom_generations
-                )
                 summary["incremental"]["compaction"]["bloom_generations"] = (
-                    merge_fn(spark, blm_tbl)
+                    merge_bloom_generations(spark, blm_tbl)
                 )
                 url_blm_tbl = f"{args.store_prefix}_urls_bloom"
                 if spark.catalog.tableExists(url_blm_tbl):
-                    url_merge_fn = (
-                        merge_sharded_bloom_generations
-                        if "shard" in spark.table(url_blm_tbl).columns
-                        else merge_bloom_generations
-                    )
                     summary["incremental"]["compaction"][
                         "url_bloom_generations"
-                    ] = url_merge_fn(spark, url_blm_tbl)
+                    ] = merge_bloom_generations(spark, url_blm_tbl)
 
     if args.quality_model_dim:
         # CCNet-style model-based quality stage: weak labels from the

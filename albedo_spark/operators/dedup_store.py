@@ -34,6 +34,16 @@ but explodes in the new batch is still suppressed. One inherent
 asymmetry of incrementality: historical-internal pairs were emitted when
 *their* batch arrived, under the bucket sizes of that time — a key that
 later crosses ``max_bucket`` cannot retract them.
+
+One key-store core, one sidecar owner. The exact-key stores (digest and
+canonical URL) differ only in their key expression, so build, batch
+resolve and admit-guarded append are one keyed core (``_build_key_store``,
+``_resolve_keys``, ``_append_keys``), and the public names only fix the
+key format. The Bloom sidecar has two forms, a monolithic bitmap and a
+sharded one for more than ~4M keys; this module is the only code that
+knows which a sidecar is. Callers use ``build_bloom_sidecar(...,
+num_shards=None)`` once, then ``bloom_maybe``, ``append_bloom`` and
+``merge_bloom_generations``, which read the form off the sidecar.
 """
 
 from __future__ import annotations
@@ -217,8 +227,93 @@ def dedup_incremental(
 
 
 # ---------------------------------------------------------------------------
-# Exact-digest store: the cheap first-pass twin of the MinHash store
+# Exact-key stores: the digest store and the canonical-URL store
 # ---------------------------------------------------------------------------
+#
+# One ``(key, keeper_id)`` row per distinct key, bucketed on the key. The
+# digest store keys on ``md5(normalize_text(text))``, the URL store on
+# ``canonicalize_url(url)``; everything else (build, batch resolve,
+# admit-guarded append) is the keyed core below, which takes the key
+# column expression and the key's column name.
+
+
+def _build_key_store(
+    corpus: DataFrame, table: str, key: Column, key_name: str,
+    id_col: str, num_buckets: int,
+) -> None:
+    """Persist the minimum id per key as ``(key_name, keeper_id)``,
+    bucketed on ``key_name``."""
+    d = (
+        corpus.select(key.alias(key_name), F.col(id_col))
+        .groupBy(key_name)
+        .agg(F.min(id_col).alias("keeper_id"))
+    )
+    write_bucketed(d, table, key_name, num_buckets=num_buckets)
+
+
+def _elect(
+    rows: DataFrame, batch_min: DataFrame, key_name: str, id_col: str,
+    store: DataFrame | None = None,
+) -> DataFrame:
+    """The keeper election: ``(id, key, is_dup, keeper_id)``. A key in
+    ``store`` keeps its historical keeper; otherwise the batch minimum
+    ``_bmin`` is the keeper. ``store=None`` is the branch whose keys are
+    known to be absent from the store, so it joins the batch election
+    only."""
+    if store is not None:
+        rows = rows.join(store, key_name, "left")
+        keeper = F.coalesce(F.col("keeper_id"), F.col("_bmin"))
+    else:
+        keeper = F.col("_bmin")
+    is_dup = F.col(key_name).isNotNull() & (keeper != F.col(id_col))
+    return rows.join(batch_min, key_name, "left").select(
+        F.col(id_col),
+        key_name,
+        is_dup.alias("is_dup"),
+        F.when(is_dup, keeper).alias("keeper_id"),
+    )
+
+
+def _resolve_keys(
+    batch: DataFrame, table: str, key: Column, key_name: str, id_col: str,
+    bloom_table: str | None,
+) -> DataFrame:
+    """Resolve a batch against a key store (the contract is
+    ``exact_dedup_incremental``'s). With ``bloom_table`` the batch
+    splits on ``bloom_maybe`` before any join: maybe-seen rows elect
+    against the store, definite-novel rows against the batch alone. The
+    flag is a function of the key alone, so ``_bmin``, computed over the
+    whole batch, is the keeper either branch would elect."""
+    store = batch.sparkSession.table(table)
+    hashed = batch.select(F.col(id_col), key.alias(key_name))
+    batch_min = (
+        hashed.where(F.col(key_name).isNotNull())
+        .groupBy(key_name)
+        .agg(F.min(id_col).alias("_bmin"))
+    )
+    if bloom_table is None:
+        return _elect(hashed, batch_min, key_name, id_col, store)
+    flagged = bloom_maybe(hashed, bloom_table, key_name)
+    return _elect(
+        flagged.where(F.col("_maybe")), batch_min, key_name, id_col, store
+    ).unionByName(
+        _elect(flagged.where(~F.col("_maybe")), batch_min, key_name, id_col)
+    )
+
+
+def _append_keys(
+    resolution: DataFrame, table: str, key_name: str, id_col: str
+) -> None:
+    """Append the resolution's novel keys (``is_dup = false``, non-NULL
+    key: each new key's keeper), anti-joined against the live store on
+    its bucket column (no store-side Exchange)."""
+    seen = resolution.sparkSession.table(table).select(key_name)
+    append_rows(
+        resolution.where(~F.col("is_dup") & F.col(key_name).isNotNull())
+        .select(key_name, F.col(id_col).alias("keeper_id"))
+        .join(seen, key_name, "left_anti"),
+        table,
+    )
 
 
 def build_digest_store(
@@ -234,16 +329,14 @@ def build_digest_store(
     of duplication for one narrow join), MinHash incremental second."""
     from albedo_spark.operators.dedup import normalize_text
 
-    d = (
-        corpus.where(F.col(text_col).isNotNull())
-        .select(
-            F.md5(normalize_text(F.col(text_col))).alias("digest"),
-            F.col(id_col),
-        )
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keeper_id"))
+    _build_key_store(
+        corpus.where(F.col(text_col).isNotNull()),
+        table,
+        F.md5(normalize_text(F.col(text_col))),
+        "digest",
+        id_col,
+        num_buckets,
     )
-    write_bucketed(d, table, "digest", num_buckets=num_buckets)
 
 
 def exact_dedup_incremental(
@@ -263,15 +356,15 @@ def exact_dedup_incremental(
     Exchange; only the batch shuffles.
 
     ``bloom_table`` (a sidecar built by ``build_bloom_sidecar`` and kept
-    in lockstep by ``append_bloom``) splits the batch MAP-SIDE before
-    any join: digests the bloom rules out resolve purely within the
-    batch — on a high-novelty crawl that is most of the batch — and only
-    the maybe-seen remainder (true dups plus the sized false-positive
-    trickle) pays the store join. False positives just take the exact
-    join and resolve correctly, so the result is byte-identical with or
-    without the sidecar; a sidecar NOT covering every store generation
-    would instead produce false NEGATIVES (missed dups) — the lockstep
-    contract is the caller's to keep.
+    in lockstep by ``append_bloom``, in either form) splits the batch
+    MAP-SIDE before any join: digests the bloom rules out resolve purely
+    within the batch — on a high-novelty crawl that is most of the batch
+    — and only the maybe-seen remainder (true dups plus the sized
+    false-positive trickle) pays the store join. False positives just
+    take the exact join and resolve correctly, so the result is
+    byte-identical with or without the sidecar; a sidecar NOT covering
+    every store generation would instead produce false NEGATIVES (missed
+    dups) — the lockstep contract is the caller's to keep.
 
     Feed the ``is_dup = false`` rows to ``append_digests`` (and
     ``append_bloom``) after consuming the result, and the next batch
@@ -279,80 +372,10 @@ def exact_dedup_incremental(
     """
     from albedo_spark.operators.dedup import normalize_text
 
-    spark = batch.sparkSession
-    store = spark.table(table)
-    hashed = batch.select(
-        F.col(id_col),
-        F.md5(normalize_text(F.col(text_col))).alias("digest"),
+    return _resolve_keys(
+        batch, table, F.md5(normalize_text(F.col(text_col))), "digest",
+        id_col, bloom_table,
     )
-    batch_min = (
-        hashed.where(F.col("digest").isNotNull())
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("_bmin"))
-    )
-    if bloom_table is None:
-        j = hashed.join(store, "digest", "left").join(
-            batch_min, "digest", "left"
-        )
-        keeper = F.coalesce(F.col("keeper_id"), F.col("_bmin"))
-        is_dup = F.col("digest").isNotNull() & (keeper != F.col(id_col))
-        return j.select(
-            F.col(id_col),
-            "digest",
-            is_dup.alias("is_dup"),
-            F.when(is_dup, keeper).alias("keeper_id"),
-        )
-
-    side = spark.table(bloom_table)
-    if "shard" in side.columns:
-        # sharded sidecar (r12, the >4M-key form): batch digests
-        # broadcast INTO the sidecar scan — see sharded_bloom_maybe
-        flagged = sharded_bloom_maybe(hashed, bloom_table, "digest")
-    else:
-        params = side.select("num_bits", "num_hashes").distinct().collect()
-        if len(params) != 1:
-            raise ValueError(
-                f"sidecar {bloom_table} mixes bloom parameters: {params}"
-            )
-        num_bits, num_hashes = params[0].num_bits, params[0].num_hashes
-        gens = side.agg(F.collect_list("bits").alias("_gens"))
-        flagged = hashed.crossJoin(F.broadcast(gens)).withColumn(
-            "_maybe",
-            F.coalesce(
-                bloom_might_contain(
-                    F.col("digest"), F.col("_gens"), num_bits, num_hashes
-                ),
-                F.lit(False),
-            ),
-        ).drop("_gens")
-    # The split is digest-consistent (the flag is a function of the
-    # digest alone), so _bmin — computed over the WHOLE batch — is the
-    # same keeper either branch would elect.
-    maybe = (
-        flagged.where(F.col("_maybe"))
-        .join(store, "digest", "left")
-        .join(batch_min, "digest", "left")
-    )
-    keeper_m = F.coalesce(F.col("keeper_id"), F.col("_bmin"))
-    dup_m = F.col("digest").isNotNull() & (keeper_m != F.col(id_col))
-    resolved_maybe = maybe.select(
-        F.col(id_col),
-        "digest",
-        dup_m.alias("is_dup"),
-        F.when(dup_m, keeper_m).alias("keeper_id"),
-    )
-    # Definite-novel branch: the store never feeds these rows (no false
-    # negatives ⇒ their digests are certainly absent), so the only join
-    # is against the batch's own keeper election.
-    novel = flagged.where(~F.col("_maybe")).join(batch_min, "digest", "left")
-    dup_n = F.col("digest").isNotNull() & (F.col("_bmin") != F.col(id_col))
-    resolved_novel = novel.select(
-        F.col(id_col),
-        "digest",
-        dup_n.alias("is_dup"),
-        F.when(dup_n, F.col("_bmin")).alias("keeper_id"),
-    )
-    return resolved_maybe.unionByName(resolved_novel)
 
 
 def append_digests(
@@ -368,21 +391,9 @@ def append_digests(
     row's keeper is itself so ``is_dup = false``) would re-append every
     digest — and a duplicated store key multiplies every future join
     against it, silently double-counting that digest's batch rows. The
-    guard joins on the store's bucket column (no store-side Exchange)
-    and also makes a replayed append a no-op — the streaming twin's
+    guard also makes a replayed append a no-op — the streaming twin's
     idempotence for batch callers."""
-    seen = resolution.sparkSession.table(table).select("digest")
-    append_rows(
-        resolution.where(~F.col("is_dup") & F.col("digest").isNotNull())
-        .select("digest", F.col(id_col).alias("keeper_id"))
-        .join(seen, "digest", "left_anti"),
-        table,
-    )
-
-
-# ---------------------------------------------------------------------------
-# URL store: the crawl front-door rung of the incremental family
-# ---------------------------------------------------------------------------
+    _append_keys(resolution, table, "digest", id_col)
 
 
 def build_url_store(
@@ -404,16 +415,14 @@ def build_url_store(
     fetch identity — the digest-store NULL posture applied to URLs)."""
     from albedo_spark.functions.urls import canonicalize_url
 
-    d = (
-        corpus.where(F.col(url_col).isNotNull())
-        .select(
-            canonicalize_url(F.col(url_col)).alias("canonical_url"),
-            F.col(id_col),
-        )
-        .groupBy("canonical_url")
-        .agg(F.min(id_col).alias("keeper_id"))
+    _build_key_store(
+        corpus.where(F.col(url_col).isNotNull()),
+        table,
+        canonicalize_url(F.col(url_col)),
+        "canonical_url",
+        id_col,
+        num_buckets,
     )
-    write_bucketed(d, table, "canonical_url", num_buckets=num_buckets)
 
 
 def url_dedup_incremental(
@@ -425,110 +434,27 @@ def url_dedup_incremental(
 ) -> DataFrame:
     """Resolve a new crawl batch against the URL store WITHOUT
     rescanning history: ``(doc_id, canonical_url, is_dup, keeper_id)``
-    — the ``exact_dedup_incremental`` contract at the URL granularity.
-    A canonical URL already in the store marks every batch row carrying
-    it as a dup of the HISTORICAL keeper; otherwise the minimum batch
-    id per canonical URL is the novel keeper and its siblings dup
-    against it (so a batch that re-fetches one page twice resolves
-    internally, store or not). NULL urls pass through un-deduplicated
-    (canonical_url NULL, is_dup false — the family's NULL posture: a
-    null-unsafe join key would silently drop the rows).
+    — the ``exact_dedup_incremental`` contract at the URL granularity,
+    ``bloom_table`` included (a sidecar built with
+    ``key_col='canonical_url'``; the rung where it pays MOST, since
+    every fetched page probes this store and on a frontier-driven crawl
+    most URLs are genuinely new). A batch that re-fetches one page
+    twice resolves internally, store or not. NULL urls pass through
+    un-deduplicated (canonical_url NULL, is_dup false — a null-unsafe
+    join key would silently drop the rows).
 
     Plan at 100 TB: canonicalization is map-side RE2 regex; the store
     side joins on its bucket column with NO store-side Exchange — only
     the batch shuffles, into the store's layout. Feed the
     ``is_dup = false`` rows to ``append_urls`` after consuming the
     result and the next batch dedups against history including this
-    one (``append_urls`` is admit-guarded, so a replay is a no-op).
-
-    ``bloom_table`` (the ``exact_dedup_incremental`` sidecar contract
-    at the URL rung — and the rung where it pays MOST: every fetched
-    page probes this store, and on a frontier-driven crawl most URLs
-    are genuinely new): a sidecar built by ``build_bloom_sidecar(...,
-    key_col='canonical_url')`` and kept in lockstep by ``append_bloom``
-    splits the batch MAP-SIDE — definitely-new URLs resolve purely
-    within the batch, only the maybe-seen remainder pays the store
-    join. False positives just take the exact join; the result is
-    byte-identical with or without the sidecar."""
+    one (``append_urls`` is admit-guarded, so a replay is a no-op)."""
     from albedo_spark.functions.urls import canonicalize_url
 
-    spark = batch.sparkSession
-    store = spark.table(table)
-    hashed = batch.select(
-        F.col(id_col),
-        canonicalize_url(F.col(url_col)).alias("canonical_url"),
+    return _resolve_keys(
+        batch, table, canonicalize_url(F.col(url_col)), "canonical_url",
+        id_col, bloom_table,
     )
-    batch_min = (
-        hashed.where(F.col("canonical_url").isNotNull())
-        .groupBy("canonical_url")
-        .agg(F.min(id_col).alias("_bmin"))
-    )
-    if bloom_table is None:
-        j = hashed.join(store, "canonical_url", "left").join(
-            batch_min, "canonical_url", "left"
-        )
-        keeper = F.coalesce(F.col("keeper_id"), F.col("_bmin"))
-        is_dup = (
-            F.col("canonical_url").isNotNull() & (keeper != F.col(id_col))
-        )
-        return j.select(
-            F.col(id_col),
-            "canonical_url",
-            is_dup.alias("is_dup"),
-            F.when(is_dup, keeper).alias("keeper_id"),
-        )
-
-    side = spark.table(bloom_table)
-    if "shard" in side.columns:
-        flagged = sharded_bloom_maybe(hashed, bloom_table, "canonical_url")
-    else:
-        params = side.select("num_bits", "num_hashes").distinct().collect()
-        if len(params) != 1:
-            raise ValueError(
-                f"sidecar {bloom_table} mixes bloom parameters: {params}"
-            )
-        num_bits, num_hashes = params[0].num_bits, params[0].num_hashes
-        gens = side.agg(F.collect_list("bits").alias("_gens"))
-        flagged = hashed.crossJoin(F.broadcast(gens)).withColumn(
-            "_maybe",
-            F.coalesce(
-                bloom_might_contain(
-                    F.col("canonical_url"), F.col("_gens"),
-                    num_bits, num_hashes,
-                ),
-                F.lit(False),
-            ),
-        ).drop("_gens")
-    # The split is canonical-url-consistent (the flag is a function of
-    # the key alone), so _bmin — computed over the WHOLE batch — is the
-    # same keeper either branch would elect.
-    maybe = (
-        flagged.where(F.col("_maybe"))
-        .join(store, "canonical_url", "left")
-        .join(batch_min, "canonical_url", "left")
-    )
-    keeper_m = F.coalesce(F.col("keeper_id"), F.col("_bmin"))
-    dup_m = F.col("canonical_url").isNotNull() & (keeper_m != F.col(id_col))
-    resolved_maybe = maybe.select(
-        F.col(id_col),
-        "canonical_url",
-        dup_m.alias("is_dup"),
-        F.when(dup_m, keeper_m).alias("keeper_id"),
-    )
-    novel = flagged.where(~F.col("_maybe")).join(
-        batch_min, "canonical_url", "left"
-    )
-    dup_n = (
-        F.col("canonical_url").isNotNull()
-        & (F.col("_bmin") != F.col(id_col))
-    )
-    resolved_novel = novel.select(
-        F.col(id_col),
-        "canonical_url",
-        dup_n.alias("is_dup"),
-        F.when(dup_n, F.col("_bmin")).alias("keeper_id"),
-    )
-    return resolved_maybe.unionByName(resolved_novel)
 
 
 def append_urls(
@@ -536,25 +462,13 @@ def append_urls(
     table: str,
     id_col: str = "doc_id",
 ) -> None:
-    """Append the NOVEL canonical URLs of a resolved batch
-    (``is_dup = false``, non-NULL canonical_url — each new URL's
-    keeper) into the store, ADMIT-GUARDED: an anti-join against the
-    live store drops rows whose canonical URL is already a key, so (a)
-    a recrawl batch that re-fetches a page under the SAME id as its
-    historical keeper (is_dup=false by the keeper-is-itself rule) does
-    not plant a duplicate key, and (b) replaying an already-consumed
-    resolution appends nothing — the streaming twin's idempotence,
-    available to batch callers. The guard joins on the store's bucket
-    column (no store-side Exchange)."""
-    seen = resolution.sparkSession.table(table).select("canonical_url")
-    append_rows(
-        resolution.where(
-            ~F.col("is_dup") & F.col("canonical_url").isNotNull()
-        )
-        .select("canonical_url", F.col(id_col).alias("keeper_id"))
-        .join(seen, "canonical_url", "left_anti"),
-        table,
-    )
+    """Append the NOVEL canonical URLs of a resolved batch into the
+    store, ADMIT-GUARDED like ``append_digests``: (a) a recrawl batch
+    that re-fetches a page under the SAME id as its historical keeper
+    (is_dup=false by the keeper-is-itself rule) does not plant a
+    duplicate key, and (b) replaying an already-consumed resolution
+    appends nothing."""
+    _append_keys(resolution, table, "canonical_url", id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -722,7 +636,7 @@ def simhash_incremental(
 
 
 # ---------------------------------------------------------------------------
-# Bloom sidecar: map-side novel-document elimination for the digest store
+# Bloom sidecar: map-side novel-key elimination for the key stores
 # ---------------------------------------------------------------------------
 #
 # At 100 TB the digest store holds billions of rows and every crawl batch
@@ -789,12 +703,7 @@ def _assemble_bits(words: DataFrame, num_words: int) -> DataFrame:
     dense = grid.join(words, "widx", "left").select(
         "widx", F.coalesce("w", F.lit(0).cast("long")).alias("w")
     )
-    return dense.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("widx", "w"))),
-            lambda s: s["w"],
-        ).alias("bits")
-    )
+    return _collect_words(dense, [])
 
 
 def bloom_bitmap(
@@ -842,114 +751,55 @@ def bloom_might_contain(
     )
 
 
-def build_bloom_sidecar(
-    spark: SparkSession,
-    store_table: str,
-    sidecar_table: str,
-    key_col: str = "digest",
-    num_bits: int = 1 << 20,
-    num_hashes: int = 5,
-) -> None:
-    """One-time sidecar build from the CURRENT store contents: one
-    ``(num_bits, num_hashes, bits)`` generation row. Size ``num_bits`` ≈
-    10× expected distinct keys for ~1% false positives at 5 hashes; the
-    sidecar is derived data — losing it never loses information, rebuild
-    from the store. At billions of store keys one monolithic broadcast
-    bitmap stops fitting; shard the sidecar by a digest prefix and probe
-    each batch row against its shard's generations (same expressions,
-    grouped broadcast)."""
-    bm = bloom_bitmap(spark.table(store_table), key_col, num_bits, num_hashes)
-    row = bm.select(
-        F.lit(num_bits).alias("num_bits"),
-        F.lit(num_hashes).alias("num_hashes"),
-        "bits",
-    )
-    spark.sql(f"DROP TABLE IF EXISTS `{sidecar_table}`")
-    drop_orphan_table_location(spark, sidecar_table)
-    row.write.mode("overwrite").format("parquet").saveAsTable(sidecar_table)
-
-
-def append_bloom(
-    novel: DataFrame,
-    sidecar_table: str,
-    key_col: str = "digest",
-) -> None:
-    """Mirror of ``append_digests`` on the sidecar: append ONE generation
-    row covering the batch's novel keys (parameters inherited from the
-    existing sidecar so every generation probes identically). Feed it the
-    same ``is_dup = false`` slice ``append_digests`` consumed — appending
-    digests without appending their bloom breaks the no-false-negative
-    contract."""
-    spark = novel.sparkSession
-    meta = spark.table(sidecar_table).select("num_bits", "num_hashes").first()
-    bm = bloom_bitmap(novel, key_col, meta.num_bits, meta.num_hashes)
-    append_rows(
-        bm.select(
-            F.lit(meta.num_bits).alias("num_bits"),
-            F.lit(meta.num_hashes).alias("num_hashes"),
-            "bits",
-        ),
-        sidecar_table,
-    )
-
-
-def merge_bloom_generations(spark: SparkSession, sidecar_table: str) -> int:
-    """Collapse the sidecar's generation rows into one by element-wise OR
-    (blooms are union-mergeable) — the probe's per-row work drops from
-    G generations back to 1. Published through ``io.private_copy_swap``,
-    with its crashed-swap adoption on entry; a crash that loses both
-    copies only costs a rebuild (derived data). Returns the number of
-    generations merged."""
-    _, publish = private_copy_swap(spark, sidecar_table)
-    side = spark.table(sidecar_table)
-    params = side.select("num_bits", "num_hashes").distinct().collect()
-    if len(params) != 1:
-        raise ValueError(
-            f"sidecar {sidecar_table} mixes bloom parameters: {params}"
-        )
-    generations = side.count()
-    if generations <= 1:
-        return int(generations)
-    num_bits, num_hashes = params[0].num_bits, params[0].num_hashes
-    words = (
-        side.select(F.posexplode("bits").alias("widx", "w"))
-        .groupBy("widx")
-        .agg(F.bit_or("w").alias("w"))
-        .select(F.col("widx").cast("long").alias("widx"), "w")
-    )
-    merged = _assemble_bits(words, num_bits // 64).select(
-        F.lit(num_bits).alias("num_bits"),
-        F.lit(num_hashes).alias("num_hashes"),
-        "bits",
-    )
-    publish([("", merged)])
-    return int(generations)
-
-
-# --- Sharded Bloom sidecar (r12) -------------------------------------------
+# --- The two sidecar forms ---------------------------------------------------
 #
-# The monolithic sidecar assembles ONE (num_bits/64)-long array row and
-# broadcasts it into the batch — which stops working twice at scale: the
-# single-row assembly + broadcast goes heap-bound past ~4M keys at honest
-# bits/key (measured: OOM at 2^29 bits in tools/scale_store_admit.py),
-# and a 1B-key sidecar would be a multi-GB broadcast no matter how it is
-# assembled. The sharded form fixes both by INVERTING the probe:
+# The MONOLITHIC form is one ``(num_bits, num_hashes, bits)`` row per
+# generation, probed by broadcasting the collected bitmaps into the batch.
+# It stops working twice at scale: the single-row assembly + broadcast goes
+# heap-bound past ~4M keys at honest bits/key (measured: OOM at 2^29 bits in
+# tools/scale_store_admit.py), and a 1B-key sidecar would be a multi-GB
+# broadcast no matter how it is assembled. The SHARDED form (r12) fixes
+# both by INVERTING the probe:
 #
 # - the key space splits into ``num_shards`` by an independent hash
 #   (xxhash64 with member index ``num_hashes`` — disjoint from the
 #   position hash family 0..num_hashes-1);
 # - each shard keeps its OWN (num_bits-per-shard) bitmap rows, so no
 #   single assembly row exceeds num_bits/64 longs regardless of total
-#   key count;
+#   key count; a generation is ``num_shards`` rows
+#   ``(shard, num_shards, num_bits, num_hashes, bits)``;
 # - the probe broadcasts the BATCH's (key, shard) pairs into a scan of
 #   the sidecar table and evaluates membership sidecar-side, per
 #   (key, generation-row) then max per key — per-batch cost is
 #   O(batch × generations + sidecar scan), independent of the store,
 #   and nothing bitmap-sized is ever broadcast.
 #
-# Same no-false-negative lockstep contract as the monolithic form; the
-# two are interchangeable under ``vector_store.admit_novel`` (schema-
-# dispatched), and admit results are byte-identical (pytest-pinned).
+# Same no-false-negative lockstep contract for both. Only this module
+# knows which form a sidecar is: ``build_bloom_sidecar(num_shards=...)``
+# picks it once, and ``bloom_maybe``, ``append_bloom`` and
+# ``merge_bloom_generations`` read it off the sidecar's schema (a
+# ``shard`` column), so a caller toggling the form mid-history can never
+# mix the two. Results are byte-identical across forms (pytest-pinned).
+
+
+def _form(side: DataFrame) -> tuple[bool, list[str]]:
+    """``(sharded, parameter columns)`` of a sidecar frame — the one
+    place the form is read off the schema."""
+    sharded = "shard" in side.columns
+    return sharded, ["num_shards"] * sharded + ["num_bits", "num_hashes"]
+
+
+def _sidecar_params(side: DataFrame, sidecar_table: str):
+    """``(sharded, params)`` of a sidecar: ``params`` is its one
+    ``([num_shards,] num_bits, num_hashes)`` row. Mixed parameters raise —
+    generations that probe differently cannot share a sidecar."""
+    sharded, cols = _form(side)
+    params = side.select(*cols).distinct().collect()
+    if len(params) != 1:
+        raise ValueError(
+            f"sidecar {sidecar_table} mixes bloom parameters: {params}"
+        )
+    return sharded, params[0]
 
 
 def _shard_of(key: Column, num_shards: int, num_hashes: int) -> Column:
@@ -960,7 +810,7 @@ def _shard_of(key: Column, num_shards: int, num_hashes: int) -> Column:
     )
 
 
-def sharded_bloom_rows(
+def _sharded_rows(
     df: DataFrame,
     key_col: str,
     num_shards: int,
@@ -1006,85 +856,127 @@ def sharded_bloom_rows(
     dense = grid.join(words, ["shard", "widx"], "left").select(
         "shard", "widx", F.coalesce("w", F.lit(0).cast("long")).alias("w")
     )
-    return dense.groupBy("shard").agg(
+    return _with_params(
+        _collect_words(dense, ["shard"]), num_bits, num_hashes, num_shards
+    )
+
+
+def _collect_words(words: DataFrame, keys: list[str]) -> DataFrame:
+    """Dense ``(*keys, widx, w)`` word rows → one ``bits`` array<long>
+    per key group, ordered by ``widx``."""
+    return words.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("widx", "w"))),
             lambda s: s["w"],
         ).alias("bits")
-    ).select(
-        "shard",
-        F.lit(num_shards).alias("num_shards"),
+    )
+
+
+def _with_params(
+    bits: DataFrame, num_bits: int, num_hashes: int,
+    num_shards: int | None = None,
+) -> DataFrame:
+    """Sidecar rows: the ``bits`` frame plus its parameter literals, in
+    the form's column order."""
+    lead = ["shard", F.lit(num_shards).alias("num_shards")] if num_shards else []
+    return bits.select(
+        *lead,
         F.lit(num_bits).alias("num_bits"),
         F.lit(num_hashes).alias("num_hashes"),
         "bits",
     )
 
 
-def build_sharded_bloom_sidecar(
+def _generation(
+    df: DataFrame, key_col: str, num_bits: int, num_hashes: int,
+    num_shards: int | None,
+) -> DataFrame:
+    """One sidecar generation over ``df[key_col]`` in either form."""
+    if num_shards:
+        return _sharded_rows(df, key_col, num_shards, num_bits, num_hashes)
+    return _with_params(
+        bloom_bitmap(df, key_col, num_bits, num_hashes), num_bits, num_hashes
+    )
+
+
+def build_bloom_sidecar(
     spark: SparkSession,
     store_table: str,
     sidecar_table: str,
     key_col: str = "digest",
-    num_shards: int = 16,
     num_bits: int = 1 << 20,
     num_hashes: int = 5,
+    num_shards: int | None = None,
 ) -> None:
-    """One-time sharded sidecar build from the CURRENT store contents —
-    the scale form of ``build_bloom_sidecar`` (``num_bits`` is PER
-    SHARD: total capacity = num_shards × num_bits, so size num_shards
-    for ~10 bits/key per shard and grow shards, not bitmap width, as
-    the store grows). Derived data; rebuild from the store on loss."""
-    rows = sharded_bloom_rows(
-        spark.table(store_table), key_col, num_shards, num_bits, num_hashes
+    """One-time sidecar build from the CURRENT store contents: one
+    generation keyed on ``key_col`` (a digest, a canonical URL, or a
+    store's id column for the ``vector_store.admit_novel`` replay
+    guard). ``num_shards`` picks the sharded form, with ``num_bits``
+    then PER SHARD — required past ~4M keys; grow shards, not bitmap
+    width, as the store grows. Size ≈ 10 bits per expected distinct key
+    for ~1% false positives at 5 hashes. The sidecar is derived data —
+    losing it never loses information, rebuild from the store."""
+    rows = _generation(
+        spark.table(store_table), key_col, num_bits, num_hashes, num_shards
     )
     spark.sql(f"DROP TABLE IF EXISTS `{sidecar_table}`")
     drop_orphan_table_location(spark, sidecar_table)
     rows.write.mode("overwrite").format("parquet").saveAsTable(sidecar_table)
 
 
-def append_sharded_bloom(
+def append_bloom(
     novel: DataFrame,
     sidecar_table: str,
     key_col: str = "digest",
 ) -> None:
-    """Mirror of an append on the sharded sidecar: one generation
-    (num_shards rows) covering the batch's novel keys, parameters
-    inherited from the existing sidecar. Same lockstep contract as
-    ``append_bloom``."""
-    spark = novel.sparkSession
-    meta = spark.table(sidecar_table).select(
-        "num_shards", "num_bits", "num_hashes"
-    ).first()
-    rows = sharded_bloom_rows(
-        novel, key_col, meta.num_shards, meta.num_bits, meta.num_hashes
+    """Mirror of a store append on the sidecar: ONE generation covering
+    the batch's novel keys, in the sidecar's own form and parameters so
+    every generation probes identically. Feed it the same
+    ``is_dup = false`` slice ``append_digests``/``append_urls`` consumed —
+    appending keys without appending their bloom breaks the
+    no-false-negative contract."""
+    side = novel.sparkSession.table(sidecar_table)
+    sharded, cols = _form(side)
+    meta = side.select(*cols).first()
+    rows = _generation(
+        novel, key_col, meta.num_bits, meta.num_hashes,
+        meta.num_shards if sharded else None,
     )
     append_rows(rows, sidecar_table)
 
 
-def sharded_bloom_maybe(
-    frame: DataFrame,
-    sidecar_table: str,
-    key_col: str,
+def bloom_maybe(
+    frame: DataFrame, sidecar_table: str, key_col: str
 ) -> DataFrame:
     """``frame`` + a ``_maybe`` boolean: is each row's key maybe-seen in
-    its shard's generations? The INVERTED probe — the (key, shard)
-    pairs broadcast INTO the sidecar scan (nothing bitmap-sized ever
-    broadcasts), membership evaluates sidecar-side per (key,
-    generation-row), then ``max`` per key. A key whose shard has no
-    generation rows is definitely novel (left join → coalesce False)."""
-    spark = frame.sparkSession
-    side = spark.table(sidecar_table)
-    params = side.select("num_shards", "num_bits", "num_hashes").distinct().collect()
-    if len(params) != 1:
-        raise ValueError(
-            f"sidecar {sidecar_table} mixes bloom parameters: {params}"
-        )
-    ns, nb, nh = params[0].num_shards, params[0].num_bits, params[0].num_hashes
+    any sidecar generation? False is certain (no false negatives); True
+    may be a false positive. A monolithic sidecar broadcasts its
+    collected bitmaps into ``frame``; a sharded one is probed inverted —
+    the (key, shard) pairs broadcast INTO the sidecar scan, membership
+    evaluates per (key, generation-row), then ``max`` per key, and a key
+    whose shard has no generation rows is definitely novel."""
+    side = frame.sparkSession.table(sidecar_table)
+    sharded, p = _sidecar_params(side, sidecar_table)
+    if not sharded:
+        gens = side.agg(F.collect_list("bits").alias("_gens"))
+        return frame.crossJoin(F.broadcast(gens)).withColumn(
+            "_maybe",
+            F.coalesce(
+                bloom_might_contain(
+                    F.col(key_col), F.col("_gens"), p.num_bits, p.num_hashes
+                ),
+                F.lit(False),
+            ),
+        ).drop("_gens")
     keys = frame.select(F.col(key_col).alias("_k")).where(
         F.col("_k").isNotNull()
-    ).distinct().withColumn("shard", _shard_of(F.col("_k"), ns, nh))
+    ).distinct().withColumn(
+        "shard", _shard_of(F.col("_k"), p.num_shards, p.num_hashes)
+    )
     hit = F.coalesce(
-        bloom_might_contain(F.col("_k"), F.array(F.col("bits")), nb, nh),
+        bloom_might_contain(
+            F.col("_k"), F.array(F.col("bits")), p.num_bits, p.num_hashes
+        ),
         F.lit(False),
     )
     maybe = (
@@ -1101,42 +993,36 @@ def sharded_bloom_maybe(
     ).drop("_k").withColumn("_maybe", F.coalesce("_maybe", F.lit(False)))
 
 
-def merge_sharded_bloom_generations(
-    spark: SparkSession, sidecar_table: str
-) -> int:
-    """Collapse a sharded sidecar's generations to one per shard by
-    element-wise OR (the ``merge_bloom_generations`` discipline at shard
-    granularity — same ``io.private_copy_swap`` publish and crash
-    recovery). Returns the generation count merged (rows // num_shards)."""
+def merge_bloom_generations(spark: SparkSession, sidecar_table: str) -> int:
+    """Collapse the sidecar's generations into one (one row, or one row
+    per shard) by element-wise OR — blooms are union-mergeable — so the
+    probe's per-row work drops from G generations back to 1. Published
+    through ``io.private_copy_swap``, with its crashed-swap adoption on
+    entry; a crash that loses both copies only costs a rebuild (derived
+    data). Returns the number of generations merged."""
     _, publish = private_copy_swap(spark, sidecar_table)
     side = spark.table(sidecar_table)
-    params = side.select("num_shards", "num_bits", "num_hashes").distinct().collect()
-    if len(params) != 1:
-        raise ValueError(
-            f"sidecar {sidecar_table} mixes bloom parameters: {params}"
-        )
-    ns, nb, nh = params[0].num_shards, params[0].num_bits, params[0].num_hashes
-    generations = side.count() // ns
+    sharded, p = _sidecar_params(side, sidecar_table)
+    generations = side.count() // (p.num_shards if sharded else 1)
     if generations <= 1:
         return int(generations)
+    keys = ["shard"] * sharded
     words = (
-        side.select("shard", F.posexplode("bits").alias("widx", "w"))
-        .groupBy("shard", "widx")
+        side.select(*keys, F.posexplode("bits").alias("widx", "w"))
+        .groupBy(*keys, "widx")
         .agg(F.bit_or("w").alias("w"))
     )
-    merged = words.groupBy("shard").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("widx", "w"))),
-            lambda s: s["w"],
-        ).alias("bits")
-    ).select(
-        "shard",
-        F.lit(ns).alias("num_shards"),
-        F.lit(nb).alias("num_bits"),
-        F.lit(nh).alias("num_hashes"),
-        "bits",
-    )
-    publish([("", merged)])
+    if sharded:
+        # every (shard, widx) word is present: no grid to fill
+        bits = _collect_words(words, keys)
+    else:
+        bits = _assemble_bits(
+            words.select(F.col("widx").cast("long").alias("widx"), "w"),
+            p.num_bits // 64,
+        )
+    publish([("", _with_params(
+        bits, p.num_bits, p.num_hashes, p.num_shards if sharded else None
+    ))])
     return int(generations)
 
 

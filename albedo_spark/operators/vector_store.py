@@ -253,44 +253,14 @@ def admit_novel(
     ``mirror_bloom`` BEFORE the row write — a store id absent from every
     generation would be a false negative, the one error class that
     re-admits (duplicates) on replay."""
-    from albedo_spark.operators.dedup_store import (
-        bloom_might_contain,
-        sharded_bloom_maybe,
-    )
+    from albedo_spark.operators.dedup_store import bloom_maybe
 
     spark = frame.sparkSession
     bloom_table = table + "_bloom"
     if spark.catalog.tableExists(bloom_table):
-        side = spark.table(bloom_table)
-        if "shard" in side.columns:
-            # sharded sidecar (the >4M-key form): the batch's (key,
-            # shard) pairs broadcast INTO the sidecar scan — nothing
-            # bitmap-sized ever broadcasts
-            flagged = sharded_bloom_maybe(
-                frame, bloom_table, id_col
-            ).localCheckpoint(eager=False)
-        else:
-            params = side.select("num_bits", "num_hashes").distinct().collect()
-            if len(params) != 1:
-                raise ValueError(
-                    f"sidecar {bloom_table} mixes bloom parameters: {params}"
-                )
-            num_bits, num_hashes = params[0].num_bits, params[0].num_hashes
-            gens = side.agg(F.collect_list("bits").alias("_gens"))
-            flagged = (
-                frame.crossJoin(F.broadcast(gens))
-                .withColumn(
-                    "_maybe",
-                    F.coalesce(
-                        bloom_might_contain(
-                            F.col(id_col), F.col("_gens"), num_bits, num_hashes
-                        ),
-                        F.lit(False),
-                    ),
-                )
-                .drop("_gens")
-                .localCheckpoint(eager=False)  # consumers: isEmpty + splits
-            )
+        flagged = bloom_maybe(frame, bloom_table, id_col).localCheckpoint(
+            eager=False  # consumers: isEmpty + splits
+        )
         maybe = flagged.where(F.col("_maybe")).drop("_maybe")
         novel = flagged.where(~F.col("_maybe")).drop("_maybe")
         if maybe.isEmpty():
@@ -313,69 +283,21 @@ def admit_novel(
     return frame.join(F.broadcast(present), id_col, "left_anti")
 
 
-def build_id_bloom(
-    spark,
-    table: str,
-    id_col: str = "vec_id",
-    num_bits: int = 1 << 20,
-    num_hashes: int = 5,
-    num_shards: int | None = None,
-) -> None:
-    """Build the ``{table}_bloom`` replay-guard sidecar over the store's
-    CURRENT ids — q110's ``dedup_store.build_bloom_sidecar`` keyed on
-    the vector id instead of a digest. ``num_shards`` picks the SHARDED
-    form (``num_bits`` then per shard) — required past ~4M keys, where
-    the monolithic single-row bitmap goes heap-bound and its broadcast
-    stops being free; the two forms are interchangeable under
-    ``admit_novel`` (schema-dispatched) with byte-identical admits.
-    Derived data: losing it never loses information (rebuild from the
-    store); compact generations with ``dedup_store.
-    merge_bloom_generations`` / ``merge_sharded_bloom_generations``.
-    Size ≈ 10 bits per expected distinct id for ~1% false positives at
-    5 hashes — grow SHARDS, not bitmap width, as the store grows."""
-    if num_shards:
-        from albedo_spark.operators.dedup_store import (
-            build_sharded_bloom_sidecar,
-        )
-
-        build_sharded_bloom_sidecar(
-            spark, table, table + "_bloom", key_col=id_col,
-            num_shards=num_shards, num_bits=num_bits, num_hashes=num_hashes,
-        )
-        return
-    from albedo_spark.operators.dedup_store import build_bloom_sidecar
-
-    build_bloom_sidecar(
-        spark, table, table + "_bloom",
-        key_col=id_col, num_bits=num_bits, num_hashes=num_hashes,
-    )
-
-
 def mirror_bloom(
     admitted: DataFrame, table: str, id_col: str = "vec_id"
 ) -> None:
     """Keep the ``{table}_bloom`` sidecar in lockstep with an append:
-    one generation (one row monolithic, num_shards rows sharded —
-    schema-dispatched) covering the batch's ADMITTED ids; no-op when no
+    one generation, in the sidecar's own form (``dedup_store.
+    append_bloom``), covering the batch's ADMITTED ids; no-op when no
     sidecar exists. Call BEFORE writing the rows — bloom-first ordering
     keeps the sidecar a SUPERSET of the store across crash windows
     (bloom-without-rows is a harmless false-positive trickle;
     rows-without-bloom would be a re-admitting false negative)."""
-    from albedo_spark.operators.dedup_store import (
-        append_bloom,
-        append_sharded_bloom,
-    )
+    from albedo_spark.operators.dedup_store import append_bloom
 
     spark = admitted.sparkSession
     if spark.catalog.tableExists(table + "_bloom"):
-        if "shard" in spark.table(table + "_bloom").columns:
-            append_sharded_bloom(
-                admitted.select(id_col), table + "_bloom", key_col=id_col
-            )
-        else:
-            append_bloom(
-                admitted.select(id_col), table + "_bloom", key_col=id_col
-            )
+        append_bloom(admitted.select(id_col), table + "_bloom", key_col=id_col)
 
 
 def _load_codebooks(
@@ -530,7 +452,7 @@ def append_pq_vectors(
     probe. The sidecar is kept in lockstep automatically
     (``mirror_bloom`` before the row write). The code rows land in the
     store's own bucket and partition layout (``io.append_rows``)."""
-    from albedo_spark.io import append_rows
+    from albedo_spark.io import append_rows, table_partition_cols
     from albedo_spark.operators.clustering import integerize_embeddings
     from albedo_spark.operators.pq import encode_residual_codes
 
@@ -548,7 +470,7 @@ def append_pq_vectors(
     # A store built with partition_cols carries metadata directories;
     # the batch must supply the same columns (failing loudly here beats
     # a mis-partitioned append the pruned probe would silently miss).
-    pcols = [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+    pcols = table_partition_cols(spark, table)
     if pcols:
         missing = [c for c in pcols if c not in batch.columns]
         if missing:
@@ -804,10 +726,7 @@ def audit_pq_store(spark, table: str) -> dict:
 
     Cost: bucketed-scan aggregates over the code table plus one
     broadcast probe of the (tiny) model companions."""
-    from albedo_spark.operators.dedup_store import (
-        bloom_might_contain,
-        sharded_bloom_maybe,
-    )
+    from albedo_spark.operators.dedup_store import bloom_maybe
 
     codes = spark.table(table)
     cents = spark.table(table + "_cents")
@@ -833,22 +752,7 @@ def audit_pq_store(spark, table: str) -> dict:
     bloom_table = table + "_bloom"
     if spark.catalog.tableExists(bloom_table):
         ids = codes.select("vec_id").distinct()
-        side = spark.table(bloom_table)
-        if "shard" in side.columns:
-            flagged = sharded_bloom_maybe(ids, bloom_table, "vec_id")
-        else:
-            params = side.select("num_bits", "num_hashes").distinct().first()
-            gens = side.agg(F.collect_list("bits").alias("_gens"))
-            flagged = ids.crossJoin(F.broadcast(gens)).withColumn(
-                "_maybe",
-                F.coalesce(
-                    bloom_might_contain(
-                        F.col("vec_id"), F.col("_gens"),
-                        params["num_bits"], params["num_hashes"],
-                    ),
-                    F.lit(False),
-                ),
-            )
+        flagged = bloom_maybe(ids, bloom_table, "vec_id")
         bloom_false_negatives = flagged.where(~F.col("_maybe")).count()
 
     out = {

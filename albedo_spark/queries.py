@@ -1232,8 +1232,9 @@ def _adopt_published(
     publish protocol renames companions first and main last, so a
     complete main dir implies a complete store; the identity hash in
     the table name already pins the content to the exact source bytes
-    + recipe. Each member is registered with ``CREATE TABLE … USING
-    parquet [CLUSTERED BY …] LOCATION``, re-attaching the SAME bucket
+    + recipe. Each member is registered with ``CREATE TABLE IF NOT
+    EXISTS … USING parquet [CLUSTERED BY …] LOCATION``, re-attaching
+    the SAME bucket
     spec the builder wrote (callers pass it; bucket metadata is
     load-bearing — the zero-Exchange probe plans depend on it)."""
     jvm = spark.sparkContext._jvm
@@ -1257,7 +1258,9 @@ def _adopt_published(
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
-        sql = f"CREATE TABLE `{name}` ({ddl}) USING parquet"
+        # IF NOT EXISTS: a session registering the same member between
+        # the tableExists check and here is adopting the same directory
+        sql = f"CREATE TABLE IF NOT EXISTS `{name}` ({ddl}) USING parquet"
         spec = bucket_specs.get(suf)
         if spec is not None:
             col, n = spec
@@ -1330,9 +1333,10 @@ def _memo_store(
         ):
             _MEMO_SERVED[table] = table
             return table
-        for t in spark.catalog.listTables():
-            if t.name.startswith(f"{tag}_") and t.name != table:
-                spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+        # SHOW TABLES is a catalog read; catalog.listTables launches jobs
+        for t in spark.sql("SHOW TABLES").collect():
+            if t.tableName.startswith(f"{tag}_") and t.tableName != table:
+                spark.sql(f"DROP TABLE IF EXISTS `{t.tableName}`")
         tmp = f"{table}__b{_os.getpid()}"
         build(tmp)
         cleared = all(

@@ -256,6 +256,22 @@ def dedup_stream(
     )
 
 
+def _drain(stream_df: DataFrame, apply, checkpoint: str):
+    """Run ``apply(batch_df, batch_id)`` on each micro-batch of
+    ``stream_df`` (``foreachBatch``, recovering from ``checkpoint``),
+    drain all currently available input (``availableNow``), then stop.
+    Returns the terminated query handle. Every store sink runs this way:
+    call it again after more data lands."""
+    q = (
+        stream_df.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def run_to_upsert(
     stream_df: DataFrame,
     path: str,
@@ -283,14 +299,58 @@ def run_to_upsert(
             batch_df.sparkSession, batch_df, path, key_cols, partition_cols
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
+
+
+def _run_key_store_ingest(
+    stream_df: DataFrame,
+    table: str,
+    out_path: str,
+    checkpoint: str,
+    source_col: str,
+    key,
+    key_name: str,
+    id_col: str,
+    build_empty,
+):
+    """Shared sink core of the exact-key stores (digest, canonical URL):
+    each micro-batch keeps the rows whose ``key`` (a Column over
+    ``source_col``) is in no store row and whose id is the batch minimum
+    for that key, writes them, then appends their keys. Rows with a
+    NULL ``source_col`` are not ingested. ``build_empty(frame, table)``
+    creates the store from an empty frame on the first batch."""
+    from albedo_spark.io import append_rows
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        if not spark.catalog.tableExists(table):
+            build_empty(batch_df.limit(0), table)
+        store = spark.table(table).select(F.col(key_name).alias("_key"))
+        hashed = batch_df.where(F.col(source_col).isNotNull()).withColumn(
+            "_key", key
+        )
+        unseen = hashed.join(store, "_key", "left_anti")
+        first = unseen.groupBy("_key").agg(F.min(id_col).alias(id_col))
+        keep = unseen.join(first, ["_key", id_col]).persist()
+        try:
+            if keep.isEmpty():
+                return
+            keep.drop("_key").write.mode("overwrite").parquet(
+                f"{out_path}/ingest_batch={batch_id}"
+            )
+            append_rows(
+                keep.select(
+                    F.col("_key").alias(key_name),
+                    F.col(id_col).alias("keeper_id"),
+                ),
+                table,
+            )
+        finally:
+            keep.unpersist()
+
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def run_to_dedup_store(
@@ -326,49 +386,16 @@ def run_to_dedup_store(
     output is novel CONTENT). Reading ``out_path`` back discovers
     ``ingest_batch`` as a partition column.
     """
-    from albedo_spark.io import append_rows
     from albedo_spark.operators.dedup import normalize_text
     from albedo_spark.operators.dedup_store import build_digest_store
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if not spark.catalog.tableExists(table):
-            build_digest_store(
-                batch_df.limit(0), table, text_col, id_col, num_buckets
-            )
-        store = spark.table(table).select(F.col("digest").alias("_digest"))
-        hashed = batch_df.where(F.col(text_col).isNotNull()).withColumn(
-            "_digest", F.md5(normalize_text(F.col(text_col)))
-        )
-        unseen = hashed.join(store, "_digest", "left_anti")
-        first = unseen.groupBy("_digest").agg(F.min(id_col).alias(id_col))
-        keep = unseen.join(first, ["_digest", id_col]).persist()
-        try:
-            if keep.isEmpty():
-                return
-            keep.drop("_digest").write.mode("overwrite").parquet(
-                f"{out_path}/ingest_batch={batch_id}"
-            )
-            append_rows(
-                keep.select(
-                    F.col("_digest").alias("digest"),
-                    F.col(id_col).alias("keeper_id"),
-                ),
-                table,
-            )
-        finally:
-            keep.unpersist()
-
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_key_store_ingest(
+        stream_df, table, out_path, checkpoint, text_col,
+        F.md5(normalize_text(F.col(text_col))), "digest", id_col,
+        lambda empty, t: build_digest_store(
+            empty, t, text_col, id_col, num_buckets
+        ),
     )
-    q.awaitTermination()
-    return q
 
 
 def run_to_url_store(
@@ -387,62 +414,19 @@ def run_to_url_store(
     canonical URL) AND no canonical URL in the store — then advances
     the store. The streaming twin of ``url_dedup_incremental``, and the
     FIRST rung a continuous crawl runs: a page dropped here never pays
-    extraction, langid, digesting, or shingling at all.
-
-    Exactly-once novel-doc effects across restarts, the
-    ``run_to_dedup_store`` recipe verbatim: novel rows land under
-    ``out_path/ingest_batch=<id>`` with OVERWRITE (a replayed batch
-    rewrites the same directory, or skips the write when its URLs
-    already reached the store); the store append is an anti-join
-    against the live store, so a replay appends nothing. Rows write
-    before URLs: a crash between the two replays into the
-    same-directory overwrite, never duplicate rows. NULL-url rows
-    carry no fetch identity and are not ingested."""
+    extraction, langid, digesting, or shingling at all. Same
+    exactly-once recipe as ``run_to_dedup_store``; NULL-url rows carry
+    no fetch identity and are not ingested."""
     from albedo_spark.functions.urls import canonicalize_url
-    from albedo_spark.io import append_rows
     from albedo_spark.operators.dedup_store import build_url_store
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if not spark.catalog.tableExists(table):
-            build_url_store(
-                batch_df.limit(0), table, url_col, id_col, num_buckets
-            )
-        store = spark.table(table).select(
-            F.col("canonical_url").alias("_curl")
-        )
-        hashed = batch_df.where(F.col(url_col).isNotNull()).withColumn(
-            "_curl", canonicalize_url(F.col(url_col))
-        )
-        unseen = hashed.join(store, "_curl", "left_anti")
-        first = unseen.groupBy("_curl").agg(F.min(id_col).alias(id_col))
-        keep = unseen.join(first, ["_curl", id_col]).persist()
-        try:
-            if keep.isEmpty():
-                return
-            keep.drop("_curl").write.mode("overwrite").parquet(
-                f"{out_path}/ingest_batch={batch_id}"
-            )
-            append_rows(
-                keep.select(
-                    F.col("_curl").alias("canonical_url"),
-                    F.col(id_col).alias("keeper_id"),
-                ),
-                table,
-            )
-        finally:
-            keep.unpersist()
-
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_key_store_ingest(
+        stream_df, table, out_path, checkpoint, url_col,
+        canonicalize_url(F.col(url_col)), "canonical_url", id_col,
+        lambda empty, t: build_url_store(
+            empty, t, url_col, id_col, num_buckets
+        ),
     )
-    q.awaitTermination()
-    return q
 
 
 def run_to_bm25_store(
@@ -499,14 +483,7 @@ def run_to_bm25_store(
             return
         append_bm25_postings(batch_df, table, text_col, id_col)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def run_to_minhash_store(
@@ -760,14 +737,7 @@ def _run_near_dup_ingest(
         finally:
             keep.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def run_to_pq_store(
@@ -827,14 +797,7 @@ def run_to_pq_store(
             replay_guard=True,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def run_to_cms_store(
@@ -875,14 +838,7 @@ def run_to_cms_store(
             f"{out_path}/sketch_batch={batch_id}"
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def read_cms_store(spark, out_path: str) -> DataFrame:
@@ -921,14 +877,7 @@ def run_to_hll_store(
             f"{out_path}/sketch_batch={batch_id}"
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def read_hll_store(spark, out_path: str) -> DataFrame:
@@ -976,14 +925,7 @@ def run_to_histogram_store(
             batch_df, value_col, boundaries, group_col=group_col
         ).write.mode("overwrite").parquet(f"{out_path}/sketch_batch={batch_id}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _apply, checkpoint)
 
 
 def read_histogram_store(

@@ -257,11 +257,8 @@ def test_sharded_sidecar_equivalence_lockstep_and_merge(spark):
     merge collapses generations per shard and leaves probe answers
     unchanged, and (e) nothing bitmap-sized broadcasts — the batch side
     is the build side of the probe join."""
-    from albedo_spark.operators.dedup_store import (
-        merge_sharded_bloom_generations,
-        sharded_bloom_maybe,
-    )
-    from albedo_spark.operators.vector_store import admit_novel, build_id_bloom
+    from albedo_spark.operators.dedup_store import bloom_maybe
+    from albedo_spark.operators.vector_store import admit_novel
 
     def vec(i):
         return [float((i * 31 + d * 7) % 13 - 6) for d in range(64)]
@@ -284,7 +281,10 @@ def test_sharded_sidecar_equivalence_lockstep_and_merge(spark):
         build_pq_store(base, tbl, kc=4, m=4, subdim=16, num_buckets=4,
                        stride=7)
         if shards is not None:
-            build_id_bloom(spark, tbl, num_bits=1 << 10, num_shards=shards)
+            build_bloom_sidecar(
+                spark, tbl, tbl + "_bloom", key_col="vec_id",
+                num_bits=1 << 10, num_shards=shards,
+            )
         append_pq_vectors(batch, tbl, m=4, subdim=16)
         rows = sorted(tuple(r) for r in spark.table(tbl).collect())
         return tbl, rows
@@ -299,7 +299,7 @@ def test_sharded_sidecar_equivalence_lockstep_and_merge(spark):
         stored = spark.table(t_shrd).select(
             F.col("vec_id").alias("k")
         ).distinct()
-        flags = sharded_bloom_maybe(stored, t_shrd + "_bloom", "k")
+        flags = bloom_maybe(stored, t_shrd + "_bloom", "k")
         assert flags.where(~F.col("_maybe")).count() == 0
 
         # (c) lockstep: build + one append generation = 2 * num_shards rows
@@ -309,16 +309,16 @@ def test_sharded_sidecar_equivalence_lockstep_and_merge(spark):
         # (d) merge collapses to one generation per shard, answers equal
         before = {
             r.k: r._maybe
-            for r in sharded_bloom_maybe(
+            for r in bloom_maybe(
                 stored, t_shrd + "_bloom", "k"
             ).collect()
         }
-        n_gen = merge_sharded_bloom_generations(spark, t_shrd + "_bloom")
+        n_gen = merge_bloom_generations(spark, t_shrd + "_bloom")
         assert n_gen == 2
         assert spark.table(t_shrd + "_bloom").count() == 4
         after = {
             r.k: r._maybe
-            for r in sharded_bloom_maybe(
+            for r in bloom_maybe(
                 stored, t_shrd + "_bloom", "k"
             ).collect()
         }
@@ -340,7 +340,7 @@ def test_sharded_sidecar_equivalence_lockstep_and_merge(spark):
         # frame sits behind a materialized localCheckpoint): the batch
         # keys are the BROADCAST build side, the sidecar streams, and
         # the store relation never appears
-        probe = sharded_bloom_maybe(iv, t_shrd + "_bloom", "vec_id")
+        probe = bloom_maybe(iv, t_shrd + "_bloom", "vec_id")
         plan = probe._jdf.queryExecution().executedPlan().toString()
         n_store_refs = plan.count(f"default.{t_shrd}") - plan.count(
             f"default.{t_shrd}_bloom"
@@ -407,7 +407,6 @@ def test_url_sharded_bloom_resolution_equivalence(spark):
     plain path (the inverted probe — keys broadcast INTO the sidecar
     scan — applied to canonical_url keys)."""
     from albedo_spark.operators.dedup_store import (
-        build_sharded_bloom_sidecar,
         build_url_store,
         url_dedup_incremental,
     )
@@ -422,7 +421,7 @@ def test_url_sharded_bloom_resolution_equivalence(spark):
     ).select("doc_id", "url")
     hist = docs.where("doc_id % 3 != 0")
     build_url_store(hist, "blus_store", num_buckets=8)
-    build_sharded_bloom_sidecar(
+    build_bloom_sidecar(
         spark, "blus_store", "blus_side",
         key_col="canonical_url", num_shards=4, num_bits=1 << 12,
     )
@@ -453,16 +452,8 @@ def test_bloom_merge_crash_adoption(spark, shards):
     ``{sidecar}__c<pid>`` with the published name gone: the next merge
     ADOPTS it, and admit decisions are unchanged. A stale private copy
     beside a live sidecar is debris and is dropped."""
-    from albedo_spark.operators.dedup_store import (
-        merge_sharded_bloom_generations,
-    )
-    from albedo_spark.operators.vector_store import (
-        admit_novel,
-        build_id_bloom,
-        mirror_bloom,
-    )
+    from albedo_spark.operators.vector_store import admit_novel, mirror_bloom
 
-    merge = merge_sharded_bloom_generations if shards else merge_bloom_generations
     tbl = f"blq_crash_{shards}"
     side = tbl + "_bloom"
     ids = spark.range(0, 60).select(F.col("id").alias("vec_id"))
@@ -473,7 +464,10 @@ def test_bloom_merge_crash_adoption(spark, shards):
 
     try:
         ids.where("vec_id < 30").write.mode("overwrite").saveAsTable(tbl)
-        build_id_bloom(spark, tbl, num_bits=1 << 10, num_shards=shards)
+        build_bloom_sidecar(
+            spark, tbl, side, key_col="vec_id",
+            num_bits=1 << 10, num_shards=shards,
+        )
         late = ids.where("vec_id >= 30")
         mirror_bloom(late, tbl)  # second generation, then the rows
         late.write.mode("append").saveAsTable(tbl)
@@ -484,14 +478,14 @@ def test_bloom_merge_crash_adoption(spark, shards):
         # sidecar was dropped, the RENAME never ran
         spark.table(side).write.saveAsTable(f"{side}__c999")
         spark.sql(f"DROP TABLE `{side}`")
-        assert merge(spark, side) == 2  # adopted, then merged
+        assert merge_bloom_generations(spark, side) == 2  # adopted, then merged
         assert not spark.catalog.tableExists(f"{side}__c999")
         assert spark.table(side).count() == max(shards, 1)  # one generation
         assert admitted() == want
 
         # stale private copy beside a live sidecar: dropped
         spark.table(side).write.saveAsTable(f"{side}__c123")
-        assert merge(spark, side) == 1
+        assert merge_bloom_generations(spark, side) == 1
         assert not spark.catalog.tableExists(f"{side}__c123")
         assert admitted() == want
     finally:

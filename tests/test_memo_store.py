@@ -88,3 +88,33 @@ def test_adopt_refuses_incomplete_directory_set(spark, tmp_path):
         )
         is False
     )
+
+
+def test_adopt_tolerates_member_registered_concurrently(spark, tmp_path, monkeypatch):
+    """A member another session registers between adoption's
+    ``tableExists`` check and its CREATE must not fail the adoption: the
+    CREATE is ``IF NOT EXISTS`` (same directory, same bytes)."""
+    from albedo_spark.operators.retrieval import build_bm25_store
+    from albedo_spark.queries import _MEMO_SERVED, _adopt_published, _memo_store
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta doc{i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    specs = {"": ("w", 4), "_stats": None}
+    table = _memo_store(
+        spark, str(tmp_path), "documents", "t_adopt_race",
+        lambda t: build_bm25_store(docs, t, num_buckets=4),
+        companions=("_stats",), adopt_buckets=specs,
+    )
+    try:
+        # every member is registered, but the check reports it absent
+        monkeypatch.setattr(spark.catalog, "tableExists", lambda *a, **k: False)
+        assert _adopt_published(spark, table, ("_stats",), specs) is True
+        monkeypatch.undo()
+        assert spark.table(table).count() > 0
+    finally:
+        _MEMO_SERVED.pop(table, None)
+        for m in (table, table + "_stats"):
+            spark.sql(f"DROP TABLE IF EXISTS `{m}`")

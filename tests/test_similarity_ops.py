@@ -979,6 +979,18 @@ def test_pq_store_partition_pruned_filtered_search(spark):
         assert "grp" in filt and "= 1" in filt
         assert "BroadcastHashJoin" in plan
 
+        # the append's partition-column lookup is a catalog read that
+        # launches no Spark job (it runs on every PQ append)
+        from albedo_spark.io import table_partition_cols
+        from tests.job_count import jobs_in_group
+
+        pcols, jobs = jobs_in_group(
+            spark, "pq-partition-cols",
+            lambda: table_partition_cols(spark, t_part),
+        )
+        assert pcols == ["grp"] and jobs == 0
+        assert table_partition_cols(spark, t_flat) == []
+
         # append into the partitioned store: batch must carry grp
         batch = emb.where("vec_id % 10 != 0 AND vec_id % 7 = 3")
         with pytest.raises(ValueError, match="missing column"):
@@ -1141,10 +1153,12 @@ def test_pq_store_bloom_sidecar_equivalence(spark):
     (probed: zero maybe-seen ids, so the store is never scanned), and
     (d) every append keeps the sidecar in lockstep (one generation per
     append, mirrored BEFORE the rows)."""
-    from albedo_spark.operators.dedup_store import bloom_might_contain
+    from albedo_spark.operators.dedup_store import (
+        bloom_might_contain,
+        build_bloom_sidecar,
+    )
     from albedo_spark.operators.vector_store import (
         append_pq_vectors,
-        build_id_bloom,
         build_pq_store,
         pq_store_topk,
     )
@@ -1158,7 +1172,9 @@ def test_pq_store_bloom_sidecar_equivalence(spark):
         tbl = "pqstore_bl" if with_bloom else "pqstore_nb"
         build_pq_store(base, tbl, kc=8, m=4, subdim=16, num_buckets=8)
         if with_bloom:
-            build_id_bloom(spark, tbl, num_bits=1 << 12)
+            build_bloom_sidecar(
+                spark, tbl, tbl + "_bloom", key_col="vec_id", num_bits=1 << 12
+            )
         append_pq_vectors(batch1, tbl, m=4, subdim=16)
         append_pq_vectors(batch1, tbl, m=4, subdim=16)  # replay
         append_pq_vectors(batch2, tbl, m=4, subdim=16)  # fresh

@@ -43,7 +43,7 @@ def main() -> None:
     from albedo_spark import io
     from albedo_spark.operators.dedup import normalize_text
     from albedo_spark.operators.dedup_store import (
-        bloom_might_contain,
+        bloom_maybe,
         build_bloom_sidecar,
         build_digest_store,
         exact_dedup_incremental,
@@ -87,22 +87,13 @@ def main() -> None:
         ).count()
         return round(time.perf_counter() - t0, 2)
 
-    def n_maybe(batch, num_bits):
-        side = spark.table("scale_digbloom")
-        gens = side.agg(F.collect_list("bits").alias("_gens"))
+    def n_maybe(batch):
+        digests = batch.select(
+            F.md5(normalize_text(F.col("text"))).alias("digest")
+        )
         return (
-            batch.select(
-                F.md5(normalize_text(F.col("text"))).alias("digest")
-            )
-            .crossJoin(F.broadcast(gens))
-            .where(
-                F.coalesce(
-                    bloom_might_contain(
-                        F.col("digest"), F.col("_gens"), num_bits, 5
-                    ),
-                    F.lit(False),
-                )
-            )
+            bloom_maybe(digests, "scale_digbloom", "digest")
+            .where("_maybe")
             .count()
         )
 
@@ -136,7 +127,7 @@ def main() -> None:
                         "n_batch": n_batch,
                         "plain_sec": plain,
                         "bloom_sec": bloomed,
-                        "n_join_rows": n_maybe(batch, num_bits),
+                        "n_join_rows": n_maybe(batch),
                     }
                 )
             )

@@ -4,7 +4,7 @@ measured (VERDICT r11 #2).
 ``append_pq_vectors``'s replay guard probes the store id column per
 batch (broadcast semi — no Exchange, but a scan whose cost grows
 linearly with the store). With the ``{table}_bloom`` sidecar
-(``vector_store.build_id_bloom`` — q110's machinery keyed on vec_id) a
+(``dedup_store.build_bloom_sidecar`` keyed on vec_id — q110's machinery) a
 FRESH batch is split map-side into definite-novel rows and the store is
 never scanned, so per-batch admit cost is O(batch) at any store size.
 
@@ -49,10 +49,10 @@ Monolithic-sidecar boundary — and its cure: at 32 bits/key the one-row
 bitmap is num_keys*4 bytes; past ~4M keys the single-row assembly +
 broadcast goes heap-bound (measured OOM at 2^29 bits) and already at
 2.5M keys the 64 MB bitmap broadcast costs 5x the sharded probe. The
-SHARDED sidecar (dedup_store.sharded_bloom_rows — per-shard bitmaps,
-batch keys broadcast INTO the sidecar scan, nothing bitmap-sized ever
-broadcast) stays ~2 s flat from 250k to 10M keys and is the form
-`build_id_bloom(num_shards=...)` selects; admit results are
+SHARDED sidecar (per-shard bitmaps, batch keys broadcast INTO the
+sidecar scan, nothing bitmap-sized ever broadcast) stays ~2 s flat from
+250k to 10M keys and is the form `build_bloom_sidecar(num_shards=...)`
+selects; admit results are
 byte-identical across none/monolithic/sharded (pytest-pinned).
 
 Usage::
@@ -93,7 +93,8 @@ def code_rows(spark, n_vectors: int, m: int = 4):
 
 
 def main() -> None:
-    from albedo_spark.operators.vector_store import admit_novel, build_id_bloom
+    from albedo_spark.operators.dedup_store import bloom_maybe, build_bloom_sidecar
+    from albedo_spark.operators.vector_store import admit_novel
     from albedo_spark.session import get_spark
 
     sizes = [int(a) for a in sys.argv[1:]] or [250_000, 1_000_000, 2_500_000]
@@ -132,7 +133,10 @@ def main() -> None:
         num_bits = 1 << max(21, (32 * n - 1).bit_length())
         if n <= 4_000_000:
             t0 = time.time()
-            build_id_bloom(spark, tbl, num_bits=num_bits)
+            build_bloom_sidecar(
+                spark, tbl, tbl + "_bloom", key_col="vec_id",
+                num_bits=num_bits,
+            )
             out["sidecar_build_sec"] = round(time.time() - t0, 3)
             out["num_bits"] = num_bits
 
@@ -155,17 +159,9 @@ def main() -> None:
             # deterministic FP count for THIS batch (fixed ids +
             # xxhash64): the store scan appears in the plan iff any id
             # is maybe-seen
-            from albedo_spark.operators.dedup_store import bloom_might_contain
-
-            side = spark.table(tbl + "_bloom")
-            gens = side.agg(F.collect_list("bits").alias("_gens"))
             out["n_fp_fresh"] = (
-                fresh.crossJoin(F.broadcast(gens))
-                .where(
-                    bloom_might_contain(
-                        F.col("vec_id"), F.col("_gens"), num_bits, 5
-                    )
-                )
+                bloom_maybe(fresh, tbl + "_bloom", "vec_id")
+                .where("_maybe")
                 .count()
             )
             assert out["store_scanned_fresh"] == (out["n_fp_fresh"] > 0)
@@ -186,8 +182,9 @@ def main() -> None:
         per_shard_bits = 1 << max(21, (32 * n // num_shards - 1).bit_length())
         spark.sql(f"DROP TABLE IF EXISTS {tbl}_bloom")
         t0 = time.time()
-        build_id_bloom(
-            spark, tbl, num_bits=per_shard_bits, num_shards=num_shards,
+        build_bloom_sidecar(
+            spark, tbl, tbl + "_bloom", key_col="vec_id",
+            num_bits=per_shard_bits, num_shards=num_shards,
         )
         out["sharded_build_sec"] = round(time.time() - t0, 3)
         out["num_shards"] = num_shards
