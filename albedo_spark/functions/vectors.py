@@ -31,6 +31,15 @@ def l2_norm(a: Column) -> Column:
     )
 
 
+def cosine_from_norms(a: Column, na: Column, b: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` from their precomputed L2 norms ``na``
+    and ``nb`` (norms once per side, never per pair); 0.0 when either
+    norm is zero."""
+    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(
+        F.lit(0.0)
+    )
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity; 0.0 when either vector has zero norm."""
     denom = l2_norm(a) * l2_norm(b)

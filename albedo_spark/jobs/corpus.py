@@ -824,7 +824,7 @@ def main(argv: list[str] | None = None) -> dict:
         # components and each keeps its highest-quality member (the
         # --keeper-quality / --ahash-dedup election, q113's rule).
         # Docs without an embedding row are not judged and survive.
-        from albedo_spark.functions.vectors import dot
+        from albedo_spark.functions.vectors import cosine_from_norms
         from albedo_spark.operators.clustering import (
             assign_clusters,
             integerize_embeddings,
@@ -854,11 +854,9 @@ def main(argv: list[str] | None = None) -> dict:
             .where(F.col("id_a") < F.col("id_b"))
             .withColumn(
                 "cosine",
-                F.when(
-                    (F.col("_na") > 0) & (F.col("_nb") > 0),
-                    dot(F.col("_va"), F.col("_vb"))
-                    / (F.col("_na") * F.col("_nb")),
-                ).otherwise(F.lit(0.0)),
+                cosine_from_norms(
+                    F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb")
+                ),
             )
             .where(F.col("cosine") >= args.semdedup_cosine)
             .select("id_a", "id_b")

@@ -44,9 +44,18 @@ sharded one for more than ~4M keys; this module is the only code that
 knows which a sidecar is. Callers use ``build_bloom_sidecar(...,
 num_shards=None)`` once, then ``bloom_maybe``, ``append_bloom`` and
 ``merge_bloom_generations``, which read the form off the sidecar.
+
+One banded core. ``dedup_incremental`` and ``simhash_incremental`` are
+one resolver, ``_banded_pairs`` (store projection, replay exclusion,
+checkpointed batch bands, combined bucket cap, cross and internal
+joins); they fix only the band rows, and SimHash adds its pair measure
+``hamming <= max_hamming``. ``_exclude_store_rows`` is the replay
+exclusion of every incremental resolver, ``vector_incremental`` too.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -140,6 +149,101 @@ def append_signatures(
     )
 
 
+def _exclude_store_rows(
+    store: DataFrame, exclude_store_ids: DataFrame | None
+) -> DataFrame:
+    """``store`` minus the rows whose ``_sid`` is in ``exclude_store_ids``
+    (a one-column id frame, assumed small): a broadcast anti-join, so
+    the store still never shuffles. The replay guard of every
+    incremental resolver: passing the batch's own ids hides what a
+    crashed prior attempt already appended."""
+    if exclude_store_ids is None:
+        return store
+    xid = exclude_store_ids.select(
+        F.col(exclude_store_ids.columns[0]).alias("_xid")
+    )
+    return store.join(
+        F.broadcast(xid), F.col("_sid") == F.col("_xid"), "left_anti"
+    )
+
+
+def _banded_pairs(
+    bands: DataFrame,
+    table: str,
+    id_col: str,
+    max_bucket: int,
+    exclude_store_ids: DataFrame | None,
+    measure: tuple[str, Callable[[Column, Column], Column], int, str]
+    | None = None,
+) -> DataFrame:
+    """The banded-store resolver: pairs ``(id_a < id_b)`` touching the
+    batch band rows ``bands`` (the store's own schema), batch-vs-store
+    plus batch-internal, under the combined bucket-size cap. ``measure =
+    (payload, fn, bound, name)`` keeps a pair only when ``fn`` of the
+    two rows' ``payload`` values is ``<= bound``, emitted as ``name``."""
+    carried = [measure[0]] if measure else []
+    store = _exclude_store_rows(
+        bands.sparkSession.table(table).select(
+            F.col(id_col).alias("_sid"),
+            *[F.col(c).alias(f"_s{c}") for c in carried],
+            "bkey",
+        ),
+        exclude_store_ids,
+    )
+    # Three reads below (sizes, cross, internal): band the batch once.
+    # Lazy localCheckpoint, NOT persist: a lazy result could never
+    # unpersist its cache, so entries would pile up per batch in the
+    # production loop (jobs/corpus.py --incremental-filter); checkpoint
+    # blocks are reaped by the ContextCleaner once the result is dropped.
+    new_bands = bands.select(
+        F.col(id_col).alias("_bid"),
+        *[F.col(c).alias(f"_b{c}") for c in carried],
+        "bkey",
+    ).localCheckpoint(eager=False)
+
+    # Combined per-key size: the store-side count aggregates ON the
+    # bucketed layout (partial+final hash agg, no Exchange — the
+    # write_bucketed property), the batch side is small.
+    store_sizes = store.groupBy("bkey").agg(F.count("*").alias("_ns"))
+    batch_sizes = new_bands.groupBy("bkey").agg(F.count("*").alias("_nb"))
+    eligible = (
+        store_sizes.join(batch_sizes, "bkey", "full_outer")
+        .where(
+            F.coalesce("_ns", F.lit(0)) + F.coalesce("_nb", F.lit(0))
+            <= max_bucket
+        )
+        .select("bkey")
+    )
+
+    cross = new_bands.join(eligible, "bkey").join(store, "bkey")
+    internal = new_bands.join(eligible, "bkey").alias("a").join(
+        new_bands.alias("b"),
+        (F.col("a.bkey") == F.col("b.bkey"))
+        & (F.col("a._bid") < F.col("b._bid")),
+    )
+    keep = F.col("_bid") != F.col("_sid")
+    cross_out, internal_out = [], []
+    if measure:
+        c, fn, bound, name = measure
+        m_cross = fn(F.col(f"_b{c}"), F.col(f"_s{c}"))
+        m_internal = fn(F.col(f"a._b{c}"), F.col(f"b._b{c}"))
+        keep = keep & (m_cross <= bound)
+        internal = internal.where(m_internal <= bound)
+        cross_out = [m_cross.alias(name)]
+        internal_out = [m_internal.alias(name)]
+    cross = cross.where(keep).select(
+        F.least("_bid", "_sid").alias("id_a"),
+        F.greatest("_bid", "_sid").alias("id_b"),
+        *cross_out,
+    )
+    internal = internal.select(
+        F.col("a._bid").alias("id_a"),
+        F.col("b._bid").alias("id_b"),
+        *internal_out,
+    )
+    return cross.unionByName(internal).distinct()
+
+
 def dedup_incremental(
     batch: DataFrame,
     table: str,
@@ -168,62 +272,12 @@ def dedup_incremental(
     (including every combined-bucket-cap decision at the margin) is
     byte-identical — the exactly-once contract near ``max_bucket``.
     """
-    spark = batch.sparkSession
-    store = spark.table(table).select(
-        F.col(id_col).alias("_sid"), "bkey"
+    return _banded_pairs(
+        minhash_band_rows(
+            batch, text_col, id_col, num_hashes, rows_per_band, shingle_n
+        ),
+        table, id_col, max_bucket, exclude_store_ids,
     )
-    if exclude_store_ids is not None:
-        xid = exclude_store_ids.select(
-            F.col(exclude_store_ids.columns[0]).alias("_xid")
-        )
-        store = store.join(
-            F.broadcast(xid), F.col("_sid") == F.col("_xid"), "left_anti"
-        )
-    new_bands = minhash_band_rows(
-        batch, text_col, id_col, num_hashes, rows_per_band, shingle_n
-    ).select(F.col(id_col).alias("_bid"), "bkey")
-    # Referenced three times below (sizes, cross, internal): materialize
-    # the shingle/minhash stage once. Lazy localCheckpoint, NOT persist —
-    # this function returns a lazy frame so it could never unpersist its
-    # own cache, and a CacheManager entry would then accumulate per batch
-    # in the production loop this operator exists for
-    # (jobs/corpus.py --incremental-filter). Checkpoint blocks are
-    # released by the ContextCleaner once the caller drops the batch's
-    # result, so repeated batches stay flat (the line_boilerplate_dedup
-    # discipline).
-    new_bands = new_bands.localCheckpoint(eager=False)
-
-    # Combined per-key size: the store-side count aggregates ON the
-    # bucketed layout (partial+final hash agg, no Exchange — the
-    # write_bucketed property), the batch side is small.
-    store_sizes = store.groupBy("bkey").agg(F.count("*").alias("_ns"))
-    batch_sizes = new_bands.groupBy("bkey").agg(F.count("*").alias("_nb"))
-    eligible = (
-        store_sizes.join(batch_sizes, "bkey", "full_outer")
-        .where(
-            F.coalesce("_ns", F.lit(0)) + F.coalesce("_nb", F.lit(0))
-            <= max_bucket
-        )
-        .select("bkey")
-    )
-
-    cross = (
-        new_bands.join(eligible, "bkey")
-        .join(store, "bkey")
-        .where(F.col("_bid") != F.col("_sid"))
-        .select(
-            F.least("_bid", "_sid").alias("id_a"),
-            F.greatest("_bid", "_sid").alias("id_b"),
-        )
-    )
-    a = new_bands.join(eligible, "bkey").alias("a")
-    b = new_bands.alias("b")
-    internal = a.join(
-        b,
-        (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a._bid") < F.col("b._bid")),
-    ).select(F.col("a._bid").alias("id_a"), F.col("b._bid").alias("id_b"))
-    return cross.unionByName(internal).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -573,66 +627,16 @@ def simhash_incremental(
     sim_b)`` on the stored fingerprints — no candidate stage, no text
     re-read. Full recall iff ``max_hamming <= num_bands - 1``
     (pigeonhole); larger radii lose the guarantee."""
-    spark = batch.sparkSession
-    store = spark.table(table).select(
-        F.col(id_col).alias("_sid"), F.col("sim").alias("_ssim"), "bkey"
+    return _banded_pairs(
+        simhash_band_rows(batch, text_col, id_col, num_bits, num_bands),
+        table, id_col, max_bucket, exclude_store_ids,
+        measure=(
+            "sim",
+            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
+            max_hamming,
+            "hamming",
+        ),
     )
-    if exclude_store_ids is not None:
-        xid = exclude_store_ids.select(
-            F.col(exclude_store_ids.columns[0]).alias("_xid")
-        )
-        store = store.join(
-            F.broadcast(xid), F.col("_sid") == F.col("_xid"), "left_anti"
-        )
-    new_bands = (
-        simhash_band_rows(batch, text_col, id_col, num_bits, num_bands)
-        .select(
-            F.col(id_col).alias("_bid"), F.col("sim").alias("_bsim"), "bkey"
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    store_sizes = store.groupBy("bkey").agg(F.count("*").alias("_ns"))
-    batch_sizes = new_bands.groupBy("bkey").agg(F.count("*").alias("_nb"))
-    eligible = (
-        store_sizes.join(batch_sizes, "bkey", "full_outer")
-        .where(
-            F.coalesce("_ns", F.lit(0)) + F.coalesce("_nb", F.lit(0))
-            <= max_bucket
-        )
-        .select("bkey")
-    )
-
-    ham_cross = F.bit_count(
-        F.col("_bsim").bitwiseXOR(F.col("_ssim"))
-    ).cast("long")
-    cross = (
-        new_bands.join(eligible, "bkey")
-        .join(store, "bkey")
-        .where(
-            (F.col("_bid") != F.col("_sid")) & (ham_cross <= max_hamming)
-        )
-        .select(
-            F.least("_bid", "_sid").alias("id_a"),
-            F.greatest("_bid", "_sid").alias("id_b"),
-            ham_cross.alias("hamming"),
-        )
-    )
-    a = new_bands.join(eligible, "bkey").alias("a")
-    b = new_bands.alias("b")
-    ham_int = F.bit_count(
-        F.col("a._bsim").bitwiseXOR(F.col("b._bsim"))
-    ).cast("long")
-    internal = a.join(
-        b,
-        (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a._bid") < F.col("b._bid")),
-    ).where(ham_int <= max_hamming).select(
-        F.col("a._bid").alias("id_a"),
-        F.col("b._bid").alias("id_b"),
-        ham_int.alias("hamming"),
-    )
-    return cross.unionByName(internal).distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from albedo_spark.functions.vectors import dot, l2_norm
+from albedo_spark.functions.vectors import cosine_from_norms, dot, l2_norm
 from albedo_spark.operators.topk import top_k_per_group
 
 
@@ -73,10 +73,9 @@ def cosine_knn(
         c.join(F.broadcast(q), cond)
         .withColumn(
             "cosine",
-            F.when(
-                (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn")),
-            ).otherwise(F.lit(0.0)),
+            cosine_from_norms(
+                F.col("_cv"), F.col("_cn"), F.col("_qv"), F.col("_qn")
+            ),
         )
         .select(query_id_col, "neighbor_id", "cosine")
     )
@@ -150,10 +149,9 @@ def cosine_near_dup_pairs(
         .join(b, "id_b")
         .withColumn(
             "cosine",
-            F.when(
-                (F.col("_na") > 0) & (F.col("_nb") > 0),
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-            ).otherwise(F.lit(0.0)),
+            cosine_from_norms(
+                F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb")
+            ),
         )
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -202,6 +200,37 @@ def hyperplane_signature(
     return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
+def probe_buckets(sig: Column, num_planes: int, multi_probe: bool) -> Column:
+    """The buckets a ``num_planes``-bit signature probes: the signature
+    itself plus, under ``multi_probe``, its ``num_planes`` single-bit
+    flips (every bucket within Hamming distance 1). The one multi-probe
+    rule of the hyperplane-LSH operators and the vector store."""
+    if not multi_probe:
+        return F.array(sig)
+    return F.array(
+        sig, *[sig.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
+    )
+
+
+def _query_probes(
+    queries: DataFrame, dim: int, vec_col: str, query_id_col: str,
+    num_planes: int, seed: int, multi_probe: bool,
+) -> DataFrame:
+    """Probe rows ``(query_id, _qv, _qn, bucket)`` of a query batch: one
+    row per ``probe_buckets`` bucket of its hyperplane signature."""
+    q = _with_norm(queries, vec_col, "_qn").withColumn(
+        "_sig", hyperplane_signature(F.col(vec_col), dim, num_planes, seed)
+    )
+    return q.select(
+        F.col(query_id_col),
+        F.col(vec_col).alias("_qv"),
+        "_qn",
+        F.explode(
+            probe_buckets(F.col("_sig"), num_planes, multi_probe)
+        ).alias("bucket"),
+    )
+
+
 def random_hyperplane_lsh_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -228,21 +257,8 @@ def random_hyperplane_lsh_knn(
         "_cn",
         hyperplane_signature(F.col(vec_col), dim, num_planes, seed).alias("bucket"),
     )
-    q = _with_norm(queries, vec_col, "_qn").withColumn(
-        "_sig", hyperplane_signature(F.col(vec_col), dim, num_planes, seed)
-    )
-    if multi_probe:
-        probes = F.array(
-            F.col("_sig"),
-            *[F.col("_sig").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)],
-        )
-    else:
-        probes = F.array(F.col("_sig"))
-    q = q.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("_qv"),
-        "_qn",
-        F.explode(probes).alias("bucket"),
+    q = _query_probes(
+        queries, dim, vec_col, query_id_col, num_planes, seed, multi_probe
     )
     scored = (
         c.join(q, "bucket")
@@ -253,10 +269,9 @@ def random_hyperplane_lsh_knn(
         )
         .withColumn(
             "cosine",
-            F.when(
-                (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn")),
-            ).otherwise(F.lit(0.0)),
+            cosine_from_norms(
+                F.col("_cv"), F.col("_cn"), F.col("_qv"), F.col("_qn")
+            ),
         )
         .select(query_id_col, "neighbor_id", "cosine")
         .distinct()
@@ -305,10 +320,7 @@ def _cell_scores(
     piv_lit = F.expr("array(" + ",".join(parts) + ")")
 
     def score(p):
-        cos = F.when(
-            (norm_col > 0) & (p["pnorm"] > 0),
-            dot(vec_col, p["pv"]) / (norm_col * p["pnorm"]),
-        ).otherwise(F.lit(0.0))
+        cos = cosine_from_norms(vec_col, norm_col, p["pv"], p["pnorm"])
         return F.struct(cos.alias("cos"), p["cell"].alias("cell"))
 
     return F.sort_array(F.transform(piv_lit, score), asc=False)
@@ -370,10 +382,9 @@ def ivf_knn(
         )
         .withColumn(
             "cosine",
-            F.when(
-                (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn")),
-            ).otherwise(F.lit(0.0)),
+            cosine_from_norms(
+                F.col("_cv"), F.col("_cn"), F.col("_qv"), F.col("_qn")
+            ),
         )
         .select(query_id_col, "neighbor_id", "cosine")
         # No dedup: each corpus vector lives in exactly ONE cell
@@ -651,10 +662,9 @@ def hard_negatives(
         c.join(F.broadcast(a), cond)
         .withColumn(
             "cosine",
-            F.when(
-                (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn")),
-            ).otherwise(F.lit(0.0)),
+            cosine_from_norms(
+                F.col("_cv"), F.col("_cn"), F.col("_qv"), F.col("_qn")
+            ),
         )
         .select("anchor_id", "neighbor_id", "cosine")
     )

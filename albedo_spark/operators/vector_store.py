@@ -24,6 +24,13 @@ MinHash store's rows-per-band) because the signature is a single
 ``num_planes``-bit key; recall is tuned by ``num_planes``/multi-probe
 exactly as in ``random_hyperplane_lsh_knn`` — same S-curve, same seed
 discipline, same oracle replayability.
+
+One owner per candidate rule: ``similarity.probe_buckets`` (probes),
+``functions.vectors.cosine_from_norms`` (score), ``_probe_join_score``
+(bucket equi-join + cosine, for ``ann_store_knn``'s float branch,
+``near_dup_vs_store`` and both halves of ``vector_incremental``) and
+``dedup_store._exclude_store_rows`` (replay exclusion). Only the
+quantized branch of ``ann_store_knn`` scores on its own (BIGINT dot).
 """
 
 from __future__ import annotations
@@ -31,8 +38,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from albedo_spark.functions.vectors import dot
-from albedo_spark.operators.similarity import _with_norm, hyperplane_signature
+from albedo_spark.functions.vectors import cosine_from_norms
+from albedo_spark.operators.dedup_store import _exclude_store_rows
+from albedo_spark.operators.similarity import (
+    _query_probes,
+    _with_norm,
+    hyperplane_signature,
+    probe_buckets,
+)
 from albedo_spark.operators.topk import top_k_per_group
 
 
@@ -66,6 +79,32 @@ def _hashed(
         F.col(vec_col),
         "_n",
         sig.alias("bucket"),
+    )
+
+
+def _store_side(
+    rows: DataFrame, vec_col: str, id_col: str, alias: str
+) -> DataFrame:
+    """The probed side of a float store, or of a hashed batch (same
+    schema): ``(bucket, <alias>, _cv, _cn)``."""
+    return rows.select(
+        F.col("bucket"),
+        F.col(id_col).alias(alias),
+        F.col(vec_col).alias("_cv"),
+        F.col("_n").alias("_cn"),
+    )
+
+
+def _probe_join_score(probed: DataFrame, side: DataFrame) -> DataFrame:
+    """The store probe of the float vector family: probe rows ``(…, _qv,
+    _qn, bucket)`` equi-joined to ``_store_side`` rows on ``bucket`` —
+    the store's bucket column, so the store never shuffles — plus the
+    exact ``cosine`` over the precomputed norms."""
+    return probed.join(side, "bucket").withColumn(
+        "cosine",
+        cosine_from_norms(
+            F.col("_cv"), F.col("_cn"), F.col("_qv"), F.col("_qn")
+        ),
     )
 
 
@@ -142,19 +181,8 @@ def ann_store_knn(
     (BIGINT dot / √(BIGINT norms) — same buckets as a float store by
     the signature-before-quantization contract, near-identical ranking:
     recall floor pinned in tests)."""
-    spark = queries.sparkSession
-    store_raw = spark.table(table)
-    quantized = "qvec" in store_raw.columns
-    sig = hyperplane_signature(F.col(vec_col), dim, num_planes, seed)
-
-    def _probes(col):
-        if multi_probe:
-            return F.array(
-                col, *[col.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
-            )
-        return F.array(col)
-
-    if quantized:
+    store_raw = queries.sparkSession.table(table)
+    if "qvec" in store_raw.columns:
         from albedo_spark.operators.similarity import quantize_int8
 
         store = store_raw.select(
@@ -163,6 +191,7 @@ def ann_store_knn(
             F.col("qvec").alias("_cq"),
             F.col("qnorm2").alias("_cn2"),
         )
+        sig = hyperplane_signature(F.col(vec_col), dim, num_planes, seed)
         q = quantize_int8(
             queries.withColumn("_sig", sig),
             vec_col=vec_col,
@@ -172,7 +201,9 @@ def ann_store_knn(
             F.col(query_id_col),
             F.col("qvec").alias("_qq"),
             F.col("qnorm2").alias("_qn2"),
-            F.explode(_probes(F.col("_sig"))).alias("bucket"),
+            F.explode(
+                probe_buckets(F.col("_sig"), num_planes, multi_probe)
+            ).alias("bucket"),
         )
         scored = (
             q.join(store, "bucket")
@@ -192,36 +223,16 @@ def ann_store_knn(
                     / F.sqrt((F.col("_cn2") * F.col("_qn2")).cast("double")),
                 ).otherwise(F.lit(0.0)),
             )
-            .select(query_id_col, "neighbor_id", "cosine")
-            .distinct()
         )
     else:
-        store = store_raw.select(
-            F.col("bucket"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            F.col("_n").alias("_cn"),
+        scored = _probe_join_score(
+            _query_probes(
+                queries, dim, vec_col, query_id_col, num_planes, seed,
+                multi_probe,
+            ),
+            _store_side(store_raw, vec_col, id_col, "neighbor_id"),
         )
-        q = _with_norm(queries, vec_col, "_qn").withColumn("_sig", sig)
-        q = q.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qv"),
-            "_qn",
-            F.explode(_probes(F.col("_sig"))).alias("bucket"),
-        )
-        scored = (
-            q.join(store, "bucket")
-            .withColumn(
-                "cosine",
-                F.when(
-                    (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                    dot(F.col("_cv"), F.col("_qv"))
-                    / (F.col("_cn") * F.col("_qn")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .select(query_id_col, "neighbor_id", "cosine")
-            .distinct()
-        )
+    scored = scored.select(query_id_col, "neighbor_id", "cosine").distinct()
     return top_k_per_group(
         scored,
         [query_id_col],
@@ -565,38 +576,16 @@ def near_dup_vs_store(
     q90, and this). Identical probe mechanics to ``ann_store_knn`` minus
     the top-k: candidate pairs are bounded by bucket collisions, so the
     output is threshold-gated, never all-pairs."""
-    spark = queries.sparkSession
-    store = spark.table(table).select(
-        F.col("bucket"),
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_n").alias("_cn"),
-    )
-    q = _with_norm(queries, vec_col, "_qn").withColumn(
-        "_sig", hyperplane_signature(F.col(vec_col), dim, num_planes, seed)
-    )
-    probes = (
-        F.array(
-            F.col("_sig"),
-            *[F.col("_sig").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)],
-        )
-        if multi_probe
-        else F.array(F.col("_sig"))
-    )
-    q = q.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("_qv"),
-        "_qn",
-        F.explode(probes).alias("bucket"),
-    )
     return (
-        q.join(store, "bucket")
-        .withColumn(
-            "cosine",
-            F.when(
-                (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn")),
-            ).otherwise(F.lit(0.0)),
+        _probe_join_score(
+            _query_probes(
+                queries, dim, vec_col, query_id_col, num_planes, seed,
+                multi_probe,
+            ),
+            _store_side(
+                queries.sparkSession.table(table), vec_col, id_col,
+                "neighbor_id",
+            ),
         )
         .where(F.col("cosine") >= threshold)
         .select(query_id_col, "neighbor_id", "cosine")
@@ -640,69 +629,39 @@ def vector_incremental(
     shuffles — probes explode on the (small) batch side and equi-join
     the store's bucket layout.
     """
-    spark = batch.sparkSession
-    store = spark.table(table).select(
-        F.col("bucket"),
-        F.col(id_col).alias("_sid"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_n").alias("_cn"),
+    store = _exclude_store_rows(
+        _store_side(batch.sparkSession.table(table), vec_col, id_col, "_sid"),
+        exclude_store_ids,
     )
-    if exclude_store_ids is not None:
-        xid = exclude_store_ids.select(
-            F.col(exclude_store_ids.columns[0]).alias("_xid")
-        )
-        store = store.join(
-            F.broadcast(xid), F.col("_sid") == F.col("_xid"), "left_anti"
-        ).drop("_xid")
-
-    hashed = _hashed(batch, dim, vec_col, id_col, num_planes, seed)
-    probes = (
-        F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(num_planes)
-            ],
-        )
-        if multi_probe
-        else F.array(F.col("bucket"))
-    )
+    # Three reads below (the probe rows of both halves, the internal
+    # half's base rows): hash the batch once. Lazy localCheckpoint, not
+    # persist — the banded stores' discipline (``dedup_store.
+    # _banded_pairs``): a lazy result could never unpersist its cache.
+    hashed = _hashed(
+        batch, dim, vec_col, id_col, num_planes, seed
+    ).localCheckpoint(eager=False)
     probed = hashed.select(
         F.col(id_col).alias("_bid"),
         F.col(vec_col).alias("_qv"),
         F.col("_n").alias("_qn"),
-        F.explode(probes).alias("bucket"),
+        F.explode(
+            probe_buckets(F.col("bucket"), num_planes, multi_probe)
+        ).alias("bucket"),
     )
-
-    def _verified(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.withColumn(
-                "cosine",
-                F.when(
-                    (F.col("_cn") > 0) & (F.col("_qn") > 0),
-                    dot(F.col("_cv"), F.col("_qv"))
-                    / (F.col("_cn") * F.col("_qn")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .where(F.col("cosine") >= threshold)
-            .select(
-                F.least("_bid", "_sid").alias("id_a"),
-                F.greatest("_bid", "_sid").alias("id_b"),
-                "cosine",
-            )
+    pairs = _probe_join_score(probed, store).unionByName(
+        _probe_join_score(probed, _store_side(hashed, vec_col, id_col, "_sid"))
+    )
+    return (
+        pairs.where(
+            (F.col("_bid") != F.col("_sid")) & (F.col("cosine") >= threshold)
         )
-
-    cross = _verified(probed.join(store, "bucket"))
-    base = hashed.select(
-        "bucket",
-        F.col(id_col).alias("_sid"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_n").alias("_cn"),
+        .select(
+            F.least("_bid", "_sid").alias("id_a"),
+            F.greatest("_bid", "_sid").alias("id_b"),
+            "cosine",
+        )
+        .distinct()
     )
-    internal = _verified(
-        probed.join(base, "bucket").where(F.col("_bid") != F.col("_sid"))
-    )
-    return cross.unionByName(internal).distinct()
 
 
 def audit_pq_store(spark, table: str) -> dict:

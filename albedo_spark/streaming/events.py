@@ -661,19 +661,22 @@ def _run_near_dup_ingest(
     table: str,
     out_path: str,
     checkpoint: str,
-    text_col: str,
+    value_col: str,
     id_col: str,
     build_empty,
     pairs_for,
     append_novel,
 ):
-    """Shared near-dup ingest core (MinHash and SimHash sinks): admit =
-    batch minus docs paired to the store or to a smaller admitted batch
-    id; rows overwrite per-batch directories; the store append is
-    replay-guarded by an id probe. ``pairs_for`` must pass the batch's
-    own ids as ``exclude_store_ids`` so a replay whose prior attempt
-    already appended sees the store exactly as the first attempt did
-    (byte-identical admit decisions at the bucket-cap margin)."""
+    """Shared near-dup ingest core (MinHash, SimHash and vector sinks):
+    admit = batch minus rows paired to the store or to a smaller
+    admitted batch id; rows overwrite per-batch directories; the store
+    append is replay-guarded by an id probe. ``value_col`` is the
+    deduplicated column (text, or the vector sink's embedding); rows
+    where it is NULL are not ingested. ``pairs_for`` must pass the
+    batch's own ids as ``exclude_store_ids`` so a replay whose prior
+    attempt already appended sees the store exactly as the first
+    attempt did (byte-identical admit decisions at the bucket-cap
+    margin)."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -681,7 +684,7 @@ def _run_near_dup_ingest(
         spark = batch_df.sparkSession
         if not spark.catalog.tableExists(table):
             build_empty(batch_df.limit(0), table)
-        batch = batch_df.where(F.col(text_col).isNotNull())
+        batch = batch_df.where(F.col(value_col).isNotNull())
         pairs = pairs_for(batch, table).select("id_a", "id_b")
         # Pair members are unlabeled (store ids and batch ids mixed, each
         # pair sorted id_a < id_b): re-derive the side per member by a

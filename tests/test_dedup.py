@@ -1,6 +1,8 @@
 """Dedup operator semantics: planted duplicates must be found; hashes are
 portable; SimHash of near-identical docs is near-identical."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -433,21 +435,51 @@ def test_simhash_store_side_never_shuffles(spark):
         spark.sql("DROP TABLE IF EXISTS simstore_plan")
 
 
-def test_incremental_batches_leave_no_cache_entries(spark):
-    """The production loop (batch after batch in one session) must not
-    accumulate executor storage: dedup_incremental materializes its band
-    rows via lazy localCheckpoint (ContextCleaner-reaped), never via a
-    CacheManager persist this lazy function could not unpersist. Three
-    consecutive batches → the session CacheManager stays empty."""
-    from albedo_spark.operators.dedup_store import (
-        append_signatures,
-        build_signature_store,
-        dedup_incremental,
+def _rung(name):
+    """``(id_col, build, resolve, append)`` of one incremental store
+    rung: the banded MinHash and SimHash stores over documents, the
+    vector store over embeddings. ``build(rows, table, num_buckets=)``,
+    ``resolve(batch, table, **kw)``, ``append(batch, table)``."""
+    from albedo_spark.operators import dedup_store as ds
+    from albedo_spark.operators import vector_store as vs
+
+    if name == "minhash":
+        return ("doc_id", ds.build_signature_store, ds.dedup_incremental,
+                ds.append_signatures)
+    if name == "simhash":
+        return ("doc_id", ds.build_simhash_store, ds.simhash_incremental,
+                ds.append_simhash)
+    return (
+        "vec_id",
+        lambda c, t, num_buckets: vs.build_vector_store(
+            c, t, dim=8, num_planes=4, num_buckets=num_buckets
+        ),
+        lambda b, t: vs.vector_incremental(
+            b, t, threshold=0.9, dim=8, num_planes=4
+        ),
+        lambda b, t: vs.append_vectors(b, t, dim=8, num_planes=4),
     )
 
-    docs = _real_docs(spark)
-    hist = docs.where("doc_id % 4 = 0")
-    build_signature_store(hist, "sigstore_leak", num_buckets=8)
+
+@pytest.mark.parametrize("rung", ["minhash", "simhash", "vector"])
+def test_incremental_batches_leave_no_cache_entries(spark, rung):
+    """The production loop (batch after batch in one session) must not
+    accumulate executor storage: each incremental resolver materializes
+    its batch side via lazy localCheckpoint (ContextCleaner-reaped),
+    never via a CacheManager persist this lazy function could not
+    unpersist. Three consecutive batches → the session CacheManager
+    stays empty."""
+    id_col, build, resolve, append = _rung(rung)
+    if rung == "vector":
+        rng = random.Random(7)
+        rows = spark.createDataFrame(
+            [(i, [rng.gauss(0.0, 1.0) for _ in range(8)]) for i in range(200)],
+            "vec_id long, embedding array<double>",
+        )
+    else:
+        rows = _real_docs(spark)
+    table = f"store_leak_{rung}"
+    build(rows.where(f"{id_col} % 4 = 0"), table, num_buckets=8)
     # Earlier tests in the shared session may have live caches; start
     # from a clean slate so emptiness-after-batch is deterministic.
     spark.catalog.clearCache()
@@ -455,21 +487,20 @@ def test_incremental_batches_leave_no_cache_entries(spark):
     assert cache_mgr.isEmpty(), "precondition: no cached frames"
     try:
         for k in (1, 2, 3):
-            batch = docs.where(f"doc_id % 4 = {k}")
-            dedup_incremental(batch, "sigstore_leak").collect()
-            append_signatures(batch, "sigstore_leak")
+            batch = rows.where(f"{id_col} % 4 = {k}")
+            resolve(batch, table).collect()
+            append(batch, table)
             assert cache_mgr.isEmpty(), f"batch {k} left a cached frame"
     finally:
-        spark.sql("DROP TABLE IF EXISTS sigstore_leak")
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_incremental_combined_bucket_cap(spark):
+@pytest.mark.parametrize("rung", ["minhash", "simhash"])
+def test_incremental_combined_bucket_cap(spark, rung):
     """max_bucket suppresses a key whose COMBINED (store + batch) size
-    exceeds the cap, even when each side alone is under it."""
-    from albedo_spark.operators.dedup_store import (
-        build_signature_store,
-        dedup_incremental,
-    )
+    exceeds the cap, even when each side alone is under it — for both
+    banded resolvers, which share one core."""
+    _, build, resolve, _ = _rung(rung)
 
     # 4 identical docs: 2 historical, 2 in the batch -> every band key has
     # combined size 4
@@ -477,17 +508,18 @@ def test_incremental_combined_bucket_cap(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     hist = docs.where("doc_id <= 2")
     batch = docs.where("doc_id > 2")
-    build_signature_store(hist, "sigstore_cap", num_buckets=4)
+    table = f"store_cap_{rung}"
+    build(hist, table, num_buckets=4)
     try:
         open_pairs = {
             (r.id_a, r.id_b)
-            for r in dedup_incremental(batch, "sigstore_cap", max_bucket=4).collect()
+            for r in resolve(batch, table, max_bucket=4).collect()
         }
         assert open_pairs == {(1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
-        capped = dedup_incremental(batch, "sigstore_cap", max_bucket=3).count()
+        capped = resolve(batch, table, max_bucket=3).count()
         assert capped == 0  # combined size 4 > 3 though each side is <= 2
     finally:
-        spark.sql("DROP TABLE IF EXISTS sigstore_cap")
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 # ---------------------------------------------------------------------------

@@ -393,27 +393,38 @@ def test_q190_anchor_corpus_plan(spark):
     assert plan.count("WindowGroupLimit") == 4, plan  # partial+final ×2
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "q149_kmeans_clusters",
-        "q151_ivf_pq_ann",
-        "q158_pq_store_trained",
-        "q171_semantic_dedup",
-    ],
-)
-def test_kmeans_family_matches_oracle(spark, name):
-    """Oracle slice for the k-means family (trainer, IVF-PQ, trained-
-    codebook store, SemDeDup buckets — every caller of
-    ``clustering.kmeans_fit``): Spark result vs the DuckDB ORACLE_SQL,
-    compared by the correctness gate's order-insensitive table hash."""
+# Each oracle-slice query and the fixture tables its ORACLE_SQL reads.
+_ORACLE_SLICE = {
+    "q149_kmeans_clusters": ["embeddings"],
+    "q151_ivf_pq_ann": ["embeddings"],
+    "q158_pq_store_trained": ["embeddings"],
+    "q171_semantic_dedup": ["embeddings"],
+    "q33_ann_lsh": ["embeddings"],
+    "q37_ann_ivf": ["embeddings"],
+    "q90_incremental_dedup": ["documents"],
+    "q93_ann_vector_store": ["embeddings"],
+    "q102_near_dup_vs_store": ["embeddings"],
+    "q107_simhash_store": ["documents"],
+    "q112_vector_incremental": ["embeddings"],
+}
+
+
+@pytest.mark.parametrize("name", list(_ORACLE_SLICE))
+def test_candidate_family_matches_oracle(spark, name):
+    """Oracle slice for the candidate-then-verify family: every caller
+    of ``clustering.kmeans_fit`` (trainer, IVF-PQ, trained-codebook
+    store, SemDeDup buckets), the hyperplane-LSH and IVF kNN, the
+    vector store's three probes, and the banded MinHash and SimHash
+    stores. Spark result vs the DuckDB ORACLE_SQL, compared by the
+    correctness gate's order-insensitive table hash."""
     import duckdb
 
     from albedo_spark.queries import ORACLE_SQL
     from tools.check_correctness import table_hash
 
     con = duckdb.connect()
-    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'")
+    for t in _ORACLE_SLICE[name]:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     sdf = QUERIES[name](spark, SF)
     rel = con.sql(ORACLE_SQL[name])
     assert sorted(sdf.columns) == sorted(rel.columns)

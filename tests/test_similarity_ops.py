@@ -269,11 +269,37 @@ def test_ann_store_recall_floor_vs_bruteforce(spark):
     assert r6 >= 0.15, f"6-plane recall {r6:.3f} fell below the floor"
 
 
+def _unshuffled_store_scans(plan: str, table: str) -> int:
+    """Number of scans of ``table`` in an executed-plan tree string,
+    asserting each is bucket-aware with no Exchange between it and the
+    join that consumes it (the store never shuffles)."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    scans = [i for i, ln in enumerate(lines) if f"default.{table}[" in ln]
+    for i in scans:
+        assert "Bucketed: true" in lines[i], lines[i]
+        level = depth(lines[i])
+        for ln in reversed(lines[:i]):
+            if depth(ln) >= level:
+                continue
+            level = depth(ln)
+            node = ln.lstrip(" :+-")
+            assert not node.startswith("Exchange"), plan
+            if "Join" in node.split(" ")[0]:
+                break
+    return len(scans)
+
+
 def test_ann_store_append_and_plan(spark):
     from albedo_spark.operators.vector_store import (
         ann_store_knn,
         append_vectors,
         build_vector_store,
+        near_dup_vs_store,
+        vector_incremental,
     )
 
     emb = _emb(spark)
@@ -292,6 +318,32 @@ def test_ann_store_append_and_plan(spark):
         assert n_scans >= 1
         assert plan.count("Bucketed: true") == n_scans, plan
         n1 = out1.count()
+        # the other two store probes: every store scan is bucket-aware
+        # with no Exchange above it
+        batch = emb.where("vec_id % 10 = 0")
+        for frame in (
+            near_dup_vs_store(queries, "vecstore_app", threshold=0.3,
+                              dim=64, num_planes=6),
+            vector_incremental(batch, "vecstore_app", threshold=0.3,
+                               dim=64, num_planes=6),
+        ):
+            plan = frame._jdf.queryExecution().executedPlan().toString()
+            assert _unshuffled_store_scans(plan, "vecstore_app") >= 1, plan
+        # vector_incremental reads its batch source once, although three
+        # plan branches (the probes of both halves and the internal
+        # base rows) consume it: count rows through a pass-through UDF
+        reads = spark.sparkContext.accumulator(0)
+
+        def _counted(v):
+            reads.add(1)
+            return v
+
+        counted = batch.withColumn(
+            "embedding", F.udf(_counted, "array<float>")("embedding")
+        )
+        vector_incremental(counted, "vecstore_app", threshold=0.3, dim=64,
+                           num_planes=6).collect()
+        assert reads.value == batch.count()
         # appending more vectors can only add/improve neighbors
         append_vectors(emb.where("vec_id % 10 = 2"), "vecstore_app",
                        dim=64, num_planes=6)
@@ -397,6 +449,17 @@ def test_vector_incremental_pairs_and_replay_exclusion(spark):
             ).collect()
         }
         assert replay == got
+
+        # the same batch, now stored, WITHOUT the exclusion: a vector
+        # never pairs with its own stored row (id_a < id_b holds)
+        again = {
+            (r.id_a, r.id_b)
+            for r in vector_incremental(
+                batch, "vecstore_inc", threshold=0.95, dim=64, num_planes=6
+            ).collect()
+        }
+        assert all(a < b for a, b in again), sorted(again)
+        assert again == got
     finally:
         spark.sql("DROP TABLE IF EXISTS vecstore_inc")
 
