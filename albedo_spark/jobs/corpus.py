@@ -1211,6 +1211,7 @@ def main(argv: list[str] | None = None) -> dict:
         # run_to_bm25_store (streaming); rebuild-or-compact to refresh.
         from albedo_spark.operators.retrieval import (
             append_bm25_postings,
+            bm25_store_stats,
             build_bm25_store,
         )
 
@@ -1245,15 +1246,7 @@ def main(argv: list[str] | None = None) -> dict:
             )
             bm_mode = "build"
         spark.catalog.refreshTable(args.bm25_index)
-        st = (
-            spark.table(args.bm25_index + "_stats")
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("dl_total").alias("_t"),
-                F.count("*").alias("gens"),
-            )
-            .first()
-        )
+        st = bm25_store_stats(spark, args.bm25_index)
         if args.audit_sidecars:
             from albedo_spark.operators.retrieval import audit_bm25_store
 
@@ -1263,9 +1256,9 @@ def main(argv: list[str] | None = None) -> dict:
         summary["bm25_index"] = {
             "table": args.bm25_index,
             "mode": bm_mode,
-            "n_docs": int(st["n_docs"]),
-            "avgdl_x100": (100 * int(st["_t"])) // int(st["n_docs"]),
-            "n_generations": int(st["gens"]),
+            "n_docs": st.n_docs,
+            "avgdl_x100": st.avgdl_x100,
+            "n_generations": st.n_generations,
             "n_terms": spark.table(args.bm25_index)
             .select("w").distinct().count(),
             "forward": bool(args.bm25_forward),

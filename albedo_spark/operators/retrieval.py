@@ -30,11 +30,14 @@ headroom survives 10¹¹-document corpora.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from albedo_spark.operators.dedup import normalize_text
 from albedo_spark.operators.textstats import tokens
+from albedo_spark.operators.topk import top_k_per_group
 
 
 def bm25_search(
@@ -131,6 +134,62 @@ def bm25_search(
     )
 
 
+def _doc_texts(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, _text)`` — the documents a store build or append
+    indexes; rows with a NULL text are not documents."""
+    return docs.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
+    )
+
+
+def _posting_rows(texts: DataFrame) -> tuple[DataFrame, int, int]:
+    """The one posting builder, behind ``build_bm25_store`` and
+    ``append_bm25_postings``: ``(doc_id, _text)`` → the denormalized
+    ``(w, doc_id, tf, dl, df)`` rows (lazily checkpointed — the store
+    and its forward companion are written from them) plus the batch's
+    exact ``(n_docs, dl_total)`` as Python ints. ``df`` is the batch's
+    own per-term count; a doc with no tokens is not counted, and a
+    batch with none yields no rows and ``(0, 0)``."""
+    tf = (
+        texts.select("doc_id", F.explode(tokens(F.col("_text"))).alias("w"))
+        .where(F.col("w") != "")
+        .groupBy("doc_id", "w")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=False)  # consumers: dl, df, totals, rows
+    )
+    # dl feeds the totals collect and the rows join: checkpointed so
+    # its aggregate runs once, keeping its doc_id partitioning
+    dl = (
+        tf.groupBy("doc_id")
+        .agg(F.sum("tf").alias("dl"))
+        .localCheckpoint(eager=False)
+    )
+    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
+    n_docs, dl_total = dl.agg(
+        F.count("*"), F.coalesce(F.sum("dl"), F.lit(0))
+    ).first()
+    rows = tf.join(dl, "doc_id").join(dfreq, "w").select(
+        "w", "doc_id", "tf", "dl", "df"
+    ).localCheckpoint(eager=False)
+    return rows, int(n_docs), int(dl_total)
+
+
+def _avgdl_x100(n_docs: int, dl_total: int) -> int:
+    """``(100 * dl_total) div n_docs``; 0 for a store with no docs."""
+    return (100 * dl_total) // n_docs if n_docs else 0
+
+
+def _stats_frame(spark: SparkSession, gen, n_docs, dl_total) -> DataFrame:
+    """One ``{table}_stats`` generation row from exact integer scalars —
+    the only way a stats row is written (build, append, compact,
+    repair)."""
+    n, t = int(n_docs), int(dl_total)
+    return spark.createDataFrame(
+        [(int(gen), n, t, _avgdl_x100(n, t))],
+        "gen long, n_docs bigint, dl_total bigint, avgdl_x100 bigint",
+    )
+
+
 def build_bm25_store(
     docs: DataFrame,
     table: str,
@@ -145,12 +204,20 @@ def build_bm25_store(
     One corpus pass builds the posting list and DENORMALIZES everything
     scoring needs onto each row — ``(w, doc_id, tf, dl, df)`` — so a
     probe is ONE equi-join, no star schema: doc length and document
-    frequency are per-row integers, and the two corpus scalars
-    ``(n_docs, avgdl_x100)`` freeze as the ``{table}_stats`` companion
-    (the ``_cents`` frozen-model contract: scoring statistics are part
-    of the index and may not drift under a reader). Bucketed on ``w`` —
-    the probe key — so the store side of every search has ZERO Exchange.
-    Rebuild to refresh; the classic index-maintenance posture.
+    frequency are per-row integers, and the corpus scalars freeze as
+    the ``{table}_stats`` companion (the ``_cents`` frozen-model
+    contract: scoring statistics are part of the index and may not
+    drift under a reader). Bucketed on ``w`` — the probe key — so the
+    store side of every search has ZERO Exchange. Rebuild to refresh;
+    the classic index-maintenance posture.
+
+    Stats are per-GENERATION rows ``(gen, n_docs, dl_total,
+    avgdl_x100)``: a build is generation 0 and each
+    ``append_bm25_postings`` adds one row. ``dl_total`` makes the
+    scalars MERGEABLE at read (``bm25_store_stats``). An empty or
+    token-free ``docs`` builds an empty store — generation 0 is
+    ``(0, 0, 0, 0)`` — that every search answers with no rows and that
+    appends grow like any other.
 
     ``forward=True`` additionally persists the SAME rows as the
     ``{table}_fwd`` companion bucketed on ``doc_id`` — the forward
@@ -159,53 +226,17 @@ def build_bm25_store(
     whole table; the forward companion gives that fetch a
     bucket-pruned path (the classic postings+forward dual every search
     engine keeps). Costs one extra write of the index size."""
-    from albedo_spark.io import drop_orphan_table_location, write_bucketed
-
-    from albedo_spark.io import widen
+    from albedo_spark.io import drop_orphan_table_location, widen, write_bucketed
 
     spark = docs.sparkSession
-    toks = (
-        widen(
-            docs.where(F.col(text_col).isNotNull()).select(
-                F.col(id_col), F.col(text_col)
-            )
-        )
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.col(text_col))).alias("w"),
-        )
-        .where(F.col("w") != "")
-    )
-    tf = (
-        toks.groupBy("doc_id", "w")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)  # consumers: dl, df, stats, rows
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
-    # Stats are per-GENERATION rows (r13): (gen, n_docs, dl_total,
-    # avgdl_x100). A fresh build is generation 0; each
-    # append_bm25_postings adds one row. dl_total makes the corpus
-    # scalars MERGEABLE at read — merged avgdl_x100 =
-    # (100 * sum(dl_total)) div sum(n_docs) is exactly the value a
-    # from-scratch rebuild would freeze, which is what keeps
-    # multi-generation search byte-identical to a rebuilt store.
-    stats = dl.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("_t")
-    ).select(
-        F.lit(0).cast("long").alias("gen"),
-        "n_docs",
-        F.col("_t").alias("dl_total"),
-        F.expr("(100 * _t) div n_docs").alias("avgdl_x100"),
+    rows, n_docs, dl_total = _posting_rows(
+        widen(_doc_texts(docs, text_col, id_col))
     )
     spark.sql(f"DROP TABLE IF EXISTS `{table}_stats`")
     drop_orphan_table_location(spark, table + "_stats")
-    stats.write.mode("overwrite").format("parquet").saveAsTable(
-        table + "_stats"
-    )
-    rows = tf.join(dl, "doc_id").join(dfreq, "w").select(
-        "w", "doc_id", "tf", "dl", "df"
-    ).localCheckpoint(eager=False)
+    _stats_frame(spark, 0, n_docs, dl_total).write.mode("overwrite").format(
+        "parquet"
+    ).saveAsTable(table + "_stats")
     write_bucketed(rows, table, "w", num_buckets=num_buckets)
     if forward:
         write_bucketed(
@@ -221,13 +252,71 @@ def build_bm25_store(
         drop_orphan_table_location(spark, table + "_fwd")
 
 
-def _stats_frame(spark: SparkSession, gen, n_docs, dl_total) -> DataFrame:
-    """One ``{table}_stats`` generation row from exact integer scalars."""
-    n, t = int(n_docs), int(dl_total)
-    return spark.createDataFrame(
-        [(int(gen), n, t, (100 * t) // n)],
-        "gen long, n_docs bigint, dl_total bigint, avgdl_x100 bigint",
+class Bm25Stats(NamedTuple):
+    """A BM25 store's corpus scalars, merged over its generations."""
+
+    n_docs: int
+    dl_total: int
+    avgdl_x100: int
+    n_generations: int
+    max_gen: int
+    #: the ``(gen, n_docs, dl_total, avgdl_x100)`` rows as stored
+    rows: list[tuple]
+
+
+def bm25_store_stats(spark: SparkSession, table: str) -> Bm25Stats:
+    """The one reader of ``{table}_stats``: ONE collect of the
+    per-generation rows (model state — one row per generation), merged
+    by exact Python integer sums: ``n_docs = Σ n_docs``, ``dl_total =
+    Σ dl_total`` and ``avgdl_x100 = (100·dl_total) div n_docs`` (0 for
+    an empty store) — identical to what a from-scratch rebuild would
+    freeze, because the one division runs over exact sums. Search and
+    PRF inline the scalars as BIGINT literals, so a probe pays no stats
+    frame, no cross join and no broadcast job.
+
+    A stats table without a ``gen`` column (the layout before
+    generations, which nothing writes any more) raises ``ValueError``;
+    so does one with no rows or a NULL count, which no writer or crash
+    window produces."""
+    raw = spark.table(table + "_stats")
+    if "gen" not in raw.columns:
+        raise ValueError(
+            f"BM25 store `{table}` predates the generation layout (no "
+            "`gen` in its stats) — rebuild it with build_bm25_store"
+        )
+    rows = [
+        tuple(r)
+        for r in raw.select("gen", "n_docs", "dl_total", "avgdl_x100").collect()
+    ]
+    if not rows or any(v is None for r in rows for v in r[:3]):
+        raise ValueError(
+            f"BM25 store `{table}` has an empty or NULL stats table — "
+            "rebuild it with build_bm25_store"
+        )
+    n = sum(r[1] for r in rows)
+    t = sum(r[2] for r in rows)
+    return Bm25Stats(
+        n, t, _avgdl_x100(n, t), len(rows), max(r[0] for r in rows), rows
     )
+
+
+def _posting_totals(post: DataFrame):
+    """ONE aggregate over the postings by doc_id → ``(n_docs, dl_total,
+    bad_dl)``: the posting-derived totals ``repair_bm25_store`` and
+    ``audit_bm25_store`` compare with the summed stats rows, plus the
+    docs whose per-row dl varies or disagrees with their tf sum."""
+    return post.groupBy("doc_id").agg(
+        F.sum("tf").alias("_tfsum"),
+        F.min("dl").alias("_dlmin"),
+        F.max("dl").alias("_dlmax"),
+    ).agg(
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum("_dlmin"), F.lit(0)).alias("dl_total"),
+        F.count_if(
+            (F.col("_dlmin") != F.col("_dlmax"))
+            | (F.col("_tfsum") != F.col("_dlmin"))
+        ).alias("bad_dl"),
+    ).first()
 
 
 def append_bm25_postings(
@@ -241,16 +330,17 @@ def append_bm25_postings(
     append/streaming posture (digest q92 / MinHash q90 / vector q93 /
     PQ q153 all had one; until r13 this store was rebuild-only because
     df was denormalized per row). Lucene's segment model, DataFrame-
-    first: the batch's posting rows land as an append into the same
-    w-bucketed table (layout property survives), its corpus scalars as
-    one more ``{table}_stats`` row, and readers merge — summed n_docs /
-    dl_total reproduce the rebuilt store's scalars exactly, and
-    corpus-level df is recomputed over the (candidate-bounded) matched
-    postings, so search over build+append is BYTE-IDENTICAL to search
-    over a from-scratch rebuild (pinned in tests). The per-row df
-    written here is the segment-local count — correct while the store
-    has one generation, superseded by the read-side recompute once it
-    has more, folded back by ``compact_bm25_store``.
+    first: the batch's posting rows (the build's own posting builder)
+    land as an append into the same w-bucketed table (layout property
+    survives), its corpus scalars as one more ``{table}_stats`` row,
+    and readers merge — summed n_docs / dl_total reproduce the rebuilt
+    store's scalars exactly, and corpus-level df is recomputed over the
+    (candidate-bounded) matched postings, so search over build+append
+    is BYTE-IDENTICAL to search over a from-scratch rebuild (pinned in
+    tests). The per-row df written here is the segment-local count —
+    correct while the store has one generation, superseded by the
+    read-side recompute once it has more, folded back by
+    ``compact_bm25_store``.
 
     Replay-idempotent via the shared ``admit_novel`` core: only
     never-seen doc ids contribute (the ``{table}_bloom`` sidecar, when
@@ -278,15 +368,8 @@ def append_bm25_postings(
         raise ValueError(
             f"BM25 store `{table}` does not exist — build_bm25_store first"
         )
-    stats_raw = spark.table(table + "_stats")
-    if "gen" not in stats_raw.columns:
-        raise ValueError(
-            f"`{table}` predates the generation layout — rebuild with "
-            "build_bm25_store before appending"
-        )
-    batch = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-    )
+    stats = bm25_store_stats(spark, table)
+    batch = _doc_texts(docs, text_col, id_col)
     novel = admit_novel(batch, table, id_col="doc_id").localCheckpoint()
     n_novel = novel.count()
     if n_novel == 0:
@@ -304,39 +387,20 @@ def append_bm25_postings(
             else None
         )
         return {"admitted": 0, "generation": None, "repair": repair}
-    tf = (
-        novel.select(
-            "doc_id", F.explode(tokens(F.col("_text"))).alias("w")
-        )
-        .where(F.col("w") != "")
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)  # consumers: dl, df, stats, rows
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
-    stats_row = dl.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("_t")
-    ).first()
+    rows, n_docs, dl_total = _posting_rows(novel)
     mirror_bloom(novel.select("doc_id"), table, id_col="doc_id")
-    if not stats_row["n_docs"]:
+    if not n_docs:
         # Every admitted doc tokenized to nothing: no postings, no stats
         # contribution — identical to a rebuild, which would not count
         # token-free docs either. The bloom mirror above still records
         # the ids so replays skip them.
         return {"admitted": n_novel, "generation": None}
-    gen = stats_raw.agg(F.max("gen")).first()[0] + 1
-    rows = tf.join(dl, "doc_id").join(dfreq, "w").select(
-        "w", "doc_id", "tf", "dl", "df"
-    ).localCheckpoint(eager=False)
+    gen = stats.max_gen + 1
     append_rows(rows, table)
     if spark.catalog.tableExists(table + "_fwd"):
         append_rows(rows, table + "_fwd")
-    append_rows(
-        _stats_frame(spark, gen, stats_row["n_docs"], stats_row["_t"]),
-        table + "_stats",
-    )
-    return {"admitted": n_novel, "generation": int(gen)}
+    append_rows(_stats_frame(spark, gen, n_docs, dl_total), table + "_stats")
+    return {"admitted": n_novel, "generation": gen}
 
 
 def compact_bm25_store(spark: SparkSession, table: str) -> dict:
@@ -372,35 +436,25 @@ def compact_bm25_store(spark: SparkSession, table: str) -> dict:
     adopted, publish = private_copy_swap(
         spark, table, ("", "_fwd", "_stats")
     )
+    stats = bm25_store_stats(spark, table)
     files_before = len(spark.table(table).inputFiles())
     post = spark.table(table)
     dfreq = post.groupBy("w").agg(F.count("*").alias("df"))
     rows = post.drop("df").join(dfreq, "w").select(
         "w", "doc_id", "tf", "dl", "df"
     ).localCheckpoint()
-    stats_raw = spark.table(table + "_stats")
-    if "gen" not in stats_raw.columns:
-        # legacy layout: dl_total unrecoverable from a frozen avgdl
-        raise ValueError(
-            f"`{table}` predates the generation layout — rebuild with "
-            "build_bm25_store instead of compacting"
-        )
-    merged = stats_raw.agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("dl_total").alias("_t")
-    ).first()
-    n_docs = int(merged["n_docs"])
     has_fwd = spark.catalog.tableExists(table + "_fwd")
     # every member complete before any publish; stats publish last
     publish(
         [("", rows)]
         + ([("_fwd", rows)] if has_fwd else [])
-        + [("_stats", _stats_frame(spark, 0, n_docs, merged["_t"]))]
+        + [("_stats", _stats_frame(spark, 0, stats.n_docs, stats.dl_total))]
     )
     rows.unpersist()
     return {
         "files_before": files_before,
         "files_after": len(spark.table(table).inputFiles()),
-        "n_docs": n_docs,
+        "n_docs": stats.n_docs,
         "adopted": adopted or None,
     }
 
@@ -420,31 +474,21 @@ def repair_bm25_store(spark: SparkSession, table: str) -> dict:
     row. A lagging ``{table}_fwd`` companion (crash between the posting
     and forward writes) is re-mirrored from the postings via exceptAll.
 
-    Cost: one posting-scan aggregate for detection (the audit's own
-    arithmetic, ``audit_bm25_store``'s bad_stats_* checks), plus the
-    fwd diff only when row counts disagree. Invoked automatically on
-    ``append_bm25_postings``'s admitted-0 path — the first replay after
-    the crash — and safe to run any time: a consistent store repairs
-    nothing. Stats totals EXCEEDING the postings indicate real
-    corruption this function cannot invent rows for; that raises with a
-    pointer to the audit. Returns ``{repaired, stats_row, fwd_rows}``."""
+    Cost: one posting-scan aggregate for detection (``_posting_totals``,
+    the audit's own), plus the fwd diff only when row counts disagree.
+    Invoked automatically on ``append_bm25_postings``'s admitted-0 path
+    — the first replay after the crash — and safe to run any time: a
+    consistent store repairs nothing. Stats totals EXCEEDING the
+    postings indicate real corruption this function cannot invent rows
+    for; that raises with a pointer to the audit. Returns ``{repaired,
+    stats_row, fwd_rows}``."""
     from albedo_spark.io import append_rows
 
-    stats_raw = spark.table(table + "_stats")
-    if "gen" not in stats_raw.columns:
-        # Legacy layout predates appends entirely — nothing to repair.
-        return {"repaired": False, "stats_row": None, "fwd_rows": 0}
+    stats = bm25_store_stats(spark, table)
     post = spark.table(table)
-    derived = post.groupBy("doc_id").agg(F.min("dl").alias("dl")).agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
-    ).first()
-    summed = stats_raw.agg(
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("dl_total"), F.lit(0)).alias("t"),
-        F.coalesce(F.max("gen"), F.lit(-1)).alias("g"),
-    ).first()
-    miss_n = int(derived["n"]) - int(summed["n"])
-    miss_t = int(derived["t"]) - int(summed["t"])
+    derived = _posting_totals(post)
+    miss_n = derived["n_docs"] - stats.n_docs
+    miss_t = derived["dl_total"] - stats.dl_total
     if miss_n < 0 or miss_t < 0 or (miss_n == 0) != (miss_t == 0):
         raise ValueError(
             f"BM25 store `{table}` stats disagree with its postings in a "
@@ -453,8 +497,8 @@ def repair_bm25_store(spark: SparkSession, table: str) -> dict:
         )
     stats_row = None
     if miss_n > 0:
-        gen = int(summed["g"]) + 1
-        stats_row = (gen, miss_n, miss_t, (100 * miss_t) // miss_n)
+        gen = stats.max_gen + 1
+        stats_row = (gen, miss_n, miss_t, _avgdl_x100(miss_n, miss_t))
         append_rows(_stats_frame(spark, gen, miss_n, miss_t), table + "_stats")
     fwd_rows = 0
     if spark.catalog.tableExists(table + "_fwd"):
@@ -471,94 +515,77 @@ def repair_bm25_store(spark: SparkSession, table: str) -> dict:
     }
 
 
-def _bm25_read_stats(
-    spark: SparkSession, table: str
-) -> tuple[int, int, bool]:
-    """Resolve a BM25 store's corpus scalars → ``(n_docs, avgdl_x100,
-    multi_gen)`` as Python ints. Single-generation stores (and legacy
-    two-column stats tables from before the generation layout) pass
-    their frozen row through untouched — the exact integers every
-    existing gate hashes. Multi-generation stores merge by SUM:
-    ``n_docs = Σ n_docs``, ``avgdl_x100 = (100·Σ dl_total) div n_docs``
-    — identical to what a from-scratch rebuild would freeze, because
-    integer division distributes over nothing here (one division, over
-    exact sums).
-
-    The stats table is model-state (one row per generation), so it is
-    COLLECTED once and scoring inlines the two scalars as BIGINT
-    literals (``_bm25_contrib``): no stats frame, no cross join, and no
-    broadcast job per probe — the merge arithmetic runs on exact Python
-    ints, the same BIGINTs the store froze."""
-    raw = spark.table(table + "_stats")
-    rows = raw.collect()
-    if not rows:
-        raise ValueError(
-            f"BM25 store `{table}` has an empty stats table — run "
-            "audit_bm25_store and rebuild"
-        )
-    if "gen" not in raw.columns or len(rows) == 1:
-        return int(rows[0]["n_docs"]), int(rows[0]["avgdl_x100"]), False
-    n = sum(int(r["n_docs"]) for r in rows)
-    t = sum(int(r["dl_total"]) for r in rows)
-    return n, (100 * t) // n, True
-
-
-def _bm25_postings(spark: SparkSession, table: str, terms: DataFrame,
-                   multi_gen: bool) -> DataFrame:
-    """The posting rows a probe scores against, with a CORRECT ``df``
-    column. Single-generation: the table itself — df was denormalized
-    at build time and is exact (zero extra work, the pinned plan).
-    Multi-generation: the per-row df is stale (each segment froze its
-    own batch-local count), so corpus-level df is RECOMPUTED over the
-    term-matched postings: the ``w``-bucketed scan semi-joined to the
-    broadcast term list, then ``count(*)`` over a window partitioned by
-    ``w``. The scan's bucketing already clusters every term into one
-    task, so the window runs in place on the ``FileScan`` — no Exchange,
-    no materialization, no extra job. Every (w, doc_id) pair appears
-    exactly once across generations (append admits novel doc ids only),
-    so the per-w row count IS the rebuilt store's df. Cost is
-    candidate-bounded: only queried terms' postings flow, never the
-    corpus — the read-side price of append until
-    ``compact_bm25_store`` folds the segments."""
-    post = spark.table(table)
-    if not multi_gen:
-        return post
-    return post.join(
-        F.broadcast(terms.select("w")), "w", "left_semi"
-    ).withColumn("df", F.count("*").over(Window.partitionBy("w")))
+def _query_terms(
+    queries: DataFrame, query_id_col: str, text_col: str
+) -> DataFrame:
+    """``(query_id, w)``: each query's distinct terms under the index's
+    tokenizer (the usual BM25 practice ignores query multiplicity)."""
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("w"),
+    ).where(F.col("w") != "")
 
 
 def _scoring_postings(
-    spark: SparkSession, table: str, terms: DataFrame, multi_gen: bool
+    spark: SparkSession,
+    table: str,
+    terms: DataFrame,
+    multi_gen: bool,
+    has_fwd: bool,
 ) -> tuple[DataFrame, bool]:
-    """The posting frame the SCORING fan-out should read, plus whether
-    it arrives pre-clustered by doc_id. The fan-out join's dominant
+    """The posting rows a probe scores against, with a CORRECT ``df``
+    column, plus whether they arrive pre-clustered by doc_id.
+
+    Single-generation: df was denormalized at build time and is exact
+    (zero extra work, the pinned plan). The fan-out join's dominant
     cost is the per-(query, doc) aggregate over |postings ⋈ qterms|
     rows; grouping keys are (query_id, doc_id), so a scan that is
     hash-partitioned on doc_id already clusters every group into one
     task and the aggregate needs NO exchange — at any corpus size, the
     fan-out stream is never shuffled (guide §2.4 "already co-partitioned
     but not recognised"). The ``{table}_fwd`` companion IS that scan:
-    the same rows, bucketed on doc_id. Single-generation stores with a
-    forward companion score from it; everything else keeps the
-    w-bucketed main table (the multi-generation df window needs its
-    ``w`` clustering)."""
-    if not multi_gen and spark.catalog.tableExists(table + "_fwd"):
+    the same rows, bucketed on doc_id, so a store that has one scores
+    from it; otherwise from the w-bucketed main table.
+
+    Multi-generation: the per-row df is stale (each segment froze its
+    own batch-local count), so corpus-level df is RECOMPUTED over the
+    term-matched postings of the main table (the window needs its ``w``
+    clustering): the ``w``-bucketed scan semi-joined to the broadcast
+    term list, then ``count(*)`` over a window partitioned by ``w``.
+    The scan's bucketing already clusters every term into one task, so
+    the window runs in place on the ``FileScan`` — no Exchange, no
+    materialization, no extra job. Every (w, doc_id) pair appears
+    exactly once across generations (append admits novel doc ids only),
+    so the per-w row count IS the rebuilt store's df. Cost is
+    candidate-bounded: only queried terms' postings flow, never the
+    corpus — the read-side price of append until
+    ``compact_bm25_store`` folds the segments."""
+    if multi_gen:
+        matched = spark.table(table).join(
+            F.broadcast(terms.select("w")), "w", "left_semi"
+        )
+        return matched.withColumn(
+            "df", F.count("*").over(Window.partitionBy("w"))
+        ), False
+    if has_fwd:
         return spark.table(table + "_fwd"), True
-    return _bm25_postings(spark, table, terms, multi_gen), False
+    return spark.table(table), False
 
 
-def _bm25_contrib(
+def _bm25_scores(
     spark: SparkSession,
     table: str,
     terms: DataFrame,
-    stats: tuple[int, int, bool],
+    stats: Bm25Stats,
+    has_fwd: bool,
+    score_col: str,
     allow: DataFrame | None = None,
 ) -> DataFrame:
-    """``(w, doc_id, _c)``: each matched posting's integer BM25
-    contribution, shared by ``bm25_store_search`` and
-    ``bm25_store_prf_search``. ``stats`` is ``_bm25_read_stats``'s
-    triple; its scalars enter as BIGINT literals.
+    """``(query_id, doc_id, score_col)``: the summed integer BM25 of
+    each (query, doc) over the ``(query_id, w)`` ``terms`` — the one
+    scoring core of ``bm25_store_search`` and both passes of
+    ``bm25_store_prf_search``. The ``stats`` scalars enter as BIGINT
+    literals.
 
     The contribution depends only on the posting row (+ the frozen
     scalars) — never on the query — so it is computed ONCE per posting
@@ -566,6 +593,7 @@ def _bm25_contrib(
     join fan-out is |matched (q, w, d)| (orders of magnitude more rows
     than postings whenever queries share high-df terms); projecting to
     ``(w, doc_id, _c)`` keeps the fan-out stream narrow (guide §2.3).
+    The per-(query, doc) sum partial-aggregates map-side.
 
     ``allow`` restricts the postings to a doc-id slice AFTER the
     multi-generation df recompute: idf is the index's corpus-level
@@ -580,8 +608,10 @@ def _bm25_contrib(
     shuffle regardless, so balancing the scan is free win there)."""
     from albedo_spark.io import widen
 
-    n_docs, avgdl_x100, multi_gen = stats
-    post, copartitioned = _scoring_postings(spark, table, terms, multi_gen)
+    n_docs, avgdl_x100 = stats.n_docs, stats.avgdl_x100
+    post, copartitioned = _scoring_postings(
+        spark, table, terms, stats.n_generations > 1, has_fwd
+    )
     if allow is not None:
         post = post.join(
             F.broadcast(allow.selectExpr(f"{allow.columns[0]} AS doc_id")),
@@ -593,12 +623,30 @@ def _bm25_contrib(
         f"(10000 * 22 * tf * {avgdl_x100}L)"
         f" div (10*tf*{avgdl_x100}L + 3*{avgdl_x100}L + 900*dl)"
     )
-    out = post.select(
+    contrib = post.select(
         "w",
         "doc_id",
         F.expr(f"(({idf_x10k}) * ({tfpart_x10k})) div 10000").alias("_c"),
     )
-    return out if copartitioned else widen(out)
+    return (
+        (contrib if copartitioned else widen(contrib))
+        .join(F.broadcast(terms), "w")
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum("_c").alias(score_col))
+    )
+
+
+def _rank(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The one ranking tail of the store search, PRF and ``rrf_fuse``:
+    the pinned ``row_number`` top-k per query, score desc then doc id
+    asc (a total order, so ranks are deterministic)."""
+    return top_k_per_group(
+        scored,
+        ["query_id"],
+        [F.col(score_col).desc(), F.col("doc_id").asc()],
+        k,
+        keep_rank=True,
+    )
 
 
 def bm25_store_search(
@@ -616,10 +664,10 @@ def bm25_store_search(
     tokenize with the index's tokenizer, distinct terms per query (the
     usual BM25 practice). Plan: query terms BROADCAST into the bucketed
     posting table (zero store-side Exchange — only postings of queried
-    terms flow), the frozen ``{table}_stats`` scalars are literals in
-    the per-posting contribution (``_bm25_contrib``), the per-(query,
-    doc) sum partial-aggregates map-side, ranking is the pinned
-    row_number idiom.
+    terms flow), the ``bm25_store_stats`` scalars are literals in the
+    per-posting contribution (``_bm25_scores``), the per-(query, doc)
+    sum partial-aggregates map-side, ranking is the pinned row_number
+    idiom. An empty store answers with no rows.
 
     ``allow``: optional one-column ``(doc_id)`` frame restricting
     results to a metadata slice — PRE-filter semantics (q164's
@@ -629,29 +677,18 @@ def bm25_store_search(
     the INDEX's frozen corpus-level stats (standard filtered-retrieval
     practice — the slice narrows candidates, not the model)."""
     spark = queries.sparkSession
-    stats = _bm25_read_stats(spark, table)
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(
-                F.array_distinct(tokens(F.col(text_col)))
-            ).alias("w"),
-        )
-        .where(F.col("w") != "")
+    stats = bm25_store_stats(spark, table)
+    scored = _bm25_scores(
+        spark,
+        table,
+        _query_terms(queries, query_id_col, text_col),
+        stats,
+        spark.catalog.tableExists(table + "_fwd"),
+        "bm25_x10k",
+        allow,
     )
-    scored = (
-        _bm25_contrib(spark, table, qterms, stats, allow)
-        .join(F.broadcast(qterms), "w")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("_c").alias("bm25_x10k"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("bm25_x10k").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("query_id", "doc_id", "rank", "bm25_x10k")
+    return _rank(scored, "bm25_x10k", top_k).select(
+        "query_id", "doc_id", "rank", "bm25_x10k"
     )
 
 
@@ -700,13 +737,8 @@ def rrf_fuse(
         F.count("*").cast("long").alias("n_legs"),
         F.sum("_c").alias("rrf_x1e6"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_x1e6").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("query_id", "doc_id", "n_legs", "rrf_x1e6", "rank")
+    return _rank(fused, "rrf_x1e6", top_k).select(
+        "query_id", "doc_id", "n_legs", "rrf_x1e6", "rank"
     )
 
 
@@ -881,9 +913,10 @@ def bm25_store_prf_search(
     weight multiplies INSIDE the sum, so the result is one BIGINT both
     engines replay.
 
-    Plan: pass 1 is the ``bm25_store_search`` probe shape (broadcast
-    terms into the bucketed posting scan, zero store-side Exchange),
-    inlined so its PRE-RANK (query, doc) aggregate can be reused. The
+    Plan: pass 1 is the ``bm25_store_search`` probe (``_bm25_scores``:
+    broadcast terms into the bucketed posting scan, zero store-side
+    Exchange), kept PRE-RANK so its (query, doc) aggregate can be
+    reused. The
     feedback fetch joins the |Q|·fb_docs doc ids (a broadcast, by
     construction) against the ``{table}_fwd`` FORWARD companion when
     the store was built with ``forward=True`` (doc_id-bucketed — the
@@ -897,42 +930,21 @@ def bm25_store_prf_search(
     the (tiny) expansion term set pays a second posting fan-out. One
     union + re-aggregate replaces the second full |Q·terms| join.
     """
-    from albedo_spark.operators.topk import top_k_per_group
-
     spark = queries.sparkSession
-    fwd = (
-        spark.table(table + "_fwd")
-        if spark.catalog.tableExists(table + "_fwd")
-        else spark.table(table)
-    )
-    stats = _bm25_read_stats(spark, table)
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("w"),
-        )
-        .where(F.col("w") != "")
-        # consumed by pass-1 scoring and the expansion anti-join
-        .localCheckpoint(eager=False)
+    has_fwd = spark.catalog.tableExists(table + "_fwd")
+    fwd = spark.table(table + "_fwd" if has_fwd else table)
+    stats = bm25_store_stats(spark, table)
+    # consumed by pass-1 scoring and the expansion anti-join
+    qterms = _query_terms(queries, query_id_col, text_col).localCheckpoint(
+        eager=False
     )
     # Pass 1, pre-rank: Σ over original terms per (query, doc). Consumed
     # by the feedback top-k below AND by the final score — checkpoint so
     # the posting fan-out aggregate executes once.
-    scored1 = (
-        _bm25_contrib(spark, table, qterms, stats)
-        .join(F.broadcast(qterms), "w")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("_c").alias("_s1"))
-        .localCheckpoint(eager=False)
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("_s1").desc(), F.col("doc_id").asc()
-    )
-    pass1 = (
-        scored1.withColumn("rank", F.row_number().over(w1))
-        .where(F.col("rank") <= fb_docs)
-        .select("query_id", "doc_id")
-    )
+    scored1 = _bm25_scores(
+        spark, table, qterms, stats, has_fwd, "_s1"
+    ).localCheckpoint(eager=False)
+    pass1 = _rank(scored1, "_s1", fb_docs).select("query_id", "doc_id")
     # Path decision from the QUERY FRAME's size (one cheap count of the
     # small side), never from pass 1 — deciding after retrieval would
     # force an eager pass-1 job on every call, and the analytical path
@@ -944,7 +956,7 @@ def bm25_store_prf_search(
     # however large the query set.
     _route_limit = _FETCH_IDS_MAX // fb_docs + 1
     use_literal_fetch = (
-        spark.catalog.tableExists(table + "_fwd")
+        has_fwd
         and queries.limit(_route_limit).count() * fb_docs <= _FETCH_IDS_MAX
     )
     if use_literal_fetch:
@@ -995,7 +1007,7 @@ def bm25_store_prf_search(
         fb, ["query_id"], [F.col("fbtf").desc(), F.col("w").asc()], fb_terms
     )
     # ``exp_terms`` is consumed by TWO broadcast builds below (the
-    # term semi-join inside _bm25_postings on multi-gen stores
+    # term semi-join inside _scoring_postings on multi-gen stores
     # and the score join), and broadcast builds do not share work —
     # without a materialization boundary the whole feedback subtree
     # (the fwd fetch, the fbtf window) would execute once per build.
@@ -1006,12 +1018,7 @@ def bm25_store_prf_search(
     # Expansion-term contributions only: the original terms' summand is
     # already in ``scored1`` — re-fanning them out would repeat the
     # dominant |postings ⋈ qterms| join for rows whose sum exists.
-    exp_scored = (
-        _bm25_contrib(spark, table, exp_terms, stats)
-        .join(F.broadcast(exp_terms), "w")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("_c").alias("_s2"))
-    )
+    exp_scored = _bm25_scores(spark, table, exp_terms, stats, has_fwd, "_s2")
     # prf(q, d) = orig_weight·Σ_orig c + 1·Σ_exp c. Expansion terms are
     # never original terms (the anti-join above), so the two legs
     # partition the expanded-term set and a union + sum is the exact
@@ -1032,13 +1039,8 @@ def bm25_store_prf_search(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("_p").alias("prf_x10k"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("prf_x10k").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("query_id", "doc_id", "rank", "prf_x10k")
+    return _rank(scored, "prf_x10k", top_k).select(
+        "query_id", "doc_id", "rank", "prf_x10k"
     )
 
 
@@ -1136,37 +1138,16 @@ def audit_bm25_store(spark: SparkSession, table: str) -> dict:
 
     One pass over the postings per check, all bucketed-scan aggregates
     — audit cost ~ a couple of probes, no shuffle of the store beyond
-    the doc-keyed dl check."""
+    the doc-keyed totals (``_posting_totals``, shared with
+    ``repair_bm25_store``). The stats side is ``bm25_store_stats``'s one
+    collect, so a store without the generation layout raises."""
+    stats = bm25_store_stats(spark, table)
     post = spark.table(table)
-    stats = spark.table(table + "_stats")
-    multi_gen = "gen" in stats.columns and stats.count() > 1
-
-    per_doc = post.groupBy("doc_id").agg(
-        F.sum("tf").alias("_tfsum"),
-        F.min("dl").alias("_dlmin"),
-        F.max("dl").alias("_dlmax"),
+    multi_gen = stats.n_generations > 1
+    derived = _posting_totals(post)
+    bad_avgdl = sum(
+        avgdl != _avgdl_x100(n, t) for _, n, t, avgdl in stats.rows
     )
-    bad_dl = per_doc.where(
-        (F.col("_dlmin") != F.col("_dlmax"))
-        | (F.col("_tfsum") != F.col("_dlmin"))
-    ).count()
-
-    derived = post.groupBy("doc_id").agg(F.min("dl").alias("dl")).agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("dl_total")
-    ).first()
-    if "gen" in stats.columns:
-        summed = stats.agg(
-            F.sum("n_docs").alias("n"), F.sum("dl_total").alias("t")
-        ).first()
-        bad_avgdl = stats.where(
-            F.expr("avgdl_x100 != (100 * dl_total) div n_docs")
-        ).count()
-        bad_stats_dl = int(summed["t"] != derived["dl_total"])
-    else:  # legacy single-row layout: dl_total was never persisted
-        summed = stats.agg(F.sum("n_docs").alias("n")).first()
-        bad_avgdl = 0
-        bad_stats_dl = 0
-    bad_stats_docs = int(summed["n"] != derived["n_docs"])
 
     if multi_gen:
         bad_df = 0
@@ -1188,14 +1169,14 @@ def audit_bm25_store(spark: SparkSession, table: str) -> dict:
         )
 
     out = {
-        "bad_dl": bad_dl,
-        "bad_stats_docs": bad_stats_docs,
-        "bad_stats_dl": bad_stats_dl,
+        "bad_dl": derived["bad_dl"],
+        "bad_stats_docs": int(stats.n_docs != derived["n_docs"]),
+        "bad_stats_dl": int(stats.dl_total != derived["dl_total"]),
         "bad_avgdl": bad_avgdl,
         "bad_df": bad_df,
         "fwd_mismatch": fwd_mismatch,
         "df_recompute_required": multi_gen,
-        "n_generations": stats.count() if "gen" in stats.columns else 1,
+        "n_generations": stats.n_generations,
     }
     out["ok"] = not any(
         v for k, v in out.items()

@@ -656,6 +656,40 @@ def run_to_vector_store(
     )
 
 
+def _near_dup_keep(
+    batch: DataFrame, pairs: DataFrame, id_col: str
+) -> DataFrame:
+    """The batch rows a near-dup sink admits, given the resolver's
+    ``(id_a, id_b)`` candidate pairs. Pair members are unlabeled (store
+    ids and batch ids mixed, each pair sorted id_a < id_b): both
+    orientations come from ONE projection of ``pairs`` (an explode of
+    the two structs — a union of two projections would plan the whole
+    resolver, store scans included, twice), and the side of each member
+    is re-derived by a semi/left join against the batch's own ids. A
+    batch member is dropped when its counterpart is store-side (no batch
+    match) or a smaller batch id."""
+    bids = batch.select(F.col(id_col).alias("_id"))
+    both = F.array(
+        F.struct(F.col("id_a").alias("_id"), F.col("id_b").alias("_other")),
+        F.struct(F.col("id_b").alias("_id"), F.col("id_a").alias("_other")),
+    )
+    members = (
+        pairs.select(F.explode(both).alias("_m"))
+        .select("_m._id", "_m._other")
+        .join(bids, "_id", "left_semi")
+    )
+    other_is_batch = bids.select(
+        F.col("_id").alias("_other"), F.lit(1).alias("_ob")
+    )
+    dropped = (
+        members.join(other_is_batch, "_other", "left")
+        .where(F.col("_ob").isNull() | (F.col("_other") < F.col("_id")))
+        .select(F.col("_id").alias(id_col))
+        .distinct()
+    )
+    return batch.join(dropped, id_col, "left_anti")
+
+
 def _run_near_dup_ingest(
     stream_df: DataFrame,
     table: str,
@@ -685,34 +719,7 @@ def _run_near_dup_ingest(
         if not spark.catalog.tableExists(table):
             build_empty(batch_df.limit(0), table)
         batch = batch_df.where(F.col(value_col).isNotNull())
-        pairs = pairs_for(batch, table).select("id_a", "id_b")
-        # Pair members are unlabeled (store ids and batch ids mixed, each
-        # pair sorted id_a < id_b): re-derive the side per member by a
-        # semi/left join against the batch's own ids. Drop a batch member
-        # when its counterpart is store-side (no batch match) or a
-        # smaller batch id.
-        bids = batch.select(F.col(id_col).alias("_id"))
-        members = (
-            pairs.select(
-                F.col("id_a").alias("_id"), F.col("id_b").alias("_other")
-            )
-            .unionByName(
-                pairs.select(
-                    F.col("id_b").alias("_id"), F.col("id_a").alias("_other")
-                )
-            )
-            .join(bids, "_id", "left_semi")
-        )
-        other_is_batch = bids.select(
-            F.col("_id").alias("_other"), F.lit(1).alias("_ob")
-        )
-        dropped = (
-            members.join(other_is_batch, "_other", "left")
-            .where(F.col("_ob").isNull() | (F.col("_other") < F.col("_id")))
-            .select(F.col("_id").alias(id_col))
-            .distinct()
-        )
-        keep = batch.join(dropped, id_col, "left_anti").persist()
+        keep = _near_dup_keep(batch, pairs_for(batch, table), id_col).persist()
         try:
             if keep.isEmpty():
                 return

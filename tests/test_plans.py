@@ -406,16 +406,22 @@ _ORACLE_SLICE = {
     "q102_near_dup_vs_store": ["embeddings"],
     "q107_simhash_store": ["documents"],
     "q112_vector_incremental": ["embeddings"],
+    "q160_hybrid_store_serve": ["documents", "embeddings"],
+    "q165_bm25_prf_expansion": ["documents"],
+    "q167_filtered_hybrid_serve": ["documents", "embeddings"],
+    "q169_bm25_multigen_store": ["documents"],
 }
 
 
 @pytest.mark.parametrize("name", list(_ORACLE_SLICE))
 def test_candidate_family_matches_oracle(spark, name):
-    """Oracle slice for the candidate-then-verify family: every caller
-    of ``clustering.kmeans_fit`` (trainer, IVF-PQ, trained-codebook
-    store, SemDeDup buckets), the hyperplane-LSH and IVF kNN, the
-    vector store's three probes, and the banded MinHash and SimHash
-    stores. Spark result vs the DuckDB ORACLE_SQL, compared by the
+    """Oracle slice for the candidate-then-verify family and the
+    persisted stores: every caller of ``clustering.kmeans_fit``
+    (trainer, IVF-PQ, trained-codebook store, SemDeDup buckets), the
+    hyperplane-LSH and IVF kNN, the vector store's three probes, the
+    banded MinHash and SimHash stores, and the BM25 store (build with
+    its forward companion, PRF, the allow filter, multi-generation
+    search). Spark result vs the DuckDB ORACLE_SQL, compared by the
     correctness gate's order-insensitive table hash."""
     import duckdb
 

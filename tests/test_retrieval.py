@@ -800,6 +800,116 @@ def test_bm25_append_guards(spark):
         append_bm25_postings(d, "t_bm25_never_built")
 
 
+def test_bm25_empty_store_lifecycle(spark):
+    """A store built from an empty (or token-free) frame is a store:
+    generation 0 holds exact zeros, search and PRF answer with no rows,
+    an append makes it serve exactly what a rebuild of the appended
+    docs serves, and compaction and the audit accept it at every step."""
+    from albedo_spark.io import load_table
+    from albedo_spark.operators.retrieval import (
+        append_bm25_postings,
+        audit_bm25_store,
+        bm25_store_prf_search,
+        bm25_store_search,
+        bm25_store_stats,
+        build_bm25_store,
+        compact_bm25_store,
+    )
+
+    d = load_table(spark, "/root/testdata/sf0.001", "documents").limit(80)
+    qdf = _bm25_probe_set(spark)
+    tbl, ref, blank = "t_bm25_empty", "t_bm25_empty_ref", "t_bm25_blank"
+
+    def search(t):
+        return sorted(
+            tuple(r) for r in bm25_store_search(qdf, t, top_k=5).collect()
+        )
+
+    try:
+        build_bm25_store(d.limit(0), tbl, forward=True)
+        build_bm25_store(
+            spark.createDataFrame([(1, " "), (2, "")], "doc_id long, text string"),
+            blank,
+        )
+        for t in (tbl, blank):
+            assert [tuple(r) for r in spark.table(t + "_stats").collect()] == [
+                (0, 0, 0, 0)
+            ]
+            assert search(t) == []
+            assert audit_bm25_store(spark, t)["ok"]
+        assert bm25_store_prf_search(qdf, tbl, top_k=5).collect() == []
+
+        out = append_bm25_postings(d, tbl)
+        assert out["admitted"] > 0 and out["generation"] == 1
+        build_bm25_store(d, ref, forward=True)
+        want = search(ref)
+        assert want and search(tbl) == want
+        st = bm25_store_stats(spark, tbl)
+        assert (st.n_docs, st.dl_total, st.avgdl_x100) == tuple(
+            spark.table(ref + "_stats").select(
+                "n_docs", "dl_total", "avgdl_x100"
+            ).first()
+        )
+        a = audit_bm25_store(spark, tbl)
+        assert a["ok"] and a["n_generations"] == 2
+
+        assert compact_bm25_store(spark, tbl)["n_docs"] == st.n_docs
+        assert search(tbl) == want
+        a = audit_bm25_store(spark, tbl)
+        assert a["ok"] and a["n_generations"] == 1
+
+        # compaction of a store that is still empty keeps it empty
+        assert compact_bm25_store(spark, blank)["n_docs"] == 0
+        assert search(blank) == []
+        assert audit_bm25_store(spark, blank)["ok"]
+    finally:
+        for t in (tbl, ref, blank):
+            for suf in ("", "_stats", "_fwd", "_bloom"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
+
+
+def test_bm25_legacy_stats_layout_rejected(spark):
+    """A ``{table}_stats`` without a ``gen`` column (the layout before
+    generations) is refused the same way by every reader: search,
+    append, compact, repair and audit raise one ``ValueError`` rather
+    than serve from it, report nothing to repair, or skip checks."""
+    import pytest as _pytest
+
+    from albedo_spark.operators.retrieval import (
+        append_bm25_postings,
+        audit_bm25_store,
+        bm25_store_search,
+        build_bm25_store,
+        compact_bm25_store,
+        repair_bm25_store,
+    )
+
+    d = _docs_df(spark)
+    tbl = "t_bm25_legacy"
+    try:
+        build_bm25_store(d.where("doc_id < 4"), tbl)
+        legacy = spark.table(tbl + "_stats").select("n_docs", "avgdl_x100")
+        legacy.localCheckpoint().write.mode("overwrite").format(
+            "parquet"
+        ).saveAsTable(tbl + "_stats")
+        assert "gen" not in spark.table(tbl + "_stats").columns
+        qdf = spark.createDataFrame(QS, "query_id string, text string")
+        for call in (
+            lambda: bm25_store_search(qdf, tbl).collect(),
+            lambda: append_bm25_postings(d, tbl),
+            lambda: compact_bm25_store(spark, tbl),
+            lambda: repair_bm25_store(spark, tbl),
+            lambda: audit_bm25_store(spark, tbl),
+        ):
+            with _pytest.raises(ValueError, match="predates the generation"):
+                call()
+        # nothing was written on the way to the error
+        assert spark.table(tbl).select("doc_id").distinct().count() == 3
+    finally:
+        for suf in ("", "_stats", "_fwd", "_bloom"):
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}{suf}")
+
+
 def _df_window_to_scan(plan: str, tbl: str) -> list[str]:
     """The plan lines from the multi-generation df ``Window`` (a
     ``count(1)`` partitioned by w) down to the posting table's scan."""

@@ -515,6 +515,50 @@ def test_run_to_minhash_store(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_batch_prefix")
 
 
+def test_near_dup_keep_plans_resolver_once(spark):
+    """The sink's admit frame reads the store no more often than the
+    resolver alone: both orientations of each candidate pair come from
+    one projection of ``pairs``, so the resolver (store scans, bucket
+    size aggregates, joins) is planned once, not once per orientation."""
+    from albedo_spark.io import load_table
+    from albedo_spark.operators.dedup_store import (
+        build_signature_store,
+        dedup_incremental,
+    )
+    from albedo_spark.streaming.events import _near_dup_keep
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    tbl = "t_keep_once"
+    try:
+        build_signature_store(docs.where("doc_id % 5 != 0"), tbl, num_buckets=8)
+        batch = docs.where("doc_id % 5 = 0")
+        pairs = dedup_incremental(
+            batch, tbl, exclude_store_ids=batch.select("doc_id")
+        )
+        keep = _near_dup_keep(batch, pairs, "doc_id")
+
+        def store_scans(frame):
+            plan = frame._jdf.queryExecution().optimizedPlan().toString()
+            return plan.count(f"default.{tbl}[")
+
+        assert store_scans(pairs) > 0
+        assert store_scans(keep) == store_scans(pairs)
+        # the admit set is the keeper rule over the same pairs
+        pair_rows = [tuple(r) for r in pairs.select("id_a", "id_b").collect()]
+        batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
+        dropped = {
+            mine
+            for a, b in pair_rows
+            for mine, other in ((a, b), (b, a))
+            if mine in batch_ids and (other not in batch_ids or other < mine)
+        }
+        assert {r.doc_id for r in keep.select("doc_id").collect()} == (
+            batch_ids - dropped
+        )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
 def test_run_to_simhash_store(spark, tmp_path):
     """Hamming-granularity streaming ingest: a normalized-identical twin
     (hamming 0) is blocked by history across batches; full replay after
