@@ -93,11 +93,12 @@ def _adjacent(s) -> "F.Column":
     )
 
 
-def _greedy_merge(s, left: str, right: str) -> "F.Column":
+def _greedy_merge(s, left: str, right: str, tok: str) -> "F.Column":
     """Greedy left-to-right non-overlapping replacement of the adjacent
-    pair (left, right) in a symbol array ('aaa' + (a,a) → [aa, a]) — the
-    standard BPE fold, as a JVM-side HOF aggregate."""
-    tok = left + right
+    pair (left, right) by the merged token ``tok`` in a symbol array
+    ('aaa' + (a,a) → [aa, a]) — the standard BPE fold, as a JVM-side HOF
+    aggregate. ``tok`` is the merge spelling: ``left + right`` for BPE,
+    the ``##``-aware one for WordPiece."""
     return F.aggregate(
         s if not isinstance(s, str) else F.col(s),
         F.array().cast("array<string>"),
@@ -110,60 +111,86 @@ def _greedy_merge(s, left: str, right: str) -> "F.Column":
     )
 
 
-def learn_bpe(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    checkpoint_every: int = 24,
-    round_stats: list | None = None,
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` BPE merges over the corpus (Sennrich et al.
-    2016): the full iterative trainer on top of the one-step statistics
-    above. Returns the merge list ``[(left, right, weighted_count), …]``
-    in learned order — the artifact a tokenizer ships.
+#: Rounds between the merge loop's full ``repartition + localCheckpoint``
+#: collapses of its vocab frame (see ``_learn_merges``, step 4).
+_CHECKPOINT_EVERY = 24
 
-    This is the PAIR-DELTA trainer (the optimization Sennrich's own
+
+def _bump(stats: dict, key, delta: int) -> None:
+    """Add ``delta`` to a driver-held count, dropping entries that reach
+    0 (every count is a positive weighted occurrence count)."""
+    nv = stats.get(key, 0) + delta
+    if nv > 0:
+        stats[key] = nv
+    else:
+        stats.pop(key, None)
+
+
+def _learn_merges(
+    syms: DataFrame,
+    n_merges: int,
+    key,
+    spell,
+    round_stats: list | None = None,
+    guard=None,
+) -> list[tuple[str, str, str, int, int, int]]:
+    """The pair-delta merge loop behind ``learn_bpe`` and
+    ``wordpiece.learn_wordpiece`` (the optimization Sennrich's own
     ``learn_bpe.py`` applies): after a merge, only words CONTAINING the
-    merged pair re-segment, and the global pair statistics update by the
+    merged pair re-segment, and the global statistics update by the
     delta those words contribute — per-round cost is proportional to the
     affected words, not the whole vocabulary (a naive trainer re-folds
     every word every round: 32k merges × |vocab| work, mostly no-ops).
 
-    Shape per round, in Spark terms:
+    ``syms`` is the iteration-0 ``(_s array<string>, freq)`` frame over
+    the distinct-word vocabulary. ``key(pair, pair_n, sym_n)`` is the
+    argmax key (minimized; it must break ties on the pair itself) and
+    ``spell(left, right)`` the merged token. ``guard``, if given, wraps
+    the iteration-0 symbol-count column (WordPiece's BIGINT-headroom
+    tripwire). Returns ``[(left, right, merged, pair_n, left_n,
+    right_n), …]`` in learned order, counts taken before the merge.
 
-    1. argmax over the driver-held pair-stats dict — count desc, then
-       (left, right) lexicographic, so ties are deterministic. No Spark
-       job at all (the naive trainer paid a full explode+aggregate here).
-    2. ONE job: filter the vocab frame to words whose symbol array
-       contains the pair adjacently (cheap JVM predicate scan), and for
-       just those words evaluate the greedy merge fold; the (old symbols,
-       new symbols, freq) result is local-checkpointed — cost ∝ affected.
-       The fold runs wide (in the shuffle-map stage), but the checkpoint
-       lands in a HANDFUL of partitions: without that repartition each
-       round's checkpoint would inherit the whole chain's partition
-       count and the union below would DOUBLE partitions every round
-       (32 → 512 in 9 rounds, measured) — task-launch overhead, not
-       data, would dominate.
-    3. ONE job over that small checkpointed frame: explode old pairs with
-       weight −freq and new pairs with +freq, aggregate, and collect the
-       deltas (rows ∝ distinct pairs in affected words) to update the
-       dict. The merged pair's own count provably reaches 0 (every
-       occurrence lives in an affected word), entries ≤ 0 are pruned.
+    Spark shape — measured 3 jobs per round (sf0.001 ``documents``,
+    ``local[4]``: 20 jobs for 5 merges, 50 for 15, both trainers):
+
+    0. once: the vocab frame is local-checkpointed, then ONE explode of
+       each word's symbols and adjacent pairs, ONE aggregate and ONE
+       collect give the pair and symbol counts.
+    1. per round, argmax over the driver-held pair dict — no Spark job.
+    2. filter the vocab frame to words whose symbol array contains the
+       pair adjacently (cheap JVM predicate scan) and evaluate the greedy
+       merge fold for just those words; the (old symbols, new symbols,
+       freq) result is repartitioned to a HANDFUL of partitions and
+       LAZILY local-checkpointed. Without that repartition each round's
+       checkpoint would inherit the whole chain's partition count and the
+       union below would DOUBLE partitions every round (32 → 512 in 9
+       rounds, measured).
+    3. explode old pairs with weight −freq and new pairs with +freq,
+       aggregate, and collect the deltas (rows ∝ distinct pairs in
+       affected words); the collect also materializes step 2's
+       checkpoint. The merged pair's own count provably reaches 0 (every
+       occurrence lives in an affected word); entries ≤ 0 are pruned.
+       The symbol counts follow from the pair deltas without a second
+       stream: every affected word has ≥ 2 symbols, so each merged
+       occurrence removes exactly one adjacent pair and the weighted
+       number of merges is ``k = −Σ deltas``; ``left`` and ``right``
+       each lose ``k`` (``2k`` when they are the same symbol) and the
+       merged token gains ``k``.
     4. the vocab frame becomes ``unaffected ∪ re-segmented``, lazily;
-       every ``checkpoint_every`` rounds a full ``repartition +
+       every ``_CHECKPOINT_EVERY`` rounds a full ``repartition +
        localCheckpoint`` collapses the filter/union chain, so both scan
        depth and partition count stay bounded (amortized
-       O(|vocab| / checkpoint_every) per round — the vocab frame is
+       O(|vocab| / _CHECKPOINT_EVERY) per round — the vocab frame is
        microscopic next to the corpus, so this shuffle is pennies).
 
-    Driver-held state is the pair-statistics dict — the bounded,
-    documented A7 exception: at iteration 0 its keys are the corpus's
-    distinct CHARACTER bigrams (≤ |alphabet|², thousands for real text,
-    nowhere near corpus-sized), and later rounds only add the delta
-    pairs of affected words. This is exactly the stats structure every
-    reference BPE trainer keeps in memory; the corpus itself never
-    leaves the cluster — it collapsed to the |vocab|-sized frame once,
-    and each round moves only the per-round deltas.
+    Driver-held state is the pair and symbol count dicts — the bounded,
+    documented A7 exception: at iteration 0 their keys are the corpus's
+    distinct characters and CHARACTER bigrams (≤ |alphabet|² + |alphabet|,
+    thousands for real text, nowhere near corpus-sized), and later rounds
+    only add the delta pairs of affected words. This is exactly the stats
+    structure every reference trainer keeps in memory; the corpus itself
+    never leaves the cluster — it collapsed to the |vocab|-sized frame
+    once, and each round moves only the per-round deltas.
 
     ``round_stats``: pass a list to receive one dict per round —
     {round, pair, count, n_affected, wall_sec} — the instrumentation
@@ -172,34 +199,53 @@ def learn_bpe(
     in production).
     """
     import time as _time
-    spark = docs.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    aff_width = max(2, width // 8)
-    freqs = word_frequencies(docs, text_col)
-    syms = freqs.select(
-        F.split("word", "").alias("_s"), "freq"
-    ).localCheckpoint()
 
-    # Iteration-0 statistics: one full explode+aggregate, collected once.
-    stats: dict[tuple[str, str], int] = {}
-    for row in (
-        syms.select(F.explode(_adjacent("_s")).alias("p"), "freq")
+    width = syms.sparkSession.sparkContext.defaultParallelism
+    aff_width = max(2, width // 8)
+    syms = syms.localCheckpoint()
+
+    # Iteration-0 statistics: symbols explode as (sym, NULL) structs next
+    # to the (l, r) pairs, so one aggregate and one collect carry both.
+    units = F.concat(
+        F.transform(
+            "_s",
+            lambda t: F.struct(
+                t.alias("l"), F.lit(None).cast("string").alias("r")
+            ),
+        ),
+        _adjacent("_s"),
+    )
+    counted = (
+        syms.select(F.explode(units).alias("p"), "freq")
         .groupBy("p")
         .agg(F.sum("freq").alias("n"))
-        .collect()
-    ):
-        stats[(row["p"]["l"], row["p"]["r"])] = int(row["n"])
+    )
+    if guard is not None:
+        counted = counted.select(
+            "p",
+            F.when(F.col("p")["r"].isNull(), guard(F.col("n")))
+            .otherwise(F.col("n"))
+            .alias("n"),
+        )
+    stats: dict[tuple[str, str], int] = {}
+    sym_n: dict[str, int] = {}
+    for row in counted.collect():
+        l, r = row["p"]["l"], row["p"]["r"]
+        if r is None:
+            sym_n[l] = int(row["n"])
+        else:
+            stats[(l, r)] = int(row["n"])
 
-    merges: list[tuple[str, str, int]] = []
-    since_checkpoint = 0
+    merges: list[tuple[str, str, str, int, int, int]] = []
     for round_i in range(n_merges):
         if not stats:
             break
         t0 = _time.perf_counter()
         (left, right), n = min(
-            stats.items(), key=lambda kv: (-kv[1], kv[0])
+            stats.items(), key=lambda kv: key(kv[0], kv[1], sym_n)
         )
-        merges.append((left, right, n))
+        tok = spell(left, right)
+        merges.append((left, right, tok, n, sym_n[left], sym_n[right]))
 
         contains = F.exists(
             _adjacent("_s"),
@@ -209,13 +255,13 @@ def learn_bpe(
             syms.where(contains)
             .select(
                 F.col("_s").alias("_old"),
-                _greedy_merge("_s", left, right).alias("_s"),
+                _greedy_merge("_s", left, right, tok).alias("_s"),
                 "freq",
             )
             .repartition(aff_width)
             # LAZY: the deltas collect below is the round's first
             # action and materializes the checkpoint as a side effect —
-            # one job per round instead of eager-materialize + collect
+            # one action per round instead of eager-materialize + collect
             # (the connected_components discipline); the next round's
             # vocab union reads the cached blocks either way.
             .localCheckpoint(eager=False)
@@ -235,19 +281,17 @@ def learn_bpe(
             .agg(F.sum("d").alias("d"))
             .collect()
         )
+        k = 0
         for row in deltas:
-            key = (row["p"]["l"], row["p"]["r"])
-            nv = stats.get(key, 0) + int(row["d"])
-            if nv > 0:
-                stats[key] = nv
-            else:
-                stats.pop(key, None)
+            d = int(row["d"])
+            k -= d
+            _bump(stats, (row["p"]["l"], row["p"]["r"]), d)
+        for sym, d in ((left, -k), (right, -k), (tok, k)):
+            _bump(sym_n, sym, d)
 
         syms = syms.where(~contains).unionByName(aff.select("_s", "freq"))
-        since_checkpoint += 1
-        if since_checkpoint >= checkpoint_every:
+        if (round_i + 1) % _CHECKPOINT_EVERY == 0:
             syms = syms.repartition(width).localCheckpoint()
-            since_checkpoint = 0
         if round_stats is not None:
             # Freeze the wall BEFORE the instrumentation count job so the
             # probe's falling-cost signal is not diluted by a constant
@@ -263,6 +307,36 @@ def learn_bpe(
                 }
             )
     return merges
+
+
+def learn_bpe(
+    docs: DataFrame,
+    n_merges: int,
+    text_col: str = "text",
+    round_stats: list | None = None,
+) -> list[tuple[str, str, int]]:
+    """Learn ``n_merges`` BPE merges over the corpus (Sennrich et al.
+    2016): the full iterative trainer on top of the one-step statistics
+    above. Returns the merge list ``[(left, right, weighted_count), …]``
+    in learned order — the artifact a tokenizer ships.
+
+    The pair-delta loop is ``_learn_merges`` (per-round plan shape and
+    measured job counts there) with the frequency argmax — count desc,
+    then (left, right) lexicographic, so ties are deterministic — and
+    the plain ``left + right`` merge spelling over the word's characters.
+    ``round_stats`` is passed through (see ``_learn_merges``).
+    """
+    syms = word_frequencies(docs, text_col).select(
+        F.split("word", "").alias("_s"), "freq"
+    )
+    merges = _learn_merges(
+        syms,
+        n_merges,
+        key=lambda pair, n, sym_n: (-n, pair),
+        spell=lambda left, right: left + right,
+        round_stats=round_stats,
+    )
+    return [(left, right, n) for left, right, _, n, _, _ in merges]
 
 
 def segment_vocab(
@@ -326,26 +400,23 @@ def segment_vocab(
     )
 
 
-def encode_corpus(
-    docs: DataFrame,
-    merges: list[tuple],
-    text_col: str = "text",
-    id_col: str = "doc_id",
+def _encode_words(
+    docs: DataFrame, segment, text_col: str, id_col: str
 ) -> DataFrame:
-    """Tokenize a corpus with a learned merge list: ``(id, tokens
+    """Tokenize a corpus by segmenting its DISTINCT words: ``(id, tokens
     array<string>, n_tokens)`` per document, tokens in original word
-    order with each word segmented by ``segment_vocab``.
+    order. ``segment`` maps a ``(word)`` frame to ``(word, <pieces>
+    array<string>)`` — ``segment_vocab`` for BPE,
+    ``wordpiece.wordpiece_encode_vocab`` for WordPiece.
 
-    Plan shape at 100 TB: the Python BPE loop touches only the DISTINCT
+    Plan shape at 100 TB: the Python segmenter touches only the distinct
     word vocabulary (one groupBy-distinct over the exploded corpus —
     data volume |vocab| after that); the corpus side is pure JVM —
     posexplode, an equi-join on the word (broadcast by AQE when the
     segmented vocab is small, the common case), and one per-doc
     reassembly aggregate ordered by word position. Token order is exact:
-    (pos, symbols) structs sort by position before flattening.
+    (pos, pieces) structs sort by position before flattening.
     """
-    from albedo_spark.operators.textstats import tokens
-
     # Lazy checkpoint: the exploded token stream feeds BOTH the
     # distinct-vocab branch and the equi-join branch — without it one
     # action tokenizes and explodes the full corpus twice.
@@ -358,21 +429,37 @@ def encode_corpus(
         .where(F.col("word") != "")
         .localCheckpoint(eager=False)
     )
-    vocab = segment_vocab(exploded.select("word").distinct(), merges)
+    seg = segment(exploded.select("word").distinct())
+    pieces = seg.columns[1]
     return (
-        exploded.join(vocab, "word")
+        exploded.join(seg, "word")
         .groupBy(id_col)
         .agg(
             F.flatten(
                 F.transform(
                     F.array_sort(
                         F.collect_list(
-                            F.struct(F.col("_pos"), F.col("symbols"))
+                            F.struct(F.col("_pos"), F.col(pieces))
                         )
                     ),
-                    lambda s: s["symbols"],
+                    lambda s: s[pieces],
                 )
             ).alias("tokens")
         )
         .withColumn("n_tokens", F.size("tokens"))
+    )
+
+
+def encode_corpus(
+    docs: DataFrame,
+    merges: list[tuple],
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Tokenize a corpus with a learned merge list: ``(id, tokens
+    array<string>, n_tokens)`` per document, tokens in original word
+    order with each word segmented by ``segment_vocab`` (plan shape:
+    ``_encode_words``)."""
+    return _encode_words(
+        docs, lambda words: segment_vocab(words, merges), text_col, id_col
     )

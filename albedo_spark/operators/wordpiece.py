@@ -25,11 +25,10 @@ movement does not):
 2. one statistics step = two explodes over the vocab frame (adjacent
    pairs for the numerator, symbols for the denominators) + two
    aggregates — all JVM higher-order functions, no Python;
-3. the iterative trainer is BPE's pair-delta loop with ONE extra delta
-   stream: affected words contribute −freq on their old symbols and
-   +freq on their new symbols, so the driver-held symbol counts stay
-   exact without ever rescanning the vocabulary. Per-round cost remains
-   ∝ affected words.
+3. the iterative trainer IS BPE's pair-delta loop (``bpe._learn_merges``)
+   with the likelihood argmax and the ``##``-aware spelling; the symbol
+   counts the score needs follow from the same pair deltas, so
+   per-round cost and jobs are BPE's — ∝ affected words.
 
 The score is kept engine-portable as a scaled BIGINT:
 ``score_ppb = (pair_n * 10^9) div (left_n * right_n)`` — exact integer
@@ -55,7 +54,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from albedo_spark.operators.bpe import _adjacent, word_frequencies
+from albedo_spark.operators.bpe import (
+    _adjacent,
+    _encode_words,
+    _greedy_merge,
+    _learn_merges,
+    word_frequencies,
+)
 
 #: Scaled-integer score precision (parts-per-billion).
 _SCALE = 1_000_000_000
@@ -89,36 +94,26 @@ def _word_symbol_frame(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _guarded_symbol_counts(syms: DataFrame) -> DataFrame:
-    """``(sym, n)`` weighted symbol counts with the lazy BIGINT-headroom
-    tripwire: past ``_N_CEIL`` the score arithmetic wraps identically in
-    Spark and the SQL oracle, so the hash gate would stay green on
-    garbage — raise loudly instead (no extra driver action)."""
-    counts = (
-        syms.select(F.explode("_s").alias("sym"), "freq")
-        .groupBy("sym")
-        .agg(F.sum("freq").alias("n"))
-    )
-    return counts.select(
-        "sym",
-        F.when(
-            F.col("n") > F.lit(_N_CEIL),
-            F.raise_error(
-                F.concat(
-                    F.lit("wordpiece: symbol count "),
-                    F.col("n").cast("string"),
-                    F.lit(
-                        f" exceeds the score BIGINT-headroom ceiling"
-                        f" {_N_CEIL} (pair_n*10^9 / left_n*right_n"
-                        " would overflow int64 undetectably in BOTH"
-                        " engines); shard the corpus"
-                    ),
-                )
-            ).cast("long"),
-        )
-        .otherwise(F.col("n"))
-        .alias("n"),
-    )
+def _guard_n(n) -> "F.Column":
+    """A weighted symbol count behind the lazy BIGINT-headroom tripwire:
+    past ``_N_CEIL`` the score arithmetic wraps identically in Spark and
+    the SQL oracle, so the hash gate would stay green on garbage — raise
+    loudly instead (no extra driver action)."""
+    return F.when(
+        n > F.lit(_N_CEIL),
+        F.raise_error(
+            F.concat(
+                F.lit("wordpiece: symbol count "),
+                n.cast("string"),
+                F.lit(
+                    f" exceeds the score BIGINT-headroom ceiling"
+                    f" {_N_CEIL} (pair_n*10^9 / left_n*right_n"
+                    " would overflow int64 undetectably in BOTH"
+                    " engines); shard the corpus"
+                ),
+            )
+        ).cast("long"),
+    ).otherwise(n)
 
 
 def wp_pair_scores(
@@ -138,18 +133,20 @@ def wp_pair_scores(
     first groupBy scales with the corpus.
     """
     syms = _word_symbol_frame(docs, text_col).localCheckpoint(eager=False)
-    return (
-        _scored_pairs(syms)
-        .orderBy(F.col("score_ppb").desc(), "left_sym", "right_sym")
-        .limit(k)
+    return _scored_pairs(syms, k)
+
+
+def _scored_pairs(syms: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best likelihood-scored adjacent pairs of a ``(_s, freq)``
+    symbol frame under the (score desc, left, right) total order — the
+    statistics core shared by ``wp_pair_scores`` (iteration 0) and
+    ``wp_one_merge_scores`` (argmax and post-merge re-count)."""
+    symc = (
+        syms.select(F.explode("_s").alias("sym"), "freq")
+        .groupBy("sym")
+        .agg(F.sum("freq").alias("n"))
+        .select("sym", _guard_n(F.col("n")).alias("n"))
     )
-
-
-def _scored_pairs(syms: DataFrame) -> DataFrame:
-    """Likelihood-scored adjacent pairs of a ``(_s, freq)`` symbol frame
-    — the statistics core shared by ``wp_pair_scores`` (iteration 0)
-    and ``wp_one_merge_scores`` (post-merge re-count)."""
-    symc = _guarded_symbol_counts(syms)
     pairs = (
         syms.select(F.explode(_adjacent("_s")).alias("p"), "freq")
         .groupBy(F.col("p")["l"].alias("left_sym"), F.col("p")["r"].alias("right_sym"))
@@ -170,6 +167,8 @@ def _scored_pairs(syms: DataFrame) -> DataFrame:
         .select(
             "left_sym", "right_sym", "pair_n", "left_n", "right_n", "score_ppb"
         )
+        .orderBy(F.col("score_ppb").desc(), "left_sym", "right_sym")
+        .limit(k)
     )
 
 
@@ -202,23 +201,15 @@ def wp_one_merge_scores(
     syms0 = wf.select(wp_symbols("word").alias("_s"), "freq").localCheckpoint(
         eager=False
     )
-    best = (
-        _scored_pairs(syms0)
-        .orderBy(F.col("score_ppb").desc(), "left_sym", "right_sym")
-        .limit(1)
-        .collect()
-    )
+    best = _scored_pairs(syms0, 1).collect()
     if not best:
-        return _scored_pairs(syms0).limit(0)
+        return _scored_pairs(syms0, 0)
     left, right = best[0]["left_sym"], best[0]["right_sym"]
     syms1 = syms0.select(
-        _greedy_merge_wp("_s", left, right).alias("_s"), "freq"
+        _greedy_merge("_s", left, right, _merge_token(left, right)).alias("_s"),
+        "freq",
     ).localCheckpoint(eager=False)
-    return (
-        _scored_pairs(syms1)
-        .orderBy(F.col("score_ppb").desc(), "left_sym", "right_sym")
-        .limit(k)
-    )
+    return _scored_pairs(syms1, k)
 
 
 def _merge_token(left: str, right: str) -> str:
@@ -227,158 +218,40 @@ def _merge_token(left: str, right: str) -> str:
     return left + (right[2:] if right.startswith("##") else right)
 
 
-def _greedy_merge_wp(s, left: str, right: str) -> "F.Column":
-    """Greedy left-to-right non-overlapping replacement of the adjacent
-    pair with its WordPiece spelling — BPE's fold with the ``##``-aware
-    merged token."""
-    tok = _merge_token(left, right)
-    return F.aggregate(
-        s if not isinstance(s, str) else F.col(s),
-        F.array().cast("array<string>"),
-        lambda acc, t: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (t == F.lit(right)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(tok))),
-        ).otherwise(F.concat(acc, F.array(t))),
-    )
-
-
 def learn_wordpiece(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    checkpoint_every: int = 24,
     round_stats: list | None = None,
 ) -> list[tuple[str, str, str, int, int, int]]:
-    """Learn ``n_merges`` WordPiece merges: BPE's pair-delta trainer
-    (see ``bpe.learn_bpe`` for the per-round plan shape) with the
-    likelihood argmax and a second delta stream keeping the driver-held
-    SYMBOL counts exact.
+    """Learn ``n_merges`` WordPiece merges: BPE's pair-delta loop
+    (``bpe._learn_merges`` — per-round plan shape, measured job counts
+    and the driver-held A7 state are documented there) over the
+    ``##``-marked symbols, with the likelihood argmax and the ``##``-aware
+    merge spelling.
 
-    Per round: argmax over the pair dict by exact ``Fraction(pair_n,
-    left_n*right_n)`` (ties broken (left, right) lexicographic — exact
-    rational comparison, no float drift in the training order); ONE job
-    re-segments just the affected words; ONE job collects the pair AND
-    symbol deltas from that small checkpointed frame (old arrays −freq,
-    new arrays +freq — the merged pair's count provably reaches 0 and
-    the left/right symbol counts shed exactly the merged occurrences).
+    The argmax is by exact ``Fraction(pair_n, left_n*right_n)``, ties
+    broken (left, right) lexicographic — exact rational comparison, no
+    float drift in the training order. The symbol counts come out of the
+    loop's iteration-0 collect behind the ``_N_CEIL`` tripwire and are
+    then delta-maintained from the pair deltas alone.
 
     Returns ``[(left, right, merged, pair_n, left_n, right_n), …]`` in
-    learned order — the vocabulary a WordPiece tokenizer ships is the
-    iteration-0 alphabet plus the ``merged`` spellings.
-
-    Driver-held state is the pair/symbol statistics dicts — the bounded
-    A7 exception exactly as in ``learn_bpe`` (≤ |alphabet|²+|alphabet|
-    entries at round 0 plus per-round deltas); the corpus collapsed to
-    the |vocab| frame once and never moves again.
+    learned order (pre-merge counts) — the vocabulary a WordPiece
+    tokenizer ships is the iteration-0 alphabet plus the ``merged``
+    spellings. ``round_stats`` is passed through to the loop.
     """
-    import time as _time
-
-    spark = docs.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    aff_width = max(2, width // 8)
-    syms = _word_symbol_frame(docs, text_col).localCheckpoint()
-
-    pair_stats: dict[tuple[str, str], int] = {}
-    for row in (
-        syms.select(F.explode(_adjacent("_s")).alias("p"), "freq")
-        .groupBy("p")
-        .agg(F.sum("freq").alias("n"))
-        .collect()
-    ):
-        pair_stats[(row["p"]["l"], row["p"]["r"])] = int(row["n"])
-    sym_stats: dict[str, int] = {
-        row["sym"]: int(row["n"])
-        for row in _guarded_symbol_counts(syms).collect()
-    }
-
-    merges: list[tuple[str, str, str, int, int, int]] = []
-    since_checkpoint = 0
-    for round_i in range(n_merges):
-        if not pair_stats:
-            break
-        t0 = _time.perf_counter()
-        (left, right), pn = min(
-            pair_stats.items(),
-            key=lambda kv: (
-                -Fraction(kv[1], sym_stats[kv[0][0]] * sym_stats[kv[0][1]]),
-                kv[0],
-            ),
-        )
-        merges.append(
-            (left, right, _merge_token(left, right), pn,
-             sym_stats[left], sym_stats[right])
-        )
-
-        contains = F.exists(
-            _adjacent("_s"),
-            lambda p: (p["l"] == F.lit(left)) & (p["r"] == F.lit(right)),
-        )
-        aff = (
-            syms.where(contains)
-            .select(
-                F.col("_s").alias("_old"),
-                _greedy_merge_wp("_s", left, right).alias("_s"),
-                "freq",
-            )
-            .repartition(aff_width)
-            .localCheckpoint()
-        )
-        # One collect carries BOTH delta streams: kind 'p' rows update the
-        # pair dict, kind 's' rows the symbol dict.
-        deltas = (
-            aff.select(F.explode(_adjacent("_old")).alias("p"), (-F.col("freq")).alias("d"))
-            .unionByName(
-                aff.select(F.explode(_adjacent("_s")).alias("p"), F.col("freq").alias("d"))
-            )
-            .groupBy("p")
-            .agg(F.sum("d").alias("d"))
-            .select(F.lit("p").alias("kind"), F.col("p")["l"].alias("a"),
-                    F.col("p")["r"].alias("b"), "d")
-            .unionByName(
-                aff.select(F.explode("_old").alias("a"), (-F.col("freq")).alias("d"))
-                .unionByName(
-                    aff.select(F.explode("_s").alias("a"), F.col("freq").alias("d"))
-                )
-                .groupBy("a")
-                .agg(F.sum("d").alias("d"))
-                .select(F.lit("s").alias("kind"), "a", F.lit(None).cast("string").alias("b"), "d")
-            )
-            .collect()
-        )
-        for row in deltas:
-            if row["kind"] == "p":
-                key = (row["a"], row["b"])
-                nv = pair_stats.get(key, 0) + int(row["d"])
-                if nv > 0:
-                    pair_stats[key] = nv
-                else:
-                    pair_stats.pop(key, None)
-            else:
-                nv = sym_stats.get(row["a"], 0) + int(row["d"])
-                if nv > 0:
-                    sym_stats[row["a"]] = nv
-                else:
-                    sym_stats.pop(row["a"], None)
-
-        syms = syms.where(~contains).unionByName(aff.select("_s", "freq"))
-        since_checkpoint += 1
-        if since_checkpoint >= checkpoint_every:
-            syms = syms.repartition(width).localCheckpoint()
-            since_checkpoint = 0
-        if round_stats is not None:
-            wall = round(_time.perf_counter() - t0, 4)
-            round_stats.append(
-                {
-                    "round": round_i,
-                    "pair": (left, right),
-                    "pair_n": pn,
-                    "n_affected": aff.count(),
-                    "wall_sec": wall,
-                }
-            )
-    return merges
+    return _learn_merges(
+        _word_symbol_frame(docs, text_col),
+        n_merges,
+        key=lambda pair, n, sym_n: (
+            -Fraction(n, sym_n[pair[0]] * sym_n[pair[1]]),
+            pair,
+        ),
+        spell=_merge_token,
+        round_stats=round_stats,
+        guard=_guard_n,
+    )
 
 
 def wp_vocab(
@@ -459,37 +332,11 @@ def encode_corpus_wp(
 ) -> DataFrame:
     """Tokenize a corpus with a WordPiece vocabulary: ``(id, tokens
     array<string>, n_tokens)`` per document, words in original order,
-    each segmented by greedy longest-match (``wordpiece_encode_vocab``).
-    Plan shape is ``bpe.encode_corpus``'s: the Python matcher touches
-    only the DISTINCT word vocabulary; the corpus side is posexplode +
-    equi-join (AQE-broadcast when the segmented vocab is small) + one
-    per-doc ordered reassembly aggregate."""
-    from albedo_spark.operators.textstats import tokens
-
-    exploded = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.posexplode(tokens(F.col(text_col))).alias("_pos", "word"),
-        )
-        .where(F.col("word") != "")
-        .localCheckpoint(eager=False)
-    )
-    seg = wordpiece_encode_vocab(
-        exploded.select("word").distinct(), vocab, unk=unk
-    )
-    return (
-        exploded.join(seg, "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("_pos"), F.col("pieces")))
-                    ),
-                    lambda s: s["pieces"],
-                )
-            ).alias("tokens")
-        )
-        .withColumn("n_tokens", F.size("tokens"))
+    each segmented by greedy longest-match (``wordpiece_encode_vocab``)
+    — plan shape: ``bpe._encode_words``."""
+    return _encode_words(
+        docs,
+        lambda words: wordpiece_encode_vocab(words, vocab, unk=unk),
+        text_col,
+        id_col,
     )

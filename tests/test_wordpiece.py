@@ -1,8 +1,8 @@
 """WordPiece trainer/statistics/inference (operators/wordpiece.py) — the
 hand-checkable HuggingFace-course corpus (hug×10 pug×5 pun×12 bun×4
 hugs×5), the likelihood argmax with exact-rational tie-breaking, the
-``##``-aware merge spelling, greedy longest-match inference, and the
-BIGINT-headroom tripwire."""
+``##``-aware merge spelling, greedy longest-match inference, the
+BIGINT-headroom tripwire, and the jobs per trainer round."""
 
 from __future__ import annotations
 
@@ -140,13 +140,19 @@ def test_wp_one_merge_handles_bare_left_and_overlaps(spark):
 def test_learn_wordpiece_matches_naive_reference(spark):
     """The delta-maintained trainer must equal a from-scratch naive
     trainer (recount everything each round) on a messier corpus — the
-    same equivalence discipline as the BPE pair-delta trainer."""
+    same equivalence discipline as the BPE pair-delta trainer. Run to
+    exhaustion. The bare 'a' words weigh the word-initial 'a' down, so
+    'aaa'/'aaaa' merge (##a, ##a) first: its pair count 10 is not the
+    6 merges greedy non-overlap makes, and ##a loses 2 per merge — the
+    symbol counts the trainer derives from its pair deltas show in the
+    next record's right_n (16 → 4)."""
     from fractions import Fraction
 
     from albedo_spark.operators.wordpiece import learn_wordpiece
 
     words = (
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3 + ["aaa"] * 2
+        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
+        + ["aaa"] * 2 + ["aaaa"] * 4 + ["a"] * 20
     )
     docs = spark.createDataFrame(
         [(i, w) for i, w in enumerate(words)], "doc_id long, text string"
@@ -189,8 +195,38 @@ def test_learn_wordpiece_matches_naive_reference(spark):
                 segs[w] = new
         return out
 
-    freqs = {"low": 5, "lower": 2, "newest": 6, "widest": 3, "aaa": 2}
-    assert learn_wordpiece(docs, n_merges=6) == naive(freqs, 6)
+    freqs = {
+        "low": 5, "lower": 2, "newest": 6, "widest": 3, "aaa": 2, "aaaa": 4,
+        "a": 20,
+    }
+    want = naive(freqs, 100)
+    assert len(want) < 100  # every pair merged away
+    i = want.index(("##a", "##a", "##aa", 10, 16, 16))
+    assert want[i + 1] == ("##aa", "##a", "##aaa", 4, 6, 4)
+    assert learn_wordpiece(docs, n_merges=100) == want
+
+
+def test_learners_share_jobs_per_round(spark):
+    """Both trainers run one pair-delta loop: WordPiece launches no more
+    jobs than BPE for the same merges, and each extra merge round costs
+    at most 3 jobs (the lazy affected-word checkpoint plus one delta
+    collect); WordPiece's symbol counts ride on the pair deltas."""
+    from albedo_spark.operators.bpe import learn_bpe
+    from albedo_spark.operators.wordpiece import learn_wordpiece
+    from tests.job_count import jobs_in_group
+
+    docs = _corpus(spark)
+    jobs = {}
+    for name, learn in (("bpe", learn_bpe), ("wp", learn_wordpiece)):
+        for n in (2, 5):
+            merges, jobs[name, n] = jobs_in_group(
+                spark, f"learner-jobs-{name}-{n}", lambda: learn(docs, n)
+            )
+            assert len(merges) == n
+    for n in (2, 5):
+        assert jobs["wp", n] <= jobs["bpe", n], jobs
+    for name in ("bpe", "wp"):
+        assert jobs[name, 5] - jobs[name, 2] <= 3 * 3, jobs
 
 
 def test_wordpiece_encode_longest_match(spark):
@@ -230,3 +266,5 @@ def test_wp_headroom_tripwire(spark, monkeypatch):
     monkeypatch.setattr(wordpiece, "_N_CEIL", 10)
     with pytest.raises(Exception, match="headroom"):
         wordpiece.wp_pair_scores(_corpus(spark), k=5).collect()
+    with pytest.raises(Exception, match="headroom"):
+        wordpiece.learn_wordpiece(_corpus(spark), n_merges=1)

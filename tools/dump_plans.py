@@ -23,14 +23,38 @@ plan-growth/driver-barrier devices, not semantics: the dump never
 executes the frame, but operators whose checkpoints prevent
 optimizer-side plan explosion (the unigram DP) can blow up the
 optimizer at EXPLAIN time under this flag.
+
+Dumps are normalized so two checkouts' dumps diff cleanly: expression
+ids (``#123``), exchange plan ids (``plan_id=``) and RDD numbers
+(``RDD[45]``) are renumbered in order of first appearance, the warehouse
+directory prints as ``<warehouse>``, and RDD call sites (``at
+NativeMethodAccessorImpl.java:0`` / ``at <unknown>:0``, which depend on
+how the frame was reached) print as ``at <callsite>``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def normalize(plan: str, warehouse: str) -> str:
+    """``plan`` with run-specific ids, paths and call sites made stable
+    (see the module docstring)."""
+    for prefix in ("file:", ""):
+        plan = plan.replace(prefix + warehouse, "<warehouse>")
+    plan = re.sub(r"(RDD\[\d+\] at \w+) at \S+?:\d+", r"\1 at <callsite>", plan)
+    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"):
+        ids: dict[str, int] = {}
+        plan = re.sub(
+            pattern,
+            lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1)),
+            plan,
+        )
+    return plan
 
 
 def main() -> None:
@@ -65,10 +89,14 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for name in names:
         df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = normalize(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            ),
+            warehouse,
         )
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:

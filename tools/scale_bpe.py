@@ -1,16 +1,19 @@
-"""BPE trainer scaling probe (round 7's pair-delta rewrite).
+"""Merge-learner scaling probe (round 7's pair-delta rewrite; both
+tokenizer trainers run the same loop, ``bpe._learn_merges``).
 
-Runs ``learn_bpe`` for N merges over the sf0.1 documents corpus with
-per-round instrumentation and reports whether per-round cost TRACKS THE
-AFFECTED-WORD COUNT (the pair-delta claim) instead of staying flat at
-|vocab| (the naive trainer's shape: every round re-folds every word).
+Runs ``learn_bpe`` or ``learn_wordpiece`` for N merges over the sf0.1
+documents corpus with per-round instrumentation and reports whether
+per-round cost TRACKS THE AFFECTED-WORD COUNT (the pair-delta claim)
+instead of staying flat at |vocab| (the naive trainer's shape: every
+round re-folds every word).
 
 The synthetic corpus has a degenerate word vocabulary (tens of distinct
 words), so the corpus is replicated with scale_bench's decorrelating
 perturbation (every replica suffixes its words) — vocab grows ∝ copies
 and the affected-count curve becomes non-trivial.
 
-    python tools/scale_bpe.py [n_merges] [n_copies]   # default: 200 30
+    python tools/scale_bpe.py bpe [n_merges] [n_copies]        # default: 200 30
+    python tools/scale_bpe.py wordpiece [n_merges] [n_copies]  # default: 120 30
 
 Output: one JSON line per quartile of the merge sequence with the mean
 per-round wall and mean affected-word count, plus a summary line:
@@ -43,13 +46,20 @@ from scale_bench import replicate  # noqa: E402
 def main() -> None:
     from albedo_spark import io
     from albedo_spark.operators.bpe import learn_bpe, word_frequencies
+    from albedo_spark.operators.wordpiece import learn_wordpiece
     from albedo_spark.session import get_spark
 
+    trainers = {"bpe": (learn_bpe, 200), "wordpiece": (learn_wordpiece, 120)}
+    if len(sys.argv) < 2 or sys.argv[1] not in trainers:
+        raise SystemExit(
+            "usage: scale_bpe.py {bpe|wordpiece} [n_merges] [n_copies]"
+        )
+    learn, default_merges = trainers[sys.argv[1]]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_merges = int(sys.argv[1]) if len(sys.argv) > 1 else 200
-    n_copies = int(sys.argv[2]) if len(sys.argv) > 2 else 30
+    n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else default_merges
+    n_copies = int(sys.argv[3]) if len(sys.argv) > 3 else 30
 
-    spark = get_spark("scale-bpe")
+    spark = get_spark(f"scale-{sys.argv[1]}")
     spark.sparkContext.setLogLevel("ERROR")
     docs = (
         io.widen(
@@ -67,7 +77,7 @@ def main() -> None:
 
     rounds: list[dict] = []
     t0 = time.perf_counter()
-    merges = learn_bpe(docs, n_merges=n_merges, round_stats=rounds)
+    merges = learn(docs, n_merges=n_merges, round_stats=rounds)
     wall = round(time.perf_counter() - t0, 2)
 
     q = max(1, len(rounds) // 4)
